@@ -20,7 +20,8 @@ object GraftSession {
     * the data-volume knob the SCALE.md stress table measures — at a ×100
     * corpus, per-reducer sort size at 32 partitions leaves cores idle and
     * forces spill, and raising the INITIAL count is safe because AQE
-    * coalesces the small ones back down.
+    * coalesces the small ones back down — in cached and checkpointed
+    * plans too, since `canChangeCachedPlanOutputPartitioning` is on.
     */
   def shufflePartitions: String =
     sys.env.getOrElse(
@@ -41,7 +42,8 @@ object GraftSession {
       // measured INSUFFICIENT (159 s at ×100: exchanges AQE declines to
       // coalesce fall back to the spark.sql.shuffle.partitions floor), so
       // the floor itself scales and AQE coalesces the small-data case back
-      // down. Overridable via SPARK_GRAFT_SHUFFLE_PARTITIONS.
+      // down, cached frames included (see the cached-plan setting below).
+      // Overridable via SPARK_GRAFT_SHUFFLE_PARTITIONS.
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       // Deliberately NO initialPartitionNum above the floor: r9 measured
       // planning AQE-coalescible exchanges from 2048 on the sf0.1 suite
@@ -54,6 +56,14 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // Spark defaults this to false: AQE then leaves a persist()ed or
+      // localCheckpoint()ed plan at the full shuffle floor, so a 10-row
+      // aggregate keeps 256 partitions and every join against it runs a
+      // 256-task stage. On, a cached frame's partition count follows the
+      // size AQE observes (corpus_full at sf0.1, 4 cores: 5394 → 39
+      // tasks). The cost: a cached frame no longer reports its hash
+      // partitioning, so a join on its key re-shuffles it (SCALE.md r18).
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")

@@ -621,4 +621,30 @@ class PlanShapeSpec extends SparkSpec {
     for (q <- Seq("dup_evidence_incremental", "dup_evidence_staleness"))
       assert(!plan(q).contains("CartesianProduct"), s"$q plans a cartesian")
   }
+
+  test("AQE right-sizes cached and checkpointed frames: a persisted or " +
+       "locally checkpointed small aggregate does not keep the shuffle floor") {
+    // GraftSession's floor is max(8·cores, 256). Without
+    // canChangeCachedPlanOutputPartitioning AQE leaves a cached plan at
+    // that floor, and every later join against the frame inherits a
+    // 256-task stage for a few rows.
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "256")
+    val persisted = spark.range(1000).selectExpr("id % 10 AS k")
+      .groupBy("k").count().persist()
+    try {
+      persisted.count()
+      val checkpointed = spark.range(1000).selectExpr("id % 10 AS k")
+        .groupBy("k").count().localCheckpoint()
+      val cores = spark.sparkContext.defaultParallelism
+      for ((what, df) <- Seq("persist()" -> persisted, "localCheckpoint()" -> checkpointed)) {
+        val n = df.rdd.getNumPartitions
+        assert(n <= cores, s"$what of a 10-row aggregate kept $n partitions (cores $cores)")
+      }
+    } finally {
+      persisted.unpersist()
+      spark.conf.set(key, prior)
+    }
+  }
 }

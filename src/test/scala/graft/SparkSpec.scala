@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared-session base for all suites: one local[4] SparkSession per JVM
-  * (Test / fork := true), UTC, AQE on — same semantics knobs as
-  * GraftSession so tests exercise production configs.
+/** Shared-session base for all suites: one SparkSession per JVM
+  * (Test / fork := true), built by `GraftSession.builder` so the specs run
+  * the production settings. Only the size knobs differ: local[4], 4
+  * shuffle partitions, a temp warehouse and ERROR logging.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -15,14 +16,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .appName("graft-test")
+    val s = GraftSession.builder("graft-test")
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
