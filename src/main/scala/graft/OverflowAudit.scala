@@ -9,10 +9,19 @@ import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType,
 
 /** Static LONG-overflow audit over every registered query's OPTIMIZED
   * logical plan (r12 verdict task 6) — the automated version of the sf1
-  * smoke that caught `abc_xyz_matrix` and `concentration_8020`: both were
-  * hash-green at every tested SF and only overflowed at the next decade,
-  * because a LONG-typed `sum(corpus values) * 1000000` ppm idiom has
-  * ~9.2e18 of headroom that a 2.5e13-token corpus exhausts.
+  * execution hunt that caught `abc_xyz_matrix` and `concentration_8020`:
+  * both were hash-green at every tested SF and only overflowed at the
+  * next decade, because a LONG-typed `sum(corpus values) * 1000000` ppm
+  * idiom has ~9.2e18 of headroom that a 2.5e13-token corpus exhausts.
+  *
+  * Mode: nothing in graft sets `spark.sql.ansi.enabled`, so Spark 4's
+  * default (ANSI on) applies — an overflowing LONG multiply raises
+  * ARITHMETIC_OVERFLOW and a DECIMAL past its precision raises
+  * NUMERIC_VALUE_OUT_OF_RANGE; neither corrupts a result silently. The
+  * failure surfaces only when a job reaches the overflowing scale, which
+  * no fixture does. The audit's value is finding that site from the plan
+  * alone, before any job runs. (Under ANSI off a LONG would wrap and a
+  * DECIMAL would NULL silently, which is worse still.)
   *
   * Detector: a `Multiply` whose RESULT type is LongType, one operand a
   * ppm/bps-class scale literal (100 … 1e9), the other operand's attribute
@@ -32,10 +41,12 @@ import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType,
   */
 object OverflowAudit {
 
-  /** (pattern, bound-justification). Pattern is matched against the
-    * offending multiply's sql text.
+  /** (query-name regex, pattern, bound-justification). An entry covers an
+    * offending multiply only in a query whose name matches the regex and
+    * whose sql text contains the pattern, so a NEW query reusing a bounded
+    * idiom is an offender until its own bound is argued here.
     */
-  val KnownBounded: Seq[(String, String)] = {
+  val KnownBounded: Seq[(String, String, String)] = {
     // the ANN drift audits' recall-ppm numerators (r17): h_* is a sum of
     // 0/1 hit flags over the brute ground-truth rows, ≤ k·nQueries = 50
     // at the fixed audit knobs (SF-independent — the knobs, not the
@@ -44,22 +55,33 @@ object OverflowAudit {
     // per-factor result rows became lazy (no checkpoint leaf hides them).
     val driftRecallWhy = "drift-audit recall numerator: sum of hit flags over " +
       "brute top-k rows, <= k*nQueries = 50 at the fixed audit knobs; *1e6 <= 5e7"
-    Seq(
-      ("sum(CASE WHEN (ma = mb) THEN 1 ELSE 0 END) * 1000000" ->
+    Seq(("dup_evidence_incremental|dup_evidence_shrunk|minhash_estimate_audit",
+        "sum(CASE WHEN (ma = mb) THEN 1 ELSE 0 END) * 1000000",
         "MinHash signature agreement: sum over exactly 16 hash_idx rows per pair, bound 16e6 << 2^63")) ++
-      Seq("h_stale", "h_fresh", "h_tomb", "h_hard", "h_rep", "h_plain", "h_resc")
-        .map(h => s"($h * 1000000L)" -> driftRecallWhy)
+      Seq("graph_append_drift" -> Seq("h_stale", "h_fresh"),
+          "graph_delete_drift" -> Seq("h_tomb", "h_hard", "h_rep"),
+          "graph_topk_rescored_drift" -> Seq("h_plain", "h_resc"))
+        .flatMap { case (q, hs) => hs.map(h => (q, s"($h * 1000000L)", driftRecallWhy)) }
   }
+
+  /** The bound justification covering `sqlText` in query `queryName`, if
+    * an allowlist entry is keyed to that query and matches the text.
+    */
+  def knownBoundedWhy(queryName: String, sqlText: String): Option[String] =
+    KnownBounded.collectFirst {
+      case (q, pat, why) if queryName.matches(q) && sqlText.contains(pat) => why
+    }
 
   private val ScaleLits: Set[Long] = Set(100L, 10000L, 100000L, 1000000L, 1000000000L)
 
-  /** DECIMAL companion detector (r13 verdict task 5): Spark with ANSI off
-    * silently NULLs a decimal whose value exceeds its type — and any
-    * decimal op whose IDEAL precision exceeds 38 gets CAPPED at 38, so
-    * the type no longer covers the operands' worst case. The LONG
-    * detector can't see this class; now that the registry is
-    * DECIMAL(38,0)-widened everywhere, this is the remaining
-    * silent-corruption surface.
+  /** DECIMAL companion detector (r13 verdict task 5): any decimal op whose
+    * IDEAL precision exceeds 38 gets CAPPED at 38, so the type no longer
+    * covers the operands' worst case, and a value past it raises
+    * NUMERIC_VALUE_OUT_OF_RANGE under the default ANSI mode (it would
+    * NULL silently with ANSI off). The LONG detector can't see this
+    * class; now that the registry is DECIMAL(38,0)-widened everywhere,
+    * this is the remaining overflow surface, and the model finds it
+    * before a job at that scale fails.
     *
     * Detector: a worst-case INTEGRAL-DIGIT bound propagated through the
     * optimized plan (alias lineage fixpoint, like the LONG detector's
@@ -94,7 +116,7 @@ object OverflowAudit {
     */
   val KnownBoundedDecimal: Seq[(String, String)] = Seq(
     ("moments_profile|interarrival_profile" ->
-      "central-moment integer polynomials n^k*mk: ENFORCED (r15) — momentsProfile raise_errors inside the moment columns when max|x| > 3e4 or n*max|x| > 1.5e9 (14*(n*max|x|)^4 <= 7.1e37 < 10^38 covers every intermediate term), so ANSI-off decimal NULLing cannot silently corrupt a large group; corpus-scale groups must pre-aggregate"),
+      "central-moment integer polynomials n^k*mk: ENFORCED (r15) — momentsProfile raise_errors inside the moment columns when max|x| > 3e4 or n*max|x| > 1.5e9 (14*(n*max|x|)^4 <= 7.1e37 < 10^38 covers every intermediate term), so a large group fails with a named bound before any decimal overflow, in ANSI and non-ANSI mode alike; corpus-scale groups must pre-aggregate"),
     ("revenue_trend|rolling_regression_slope|rolling_corr|ljung_box|revenue_acf|safety_stock|price_index_monthly|stl_strength|seasonal_residual_outliers" ->
       "time-series family over the CALENDAR-DAY aggregate series: n <= 1e4 days, daily sums <= 1e13 cents -> d*d sums <= 1e30, n*sxy <= 1e34 << 1e38"),
     ("simpson_paradox_screen|discount_elasticity|cuped_adjustment|diff_in_diff|welch_t_test|anova_priority_spend|neyman_allocation|gini_spend|mahalanobis_outliers|eb_shrunk_returns" ->
@@ -264,8 +286,8 @@ object OverflowAudit {
             case m @ Multiply(l, r, _) if m.dataType == LongType &&
                 ((isScaleLit(l) && reachesAgg(r)) || (isScaleLit(r) && reachesAgg(l))) =>
               val txt = m.sql.take(160)
-              KnownBounded.find { case (pat, _) => txt.contains(pat) } match {
-                case Some((_, why)) =>
+              knownBoundedWhy(name, txt) match {
+                case Some(why) =>
                   allowlisted += 1
                   println(s"[bounded-ok] $name :: $txt :: $why")
                 case None =>

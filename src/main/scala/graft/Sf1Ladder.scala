@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * preserved (order/cust/part/supp keys shift together), documents get a
   * per-copy token suffix so exact duplicates across copies become
   * near-duplicates (the realistic crawl-growth shape, same methodology as
-  * JaccardScaleBench), embeddings get a per-copy micro-perturbation on
-  * dim 0. Each requested registered query then runs through the SAME
+  * the r6 df-growth ladder in SCALE.md), embeddings get a per-copy
+  * micro-perturbation on dim 0. Each requested registered query then runs through the SAME
   * noop-write harness at sf0.1 and at the expanded sf1, printing both
   * times and the decade exponent e = log10(t1/t01) — e ≈ 1 is linear
   * scaling, e > 1.2 flags a superlinear stage.

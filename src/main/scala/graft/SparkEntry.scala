@@ -1550,12 +1550,12 @@ object SparkEntry {
         SimilarityOps.widenInt8(s.read.parquet(dir)), 10, 5)
     }),
     "cosine_topk_lsh" -> ((s, d) => SimilarityOps.lshBucketedTopK(t(s, d, "embeddings"), 10, 5)),
-    // graph-based ANN (NSW-class): beam search over the LSH-built kNN
-    // graph under the SCALE-CONTRACT knobs (beam = 6·lg n, seeds = 2·lg n,
-    // graphK = 16 — r13) — per round ONE equi-join on the graph key;
-    // per-query work O(log n) once the graph exists
+    // graph-based ANN (NSW-class): beam search over the NN-descent-built
+    // kNN graph under the SCALE-CONTRACT knobs (beam = 6·lg n, seeds =
+    // 2·lg n, graphK = 16 — SCALE.md r13) — per round ONE equi-join on the
+    // graph key; per-query work O(log n) once the graph exists
     "cosine_topk_graph" -> ((s, d) =>
-      SimilarityOps.graphAnnTopKScaled(t(s, d, "embeddings"), 10, 5)),
+      SimilarityOps.graphAnnTopK(t(s, d, "embeddings"), 10, 5)),
     // recall@5 of the graph tier vs brute — the gate that prices the
     // scale-contract knobs; GraphAnnGateSpec pins the ≥0.90 floor at all
     // three SFs on the INLINE build, and cosine_topk_graph_stored proves
@@ -1565,9 +1565,9 @@ object SparkEntry {
     "ann_recall_graph" -> ((s, d) => {
       val emb = t(s, d, "embeddings").persist()
       val dir = artifactDir("graph_index", d)(out =>
-        SimilarityOps.writeGraphIndexScaled(emb, out))
+        SimilarityOps.writeGraphIndex(emb, out))
       val brute = SimilarityOps.cosineTopK(emb, 10, 5).select(col("q_id"), col("vec_id"))
-      val hit = SimilarityOps.graphAnnTopKFromIndexScaled(s, dir, 10, 5)
+      val hit = SimilarityOps.graphAnnTopKFromIndex(s, dir, 10, 5)
         .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1))
       brute.join(hit, Seq("q_id", "vec_id"), "left")
         .groupBy(col("q_id"))
@@ -1582,11 +1582,11 @@ object SparkEntry {
     // stays spec-gated rescored ≥ plain in GraphAnnGateSpec)
     "graph_topk_rescored" -> ((s, d) => {
       val dir = artifactDir("graph_index", d)(out =>
-        SimilarityOps.writeGraphIndexScaled(t(s, d, "embeddings"), out))
+        SimilarityOps.writeGraphIndex(t(s, d, "embeddings"), out))
       SimilarityOps.graphTopKRescoredFromIndex(s, dir, 10, 5)
     }),
     // recall decay of an append-attached graph index vs a full rebuild —
-    // ivf_append_drift's graph analog: stale = base edges + LSH-attached
+    // ivf_append_drift's graph analog: stale = base edges + init-attached
     // delta (no rewiring of old nodes), fresh = full rebuild, both beam-
     // searched under the grown corpus's contract knobs vs brute
     // both append-drift audits replay the SAME base-1/11 descent graph
@@ -1622,7 +1622,7 @@ object SparkEntry {
     "graph_delete_drift" -> ((s, d) => {
       val emb = t(s, d, "embeddings").persist()
       val dir = artifactDir("graph_index", d)(out =>
-        SimilarityOps.writeGraphIndexScaled(emb, out))
+        SimilarityOps.writeGraphIndex(emb, out))
       SimilarityOps.graphDeleteDrift(emb,
         prebuiltEdges = Some(s.read.parquet(s"$dir/edges")))
     }),
@@ -2087,13 +2087,13 @@ object SparkEntry {
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")), 5)
     }),
     // beam search against the PERSISTED graph index (edges + vectors):
-    // bit-identical to the inline build, no bucket pass at query time;
+    // bit-identical to the inline build, no graph build at query time;
     // the reader re-derives the contract knobs from the stored vector
     // count, so index and inline tier stay in lockstep
     "cosine_topk_graph_stored" -> ((s, d) => {
       val dir = artifactDir("graph_index", d)(out =>
-        SimilarityOps.writeGraphIndexScaled(t(s, d, "embeddings"), out))
-      SimilarityOps.graphAnnTopKFromIndexScaled(s, dir, 10, 5)
+        SimilarityOps.writeGraphIndex(t(s, d, "embeddings"), out))
+      SimilarityOps.graphAnnTopKFromIndex(s, dir, 10, 5)
     }),
 
     // TimescaleDB gapfill+locf analog: daily totals per status densified
@@ -3070,13 +3070,6 @@ object SparkEntry {
     ("bucket" +: (0 until nBits).map(j => s"xor(bucket, ${1 << j})"))
       .mkString("[", ", ", "]")
 
-  /** Dynamic-nBits forms of the bucket and Hamming-1 probe list — the
-    * graph tier's scale-contract bucketing (nb = min(16, max(4, lg n −
-    * 7)) lives in a `kn`-style 1-row CTE; both expressions reference its
-    * `nb` column, so CROSS JOIN that CTE wherever these are emitted).
-    * Proven value-identical to the static 4-bit spelling at every gate
-    * SF (nb = 4 below 2^11 vectors).
-    */
   /** The hashed frame behind the descent build (graph-tier scale
     * contract): static 4-bit sign bucket for locality, plus the two
     * portable-hash partitions — ~128-vector `cell`s inside each bucket
@@ -3142,9 +3135,10 @@ object SparkEntry {
        |      UNION SELECT dst, src FROM gd$sfx)""".stripMargin
   }
 
-  /** Graph-ANN replay: the LSH-candidate kNN graph (multi-probe src side,
-    * per-src top-graphK by round-6 cosine, dst tiebreak), fixed entry
-    * seeds, then `rounds` unrolled beam iterations — expand through the
+  /** Graph-ANN replay: the symmetrized descent-built kNN graph
+    * ([[duckDescentBuild]]: per-src top-graphK by round-6 cosine, dst
+    * tiebreak, plus long links), contract entry seeds, then `rounds`
+    * unrolled beam iterations — expand through the
     * graph, score ONLY unvisited nodes, re-select the beam from all
     * visited — ending in the top-k of the final visited set. CTEs per
     * round MATERIALIZED (the unigram lesson: multi-reference chains

@@ -591,7 +591,7 @@ object DedupOps {
     * cost is one df aggregate + one per-doc ranking pass, both linear.
     *
     * NOT the default exact tier. Measured head-to-head on df-scaled
-    * corpora (graft.JaccardScaleBench; table in SCALE.md): the guarded
+    * corpora (SCALE.md r6 crossover table): the guarded
     * inverted-index join (`jaccardPairs` with a stop-shingle cap) wins at
     * every scale up to 4× the fixture, because the cap bounds exactly the
     * df² term prefix filtering prunes — at a fraction of the fixed cost.

@@ -44,10 +44,6 @@ object FinanceOps {
   def ratio(num: Column, den: Column): Column =
     num.cast(DoubleType) / nullif(den.cast(DoubleType), lit(0.0))
 
-  def profitMargin(netIncome: Column, revenue: Column): Column = ratio(netIncome, revenue)
-  def returnOnAssets(netIncome: Column, assets: Column): Column = ratio(netIncome, assets)
-  def returnOnEquity(netIncome: Column, equity: Column): Column = ratio(netIncome, equity)
-
   /** Reference's only checked-in helper: normalize_string = strip().lower()
     * (/root/reference/utils/helpers.py:1-2).
     */

@@ -155,21 +155,6 @@ object GraphOps {
           .as("clustering_ppm"))
   }
 
-  /** Triangle profile of the multi-evidence overlap graph: MinHash LSH
-    * candidate pairs ∪ winnowing fingerprint-overlap pairs, deduped. Two
-    * independent near-dup detectors agreeing on edge structure is exactly
-    * when triangle/coefficient analysis is informative — and the union
-    * shape mirrors how a production corpus graph accretes edges from
-    * multiple screens. (The stored pair index feeds `triangleStats`
-    * directly for the amortized path.)
-    */
-  def docTriangles(documents: DataFrame): DataFrame =
-    triangleStats(
-      DedupOps.minhashCandidatePairs(documents)
-        .union(TextOps.winnowOverlapPairs(documents)
-          .select(col("doc_a"), col("doc_b")))
-        .distinct())
-
   /** k-core peel over an undirected (doc_a < doc_b) pair frame: repeatedly
     * remove nodes of degree < k until only the k-core remains — the
     * density floor that separates genuine template FAMILIES (every member
@@ -283,14 +268,9 @@ object GraphOps {
     labels
   }
 
-  /** LPA communities over the MinHash near-dup graph (the same
-    * symmetrized candidate edges the collapse and PageRank consume).
-    */
-  def docCommunities(documents: DataFrame, rounds: Int = 4): DataFrame =
-    docCommunitiesFromPairs(DedupOps.minhashCandidatePairs(documents), rounds)
-
-  /** Same communities from a prebuilt (doc_a, doc_b) pair frame — the
-    * persisted pair-index consumer.
+  /** LPA communities over a prebuilt (doc_a, doc_b) near-dup pair frame
+    * (the persisted pair index; the same symmetrized candidate edges the
+    * collapse and PageRank consume).
     */
   def docCommunitiesFromPairs(pairs: DataFrame, rounds: Int = 4): DataFrame = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))

@@ -902,7 +902,9 @@ object RelationalOps {
     * side) — PROVIDED the group stays under ~10⁵ rows: the kurtosis
     * numerator C carries n⁴·m4, and with m4 ≤ x⁴ ≈ 10¹⁸ the 38-digit
     * capacity runs out at n ≈ 10⁵ (the r14 decimal-overflow audit's
-    * finding; ANSI-off Spark would NULL the moment silently past it).
+    * finding; under Spark 4's default ANSI mode, which graft keeps, the
+    * job would fail there with NUMERIC_VALUE_OUT_OF_RANGE — with ANSI
+    * off the moment would NULL silently).
     * Corpus-scale groups must pre-aggregate (profile per stratum or
     * sample) — the n⁴ growth is intrinsic to the exact closed form.
     * Constant groups (B = 0) yield NULL moments, not NaN — NaN
@@ -910,7 +912,9 @@ object RelationalOps {
     *
     * The bound is ENFORCED, not advisory (r14 verdict task 3 — the
     * decimal audit's one real finding was this operator's kurtosis
-    * numerator, and ANSI-off Spark NULLs a capped DECIMAL silently):
+    * numerator, which past its cap fails the whole job with an opaque
+    * NUMERIC_VALUE_OUT_OF_RANGE under the default ANSI mode, or NULLs
+    * silently with ANSI off):
     * the aggregate also lands max|x| per group, and the moment columns
     * `raise_error` when max|x| > 3·10⁴ (the per-row x⁴ long-wrap bound)
     * or n·max|x| > 1.5·10⁹. The latter is the data-adaptive DECIMAL(38,0)

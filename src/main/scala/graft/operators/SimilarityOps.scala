@@ -842,13 +842,13 @@ object SimilarityOps {
     *
     * The quantized frame is `persist()`ed — cache lifecycle CALLER-owned,
     * the engine-wide convention (`ann_recall`, trained IVF). Not an
-    * optimization nicety: the r9 ladder (`graft.Int8ScaleAudit`) measured
-    * that without a materialization barrier, whole-stage codegen inlines
-    * the interpreted-HOF quantize expression into the broadcast join's
-    * inner loop — once per SCORED PAIR, not once per corpus row
-    * (×100: 3.38 s vs 0.57 quantize + 0.71 score in isolation) — and
-    * that per-pair term was the entire ×100 exponent (0.54) of this
-    * tier. Quantize-once is also the semantic at any real scale: the
+    * optimization nicety: the r9 int8 ladder (SCALE.md, "r8: ANN scaling
+    * exponents") measured that without a materialization barrier,
+    * whole-stage codegen inlines the interpreted-HOF quantize expression
+    * into the broadcast join's inner loop — once per SCORED PAIR, not
+    * once per corpus row (×100: 3.38 s vs 0.57 quantize + 0.71 score in
+    * isolation) — and that per-pair term was the entire ×100 exponent
+    * (0.54) of this tier. Quantize-once is also the semantic at any real scale: the
     * quantized corpus is the artifact, scored by many query batches
     * (`cosineTopKInt8Stored` is the same statement at rest).
     */
@@ -972,51 +972,23 @@ object SimilarityOps {
       .select(col("vec_a"), col("vec_b"), col("score"))
   }
 
-  /** Directed kNN graph over LSH candidates — the index half of the
-    * graph-ANN tier: every node keeps its `graphK` nearest neighbors
-    * among same-bucket (plus Hamming-1 multi-probe) candidates. Candidate
-    * generation is the [[embeddingDupPairsLsh]] equi-join — shuffle by
-    * bucket, never all-pairs — and the per-node top-k is a bucket-keyed
-    * window. Edges are SYMMETRIZED (directed top-k ∪ its reverse, the
-    * NSW/HNSW reverse-link rule): a node that is nobody's top-k
-    * OUT-neighbor would otherwise be unreachable by any beam — measured
-    * on the clustered spec fixture as a hard recall ceiling (~0.67 even
-    * with a wide beam) that symmetrization removes. Deterministic:
-    * round-6 scores, dst tiebreak. At 100 TB this build is exactly the
-    * near-dup candidate pass the dedup family already pays; the graph is
-    * ≤ 2·corpus·graphK rows at rest.
+  /** Undirected closure of a directed (src, dst) edge list: the edges
+    * plus their reverses, deduped (the NSW/HNSW reverse-link rule — a
+    * node that is nobody's top-k OUT-neighbor would otherwise be
+    * unreachable by any beam). Idempotent on an already-symmetric set.
     */
-  def knnGraphLsh(embeddings: DataFrame, graphK: Int = 8, nBits: Int = 4,
-                  multiProbe: Boolean = true): DataFrame = {
-    val bucketed = embeddings.withColumn("bucket", lshBucket(col("embedding"), nBits))
-    val src = bucketed.select(col("vec_id").as("src"), col("embedding").as("s_emb"),
-      explode(lshProbeBuckets(col("bucket"), nBits, multiProbe)).as("bucket"))
-    val dst = bucketed.select(col("bucket"), col("vec_id").as("dst"),
-      col("embedding").as("d_emb"))
-    // bounded keep-best (r17, guide §2.3): the bucket-join candidate
-    // stream is corpus-scale; same (score desc, dst asc) contract as the
-    // old row_number window, each (src, dst) occurs at most once (a
-    // corpus vector lives in exactly one bucket)
-    val scored = src.join(dst, Seq("bucket"))
-      .filter(col("src") =!= col("dst"))
-      .withColumn("score",
-        round(graft.functions.GraftFunctions.cosineSim(col("s_emb"), col("d_emb")), 6))
-      .select(col("src"), col("dst").as("vec_id"), col("score"))
-    val directed = topKSelect(scored, Seq("src"), graphK)
-      .select(col("src"), col("vec_id").as("dst"))
-    directed
-      .unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
+  def symmetrize(directed: DataFrame): DataFrame =
+    directed.unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-  }
 
   /** LINEAR-cost kNN-graph build: bucket-cell exhaustive init + NN-descent
     * refinement (Dong, Moses & Li, WWW'11 — the public algorithm, re-
-    * expressed as DataFrame ops). The one-shot LSH-bucket build
-    * ([[knnGraphLsh]]) scores n²·(nBits+1)/2^nBits pairs — measured
-    * e = 1.4 at the sf1 decade with nBits pinned at 4, and raising nBits
-    * on an isotropic corpus collapses recall (sign-bit collision p^nBits
-    * → buckets stop containing true neighbors; measured 0.00 recall@5 at
-    * nBits = 8). NN-descent sidesteps the trade entirely:
+    * expressed as DataFrame ops). It replaced a one-shot LSH-bucket build
+    * (removed; numbers in SCALE.md r13) that scored n²·(nBits+1)/2^nBits
+    * pairs — measured e = 1.4 at the sf1 decade with nBits pinned at 4,
+    * and raising nBits on an isotropic corpus collapses recall (sign-bit
+    * collision p^nBits → buckets stop containing true neighbors; measured
+    * 0.00 recall@5 at nBits = 8). NN-descent sidesteps the trade entirely:
     *
     *  - INIT: vectors split into (bucket, cell) groups — the 4-bit sign
     *    bucket for locality, then a portable-hash cell so every group is
@@ -1031,8 +1003,7 @@ object SimilarityOps {
     *
     * Deterministic end to end: round-6 scores, dst tiebreak, md5-derived
     * cells, every round localCheckpointed. Returns the DIRECTED top-k
-    * edges; callers symmetrize (same contract as [[knnGraphLsh]]'s
-    * directed stage).
+    * edges plus the long links; callers [[symmetrize]].
     */
   def knnGraphDescent(embeddings: DataFrame, graphK: Int = 16,
                       descentRounds: Int = 2, nBits: Int = 4,
@@ -1099,9 +1070,7 @@ object SimilarityOps {
     var edges = topN(cellPairs.unionByName(groupPairs).distinct(), graphK)
       .localCheckpoint()
     for (_ <- 1 to descentRounds) {
-      val nbr = edges
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
+      val nbr = symmetrize(edges)
       val twoHop = nbr.select(col("src"), col("dst").as("mid"))
         .join(nbr.select(col("src").as("mid"), col("dst")), Seq("mid"))
         .filter(col("src") =!= col("dst"))
@@ -1110,26 +1079,6 @@ object SimilarityOps {
     }
     edges.unionByName(longEdges).distinct()
   }
-
-  /** Graph-based ANN (the HNSW/NSW recall path, DataFrame-native): greedy
-    * BEAM SEARCH over the [[knnGraphLsh]] kNN graph instead of pointer
-    * chasing — per round, the current top-`beam` candidates of every
-    * query expand through ONE equi-join on the graph's src key, newly
-    * reached nodes score against their query (broadcast query set), and
-    * the beam re-selects from everything visited. Termination mimics
-    * HNSW's: when the beam stops producing unvisited neighbors the
-    * frontier fixes itself. Deterministic end to end (round-6 scores,
-    * node tiebreaks, the visited set keyed by (q_id, node)); every round
-    * localCheckpoints (multi-reference loop rule). Per round the work is
-    * |queries|·beam·graphK candidate rows — independent of corpus size
-    * once the graph is built, which is what makes the graph tier the
-    * low-latency end of the ANN frontier.
-    */
-  def graphAnnTopK(embeddings: DataFrame, nQueries: Int, k: Int,
-                   beam: Int = 8, rounds: Int = 3, graphK: Int = 8,
-                   entrySeeds: Int = 4): DataFrame =
-    graphAnnSearch(embeddings, knnGraphLsh(embeddings, graphK).localCheckpoint(),
-      nQueries, k, beam, rounds, entrySeeds)
 
   /** The graph tier's SCALE CONTRACT (r12 verdict task 3): at fixed knobs
     * recall@5 decayed 0.50/0.34/0.22 across the three fixture SFs, because
@@ -1141,13 +1090,10 @@ object SimilarityOps {
     *   beam = 6·lg(n), entrySeeds = 2·lg(n), rounds = 3, graphK = 16.
     *
     * The BUILD-side half of the contract is [[knnGraphDescent]] (linear
-    * cell-bounded init + NN-descent + NSW long links): the one-shot LSH
-    * build's candidate join is n²·(nBits+1)/2^nBits — measured e = 1.4
-    * at the sf1 decade at nBits = 4, and raising nBits to keep buckets
-    * bounded collapses recall on an isotropic corpus (measured 0.00 at
-    * nBits = 8: sign-bit collision p^nBits empties the buckets of true
-    * neighbors). Query-side work stays |queries|·beam·graphK = O(log n)
-    * per query once the graph exists. Measured (GraphSf1Probe, r13):
+    * cell-bounded init + NN-descent + NSW long links), which replaced the
+    * one-shot LSH build for the reasons in its scaladoc. Query-side work
+    * stays |queries|·beam·graphK = O(log n) per query once the graph
+    * exists. Measured (SCALE.md r13):
     * recall@5 = 1.00 / 1.00 / 0.98 / 0.98 across sf0.001/sf0.01/sf0.1/
     * sf1(20k vectors) with the descent build at these query knobs, vs
     * 0.50/0.34/0.22 shipped in r12; the `ann_recall_graph` gate pins the
@@ -1160,48 +1106,30 @@ object SimilarityOps {
 
   /** Graph ANN under the full scale contract: [[knnGraphDescent]] build
     * (symmetrized) + beam search at the contract query knobs — one
-    * driver-side count picks every width for this corpus.
+    * driver-side count picks every width for this corpus. The only
+    * explicit-knob face is [[graphAnnTopKOver]].
     */
-  def graphAnnTopKScaled(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
+  def graphAnnTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val n = embeddings.count()
     val (beam, rounds, graphK, seeds) = graphKnobs(n)
     val directed = knnGraphDescent(embeddings, graphK, knownN = Some(n))
-    val sym = directed.unionByName(
-      directed.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-    graphAnnSearch(embeddings, sym.localCheckpoint(), nQueries, k, beam, rounds, seeds)
+    graphAnnSearch(embeddings, symmetrize(directed).localCheckpoint(), nQueries, k,
+      beam, rounds, seeds)
   }
 
-  /** Persist the graph-ANN index: the symmetrized edge list plus the
-    * vectors (the same self-contained layout as [[writeIvfIndex]] — a
-    * reader needs no access to the source table). Build once per corpus
-    * snapshot; every query batch afterwards pays beam search only.
+  /** Persist the graph-ANN index under the scale contract: the
+    * symmetrized descent edge list plus the vectors (the same
+    * self-contained layout as [[writeIvfIndex]] — a reader needs no
+    * access to the source table). Build once per corpus snapshot; every
+    * query batch afterwards pays beam search only. graphK comes from the
+    * rule, and [[graphAnnTopKFromIndex]] re-derives beam/seeds from the
+    * persisted vector count — index and query side agree on the knobs
+    * without a side-channel config.
     */
-  def writeGraphIndex(embeddings: DataFrame, dir: String, graphK: Int = 8): Unit = {
-    knnGraphLsh(embeddings, graphK).write.mode("overwrite").parquet(s"$dir/edges")
-    embeddings.select(col("vec_id"), col("embedding"))
-      .write.mode("overwrite").parquet(s"$dir/vectors")
-  }
-
-  /** Beam search against a persisted index — no bucket pass, no graph
-    * build, just the per-round equi-join over the stored edges.
-    */
-  def graphAnnTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                            nQueries: Int, k: Int, beam: Int = 8,
-                            rounds: Int = 3, entrySeeds: Int = 4): DataFrame =
-    graphAnnSearch(spark.read.parquet(s"$dir/vectors"),
-      spark.read.parquet(s"$dir/edges"), nQueries, k, beam, rounds, entrySeeds)
-
-  /** [[writeGraphIndex]] / [[graphAnnTopKFromIndex]] under the scale
-    * contract: the build picks graphK from the rule, the reader re-derives
-    * beam/seeds from the persisted vector count — index and query side
-    * agree on the knobs without a side-channel config.
-    */
-  def writeGraphIndexScaled(embeddings: DataFrame, dir: String): Unit = {
+  def writeGraphIndex(embeddings: DataFrame, dir: String): Unit = {
     val n = embeddings.count()
     val (_, _, graphK, _) = graphKnobs(n)
-    val directed = knnGraphDescent(embeddings, graphK, knownN = Some(n))
-    directed.unionByName(
-        directed.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+    symmetrize(knnGraphDescent(embeddings, graphK, knownN = Some(n)))
       .write.mode("overwrite").parquet(s"$dir/edges")
     embeddings.select(col("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(s"$dir/vectors")
@@ -1222,15 +1150,17 @@ object SimilarityOps {
     val n = embeddings.count()
     val nb = n / 11
     val graphK = graphKnobs(n)._3
-    val directed = knnGraphDescent(embeddings.filter(col("vec_id") < nb), graphK,
-      knownN = Some(nb))
-    directed.unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    symmetrize(knnGraphDescent(embeddings.filter(col("vec_id") < nb), graphK,
+        knownN = Some(nb)))
       .write.mode("overwrite").parquet(dir)
   }
 
-  def graphAnnTopKFromIndexScaled(spark: org.apache.spark.sql.SparkSession,
-                                  dir: String, nQueries: Int, k: Int): DataFrame = {
+  /** Beam search against a [[writeGraphIndex]] index — no graph build,
+    * just the per-round equi-join over the stored edges, at the contract
+    * knobs for the stored vector count.
+    */
+  def graphAnnTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
+                            dir: String, nQueries: Int, k: Int): DataFrame = {
     val vectors = spark.read.parquet(s"$dir/vectors")
     val (beam, rounds, _, seeds) = graphKnobs(vectors.count())
     graphAnnSearch(vectors, spark.read.parquet(s"$dir/edges"),
@@ -1280,11 +1210,8 @@ object SimilarityOps {
       .withColumn("score",
         round(graft.functions.GraftFunctions.cosineSim(col("s_emb"), col("d_emb")), 6))
       .select(col("src"), col("dst").as("vec_id"), col("score"))
-    val directed = topKSelect(scored, Seq("src"), graphK)
-      .select(col("src"), col("vec_id").as("dst"))
-    directed
-      .unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    symmetrize(topKSelect(scored, Seq("src"), graphK)
+      .select(col("src"), col("vec_id").as("dst")))
   }
 
   /** Recall decay of an append-attached graph index vs a full rebuild —
@@ -1293,7 +1220,7 @@ object SimilarityOps {
     * 1×/5×/10×, and per factor the audit reports beam-search recall@k of
     * (a) the STALE index — base-time edges plus [[knnGraphAttach]]-only
     * delta edges, exactly what repeated appends produce — vs (b) a FRESH
-    * [[knnGraphLsh]] rebuild, both under the scale-contract knobs for the
+    * [[knnGraphDescent]] rebuild, both under the scale-contract knobs for the
     * GROWN size and both against full-precision brute. drift_ppm =
     * fresh − stale is the rebuild-policy number. Slices are vec_id
     * prefixes (deterministic, dense ids), sized from one driver count.
@@ -1302,8 +1229,6 @@ object SimilarityOps {
                        nQueries: Int = 10, k: Int = 5,
                        prebuiltBase: Option[DataFrame] = None): DataFrame = {
     val nb = embeddings.count() / 11
-    def sym(directed: DataFrame): DataFrame = directed.unionByName(
-      directed.select(col("dst").as("src"), col("src").as("dst"))).distinct()
     // Factor-shared work (r13 verdict task 6): the audit's per-factor loop
     // re-derived two frames that do not depend on the factor at all —
     // (a) the STALE side's base graph: graphK is scale-constant in the
@@ -1318,12 +1243,12 @@ object SimilarityOps {
     // the STALE side's base graph is "the index that predates the
     // appends" — when the caller holds it persisted (the registered query
     // shares one base-slice artifact with graphTopKRescoredDrift, built
-    // once per JVM), reading it skips a per-call descent rebuild; sym()
-    // is idempotent on the already-symmetric stored set, so the guard
-    // costs one distinct and a directed caller still reads right
+    // once per JVM), reading it skips a per-call descent rebuild;
+    // symmetrize is idempotent on the already-symmetric stored set, so the
+    // guard costs one distinct and a directed caller still reads right
     val baseSym = prebuiltBase
-      .map(e => sym(e.select(col("src"), col("dst"))).localCheckpoint())
-      .getOrElse(sym(knnGraphDescent(
+      .map(e => symmetrize(e.select(col("src"), col("dst"))).localCheckpoint())
+      .getOrElse(symmetrize(knnGraphDescent(
         embeddings.filter(col("vec_id") < nb), graphK, knownN = Some(nb)))
         .localCheckpoint())
     val queries = embeddings.filter(col("vec_id") < nQueries)
@@ -1353,7 +1278,7 @@ object SimilarityOps {
       // rebuild), while the fresh rebuild gets the grown corpus's moduli
       val stale = baseSym
         .unionByName(knnGraphAttach(corpus, nb, nb, graphK)).distinct()
-      val fresh = sym(knnGraphDescent(corpus, graphK, knownN = Some(n)))
+      val fresh = symmetrize(knnGraphDescent(corpus, graphK, knownN = Some(n)))
       // brute ground truth via the bounded topKSelect aggregation (r17,
       // guide §2.3): same (score desc, vec_id asc) contract as the old
       // row_number window, no map-side sort of every scored pair
@@ -1423,15 +1348,13 @@ object SimilarityOps {
                              prebuiltBase: Option[DataFrame] = None): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must cover k = $k")
     val nb = embeddings.count() / 11
-    def sym(directed: DataFrame): DataFrame = directed.unionByName(
-      directed.select(col("dst").as("src"), col("src").as("dst"))).distinct()
     val nMax = nb * (1 + factors.max)
     val graphK = graphKnobs(nMax)._3
     // same prebuilt-base read as [[graphAppendDrift]] — the two audits
     // share one persisted base-slice artifact in the registry
     val baseSym = prebuiltBase
-      .map(e => sym(e.select(col("src"), col("dst"))).localCheckpoint())
-      .getOrElse(sym(knnGraphDescent(
+      .map(e => symmetrize(e.select(col("src"), col("dst"))).localCheckpoint())
+      .getOrElse(symmetrize(knnGraphDescent(
         embeddings.filter(col("vec_id") < nb), graphK, knownN = Some(nb)))
         .localCheckpoint())
     val queries = embeddings.filter(col("vec_id") < nQueries)
@@ -1586,8 +1509,6 @@ object SimilarityOps {
                        prebuiltEdges: Option[DataFrame] = None): DataFrame = {
     val n = embeddings.count()
     val (beam, rounds, graphK, seeds) = graphKnobs(n)
-    def sym(d: DataFrame): DataFrame = d.unionByName(
-      d.select(col("dst").as("src"), col("src").as("dst"))).distinct()
     // "the index that predates the deletes" IS the persisted graph index
     // when the caller has one — passing its edges skips a per-call
     // descent rebuild (stored ≡ inline is hash-proven by
@@ -1595,13 +1516,13 @@ object SimilarityOps {
     // builds inline for standalone callers and specs. The supplied frame
     // is symmetrized defensively (r15 ADVICE): the in/out bridge
     // derivation and the hard prune both assume a symmetric edge set, and
-    // sym() is idempotent on one — so the registered caller's plan gains
-    // only a distinct over its already-symmetric index, while a caller
+    // symmetrize is idempotent on one — so the registered caller's plan
+    // gains only a distinct over its already-symmetric index, while a caller
     // passing a DIRECTED edge list now gets correct readings instead of
     // silently skewed ones.
     val full = prebuiltEdges
-      .map(e => sym(e.select(col("src"), col("dst"))).localCheckpoint())
-      .getOrElse(sym(knnGraphDescent(embeddings, graphK, knownN = Some(n)))
+      .map(e => symmetrize(e.select(col("src"), col("dst"))).localCheckpoint())
+      .getOrElse(symmetrize(knnGraphDescent(embeddings, graphK, knownN = Some(n)))
         .localCheckpoint())
     def aliveOn(c: String, f: Int): Column =
       col(c) < nQueries || col(c) % 10 >= f
@@ -1683,7 +1604,7 @@ object SimilarityOps {
   def graphTopKRescored(embeddings: DataFrame, nQueries: Int, k: Int,
                         shortlist: Int = 20): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must cover k = $k")
-    val sl = graphAnnTopKScaled(embeddings, nQueries, shortlist)
+    val sl = graphAnnTopK(embeddings, nQueries, shortlist)
       .select(col("q_id"), col("vec_id"))
     val q = embeddings.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1713,7 +1634,7 @@ object SimilarityOps {
                                  shortlist: Int = 20): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must cover k = $k")
     val vectors = spark.read.parquet(s"$dir/vectors")
-    val sl = graphAnnTopKFromIndexScaled(spark, dir, nQueries, shortlist)
+    val sl = graphAnnTopKFromIndex(spark, dir, nQueries, shortlist)
       .select(col("q_id"), col("vec_id"))
     val q = vectors.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1819,6 +1740,19 @@ object SimilarityOps {
         round(col("score"), 4).as("score"))
   }
 
+  /** Greedy BEAM SEARCH over a symmetrized kNN graph (the HNSW/NSW recall
+    * path, DataFrame-native) instead of pointer chasing — per round, the
+    * current top-`beam` candidates of every query expand through ONE
+    * equi-join on the graph's src key, newly reached nodes score against
+    * their query (broadcast query set), and the beam re-selects from
+    * everything visited. Termination mimics HNSW's: when the beam stops
+    * producing unvisited neighbors the frontier fixes itself.
+    * Deterministic end to end (round-6 scores, node tiebreaks, the
+    * visited set keyed by (q_id, node)); every round localCheckpoints
+    * (multi-reference loop rule). Per round the work is
+    * |queries|·beam·graphK candidate rows — independent of corpus size
+    * once the graph is built.
+    */
   private def graphAnnSearch(embeddings: DataFrame, graph: DataFrame,
                              nQueries: Int, k: Int, beam: Int, rounds: Int,
                              entrySeeds: Int): DataFrame = {

@@ -61,15 +61,6 @@ object TextOps {
       length(col("text")).as("n_chars_measured"),
       expr(s"size(${toksExprFor(documents)})").as("n_tokens"))
 
-  /** English stopword hits — the n-gram-heuristic core for language ID.
-    * Counting via an array filter (not a join) keeps it one narrow pass.
-    * (Single-expression form; ops that also need the token count use
-    * `stopHitsSql` over a let-bound/staged array so the tokenizer never
-    * runs twice per row.)
-    */
-  def stopwordHits(colName: String): Column =
-    expr(stopHitsSql(s"regexp_extract_all(lower($colName), '$TokenPattern', 0)"))
-
   /** Heuristic language ID: stopword-ratio n-gram heuristic. With the
     * synthetic corpus (English-ish vocab regardless of the `lang` label)
     * this deterministically classifies by article density — the *shape* of
@@ -838,8 +829,8 @@ object TextOps {
          |       round(size(filter(ls, l -> right(l, 3) = '...'))
          |           / cast(size(ls) as double), 6)))[0])[0]""".stripMargin
     // stop_hits rides inside the same let-bound struct (r8): the r7 form
-    // computed it via a second stopwordHits("text") projection, which ran
-    // the tokenizer regex a second time per row
+    // computed it via a second single-expression stopword projection,
+    // which ran the tokenizer regex a second time per row
     documents
       .select(col("doc_id"), expr(sql).as("g"))
       .select(
@@ -951,16 +942,6 @@ object TextOps {
                 | div (n_seqs * ${seqBudget}L) as bigint)""".stripMargin)
           .as("avg_fill_ppm"))
   }
-
-  /** Distinct-content cardinality per source via HLL++
-    * (approx_count_distinct). Not oracle-comparable (sketch internals are
-    * engine-specific) — registered rows-only; the exact variant is
-    * `RelationalOps.distinctCustomersPerStatus`-style countDistinct.
-    */
-  def approxDistinctContent(documents: DataFrame): DataFrame =
-    documents
-      .groupBy(col("source"))
-      .agg(approx_count_distinct(col("text"), 0.01).as("approx_distinct_docs"))
 
   /** Oracle-checkable gate for the HLL++ sketch: per source, does the
     * approximate cardinality land within `relErr` of the exact one? The

@@ -10,10 +10,6 @@ import org.apache.spark.sql.types._
   * with the on-disk schema and casting in staging (FinanceOps.stgFinancialData).
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Read one testdata table. Column pruning + predicate pushdown reach the
     * parquet scan because we keep this a plain declarative read.
     *
@@ -39,13 +35,6 @@ object Tables {
             org.apache.spark.sql.functions.col("ts").cast(TimestampType))
       }
     } else spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Register every testdata table as a temp view (staging-zone style:
-    * views are lazy and recomputed, matching dbt `materialized='view'`,
-    * reference README.md:413-414).
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
   // --- Reference canonical schemas (SURVEY.md §1.3, FIXTURES.md §A) ---
 

@@ -8,7 +8,7 @@ import graft.operators.SimilarityOps
   * shipping knob rule (beam = 6·lg n, seeds = 2·lg n, rounds = 3,
   * graphK = 16). r12 shipped fixed knobs whose recall decayed
   * 0.50/0.34/0.22 across the SFs; the rule measured 0.98/1.00/0.96
-  * (GraphAnnKnobProbe), and this spec fails the suite if either the rule
+  * (r13 knob probe, SCALE.md r19), and this spec fails the suite if either the rule
   * or the graph build regresses below 0.90 anywhere on the ladder —
   * recall-vs-scale is a structural property here, like the plan shapes
   * in PlanShapeSpec.
@@ -24,7 +24,7 @@ class GraphAnnGateSpec extends SparkSpec {
       try {
         val brute = SimilarityOps.cosineTopK(emb, 10, 5)
           .select(col("q_id"), col("vec_id"))
-        val hits = SimilarityOps.graphAnnTopKScaled(emb, 10, 5)
+        val hits = SimilarityOps.graphAnnTopK(emb, 10, 5)
           .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
         val recall = brute.join(hits, Seq("q_id", "vec_id"), "left")
           .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1))).as("r"))
@@ -87,7 +87,7 @@ class GraphAnnGateSpec extends SparkSpec {
             Seq("q_id", "vec_id"), "left")
           .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1))).as("r"))
           .head().getDouble(0)
-      val plain = SimilarityOps.graphAnnTopKScaled(emb, 10, 5)
+      val plain = SimilarityOps.graphAnnTopK(emb, 10, 5)
       val rescored = SimilarityOps.graphTopKRescored(emb, 10, 5)
       assert(recallOf(rescored) >= recallOf(plain),
         "rescored stack must not recall below the plain graph tier")

@@ -807,11 +807,11 @@ class SimilarityMultimodalSpec extends SparkSpec {
   test("graphAnnTopK: beam search walks the kNN graph from the entry " +
        "seeds into a far cluster; more rounds never lose recall") {
     import spark.implicits._
-    // two direction clusters on the LSH-SAMPLED components (stride 2 →
-    // comps 0,2,4,6), distinguishing noise on the UNSAMPLED comps so
-    // buckets stay cluster-pure while within-cluster cosines are
-    // distinct; entry seeds 0..3 (two per cluster) — the beam must hop
-    // through graph neighbors to cover each query's cluster
+    // two direction clusters (comps 0 and 4) with distinguishing noise on
+    // comps 1, 3, 5 so within-cluster cosines are distinct; entry seeds
+    // 0..3 (two per cluster) — the beam must hop through graph neighbors
+    // to cover each query's cluster. The graph is the symmetrized descent
+    // build at graphK = 8, searched through the explicit-knob face.
     val vecs = (0 until 80).map { i =>
       val c = i % 2
       val e = Array.fill(8)(0.0f)
@@ -824,9 +824,11 @@ class SimilarityMultimodalSpec extends SparkSpec {
     val brute = SimilarityOps.cosineTopK(vecs, 6, 5)
       .select(col("q_id"), col("vec_id")).collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
+    val edges = SimilarityOps.symmetrize(SimilarityOps.knnGraphDescent(vecs, 8))
+      .localCheckpoint()
     def recallAt(rounds: Int, beam: Int = 8): Double = {
-      val got = SimilarityOps.graphAnnTopK(vecs, 6, 5, beam = beam,
-        rounds = rounds, graphK = 8, entrySeeds = 4).collect()
+      val got = SimilarityOps.graphAnnTopKOver(vecs, edges, 6, 5, beam = beam,
+        rounds = rounds, entrySeeds = 4).collect()
         .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
       brute.map { case (q, bs) =>
         got.getOrElse(q, Set.empty).intersect(bs).size.toDouble / bs.size
@@ -862,11 +864,15 @@ class SimilarityMultimodalSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     assert(got == inline, s"stored vs inline: ${got.diff(inline)} / ${inline.diff(got)}")
     // (the search localCheckpoints per round, so the FINAL plan's leaves
-    // are checkpoint RDDs — assert the at-rest index itself instead)
+    // are checkpoint RDDs — assert the at-rest index itself instead).
+    // Edge budget of the descent build: ≤ graphK kNN edges plus ≤ longK
+    // (default 4) long links per node, symmetrized — ≤ 2·n·(graphK + longK)
+    // at the contract graphK
     val edges = spark.read.parquet(s"$dir/edges")
     assert(edges.columns.sorted.toSeq == Seq("dst", "src"))
     val nEdges = edges.count()
-    assert(nEdges > 0 && nEdges <= 2L * 40 * 8,
+    val graphK = SimilarityOps.graphKnobs(40L)._3
+    assert(nEdges > 0 && nEdges <= 2L * 40 * (graphK + 4),
       s"symmetrized edge budget: $nEdges")
   }
 
