@@ -36,8 +36,12 @@ import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType,
   * an audited claim, not an exemption; anything new that trips the
   * detector must either widen to DECIMAL(38,0) or land here with a bound.
   *
-  * Plans are built at sf0.001 and never executed. Exit summary prints
-  * offenders=N; the round-close gate expects 0.
+  * Plans are built at sf0.001; the audited queries are never run.
+  * Building a registered frame does run its eager set-up, though:
+  * `artifactDir` parquet builds and `localCheckpoint` jobs. So a full
+  * audit costs about one Verify pass, and a query whose set-up throws
+  * reports as `[plan-error]`, not as an audit finding. Exit summary
+  * prints offenders=N; the round-close gate expects 0.
   */
 object OverflowAudit {
 

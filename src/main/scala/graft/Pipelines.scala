@@ -153,9 +153,9 @@ object Pipelines {
     * keep each cluster's min doc) → quality floor → fixed-window chunking.
     * Returns the chunked training corpus. Every stage is an operator from
     * DedupOps/TextOps, so the whole chain stays a declarative plan (the
-    * one iterative step, dupComponents, is bounded by dup-cluster
-    * diameter) — and the full composition is DuckDB-oracled as the
-    * `corpus_pipeline` query.
+    * one iterative step, dupComponents, runs O(log²) star rounds at most,
+    * and none once the pair graph fits its driver-side cap) — and the
+    * full composition is DuckDB-oracled as the `corpus_pipeline` query.
     */
   def runCorpusPipeline(docs: DataFrame, minQuality: Double = 0.3): DataFrame = {
     val exact = DedupOps.exactDedup(docs)
@@ -176,8 +176,9 @@ object Pipelines {
     * (cheapest way to shrink everything downstream); per-doc filters run
     * before redaction so their signals see the original text; redaction
     * precedes chunking so no chunk straddles a scrubbed span. All stages
-    * are declarative single passes except the bounded dupComponents
-    * iteration — and the whole composition is DuckDB-oracled as ONE query
+    * are declarative single passes except dupComponents (O(log²) star
+    * rounds at most, none once the pair graph fits its driver-side cap)
+    * — and the whole composition is DuckDB-oracled as ONE query
     * (`corpus_full`).
     */
   def runCorpusPipelineFull(docs: DataFrame, minQuality: Double = 0.3,

@@ -880,7 +880,8 @@ object SparkEntry {
     "bcubed_dedup_eval" -> ((s, d) =>
       DedupOps.bcubedDedupEval(t(s, d, "documents"), componentIndexFor(s, d))),
     // dup-cluster collapse: every paired doc labeled with its component's
-    // min doc_id (min-label propagation; oracle = recursive closure)
+    // min doc_id (star rounds while large, driver union-find once the
+    // residual fits; oracle = recursive closure)
     "dup_components" -> ((s, d) =>
       DedupOps.dupComponents(DedupOps.minhashCandidatePairs(t(s, d, "documents")))),
     // integer-micros PageRank over the symmetrized near-dup graph: rank
@@ -913,11 +914,10 @@ object SparkEntry {
       val pairs = DedupOps.pairIndex(s, pairIndexFor(s, d))
       GraphOps.modularity(pairs, GraphOps.docCommunitiesFromPairs(pairs))
     }),
-    // the same collapse via large-star/small-star contraction — O(log²)
-    // rounds regardless of dup-chain diameter; identical oracle to
-    // dup_components (same function, different algorithm), pair-index fed
+    // the same collapse fed from the persisted pair index instead of an
+    // inline candidate derivation; identical oracle to dup_components
     "dup_components_star" -> ((s, d) =>
-      DedupOps.dupComponentsStar(DedupOps.pairIndex(s, pairIndexFor(s, d)))),
+      DedupOps.dupComponents(DedupOps.pairIndex(s, pairIndexFor(s, d)))),
     // per-node triangles + clustering coefficient (ppm) over the
     // multi-evidence overlap graph (LSH pairs ∪ winnow-overlap pairs);
     // degree-ordered orientation keeps candidate wedges ≤ m^1.5. Both
@@ -3798,9 +3798,8 @@ object SparkEntry {
       |  WHERE b1.doc_id < b2.doc_id)""".stripMargin
 
   /** Min-component closure of the MinHash dup graph — shared verbatim by
-    * `dup_components` (min-label propagation) and `dup_components_star`
-    * (large-star/small-star contraction): two algorithms, one function,
-    * one oracle.
+    * `dup_components` (inline pairs) and `dup_components_star` (pair
+    * index): two pair sources, one operator, one oracle.
     */
   private val dupComponentsCtes =
     "WITH RECURSIVE " + minhashPairsCtes.stripPrefix("WITH ") +
@@ -6197,8 +6196,8 @@ object SparkEntry {
         |JOIN sz nb ON nb.doc_id = e.doc_b""".stripMargin),
 
     // transitive closure of the MinHash dup graph via recursive CTE —
-    // DuckDB spelling of the min-label components. The star-contraction
-    // variant computes the SAME function, so it shares the oracle verbatim.
+    // DuckDB spelling of the min-id components. dup_components_star (pair
+    // index fed) computes the SAME function, so it shares the oracle verbatim.
     "dup_components" -> dupComponentsOracle,
     "bcubed_dedup_eval" -> bcubedOracle,
     "cross_source_dup_matrix" -> crossSourceDupMatrixOracle,
@@ -9623,7 +9622,7 @@ object SparkEntry {
 
     // transitive closure over the (bidirectional) match graph via a
     // recursive CTE; canonical = min over reachable set + self — the
-    // same fixpoint the engine's min-label collapse converges to
+    // same min-id labels the engine's union-find assigns
     "fuzzy_canonicalize" ->
       """WITH RECURSIVE names AS (SELECT p_name AS name,
         |    string_split(p_name, ' ')[-1] AS block FROM part GROUP BY p_name),

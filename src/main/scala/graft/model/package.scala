@@ -9,10 +9,7 @@ import java.sql.Timestamp
 package object model {
   case class Order(o_orderkey: Long, o_custkey: Long, o_orderstatus: String,
                    o_totalprice: Double, o_orderdate: Timestamp, o_orderpriority: String)
-  case class Customer(c_custkey: Long, c_name: String, c_nationkey: Int,
-                      c_acctbal: Double, c_mktsegment: String)
   case class Document(doc_id: Long, text: String, lang: String, source: String, n_chars: Long)
-  case class Embedding(vec_id: Long, embedding: Array[Float], label: Int)
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                    event_type: String, value: Double, props: String)
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -87,9 +88,6 @@ object DedupOps {
   /** Shingle expression with the token array let-bound (regex runs once). */
   private val shSql = let(toksSql, "t", shFrom("t"))
 
-  /** Per-shingle portable 32-bit hashes, from the let-bound shingle array. */
-  private val hvsSql = let(shSql, "s0", hvsFrom("s0"))
-
   /** 48-bit md5-prefix hashes of the distinct shingles — wide enough that
     * cross-doc collisions are negligible (and 12 hex digits stays safely
     * inside a signed BIGINT in every engine), narrow enough to cut the
@@ -104,9 +102,6 @@ object DedupOps {
 
   private def mhsFrom(hs: String): String =
     s"transform($seedArr, p -> array_min(transform($hs, h -> (p.a * h + p.b) % ${P}L)))"
-
-  /** Full 16-hash signature from text in one let-chained expression. */
-  private val mhsSql = let(hvsSql, "hs", mhsFrom("hs"))
 
   /** Token-count gate FUSED into the signature expression: the signature
     * operators filter short docs (`size(toks) >= 3`) AND compute the
@@ -1133,10 +1128,10 @@ object DedupOps {
       df.sparkSession.createDataFrame(df.rdd, df.schema)
     val regionEdges = scrubbed(regionKept)
       .union(scrubbed(d.added.select(col("doc_a"), col("doc_b"))))
-    // size-branched collapse: a delta's touched region is normally
-    // delta-bounded (driver union-find, no per-round scheduling cost);
-    // a template flood falls back to the distributed tier
-    val regionLabels = dupComponentsAuto(regionEdges)
+    // a delta's touched region is normally delta-bounded, so the
+    // collapse finishes on the driver with no star rounds; a template
+    // flood contracts on the cluster first
+    val regionLabels = dupComponents(regionEdges)
 
     // ---- fresh readings for added pairs: all three detectors read only
     // the endpoint docs (per-pair, corpus-independent), so the probe set
@@ -1317,7 +1312,7 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
     def scrubbed(df: DataFrame): DataFrame =
       df.sparkSession.createDataFrame(df.rdd, df.schema)
-    val regionLabels = dupComponentsAuto(
+    val regionLabels = dupComponents(
       scrubbed(regionKept).union(scrubbed(added.select(col("doc_a"), col("doc_b")))))
 
     // ---- fresh readings for guard-entry pairs
@@ -1417,102 +1412,95 @@ object DedupOps {
   /** Connected components over a near-dup pair graph — the collapse step
     * after candidate generation: every doc in a duplicate cluster gets the
     * cluster's minimum doc_id as its component, so "keep one survivor per
-    * cluster" becomes a groupBy(component). Iterative min-label
-    * propagation (each round: every node takes the min of its own and its
-    * neighbors' labels) converges in graph-diameter rounds; near-dup
-    * components are small and dense, so a handful of rounds suffices. The
-    * per-round convergence count is a driver-side action — the standard
-    * Spark iterative-graph pattern (GraphX Pregel does the same); at
-    * extreme scale swap in large-star/small-star, which halves diameter
-    * per round. Only docs appearing in ≥ 1 pair are labeled (singletons
-    * need no collapse).
+    * cluster" becomes a groupBy(component). Only docs appearing in ≥ 1
+    * pair are labeled (singletons need no collapse); a doc that appears
+    * only in self-pairs labels itself.
     *
-    * Lineage bound (r6 verdict #3): `persist()` caches blocks but does NOT
-    * truncate the logical plan, so every round's plan embeds all previous
-    * rounds — at a deep dup-chain the driver's analyze/optimize time grows
-    * superlinearly even though no data is recomputed. Every
-    * `checkpointEvery` rounds the labels frame is `localCheckpoint`ed
-    * (eager, executor-local blocks — no HDFS checkpoint dir needed, and
-    * replication is pointless for a frame we can rebuild by re-running),
-    * which cuts the plan back to a leaf scan of the materialized blocks.
-    * Intermediate rounds keep the cheaper persist.
+    * One operator with two halves, after the "finish in memory once
+    * small" step of "Connected Components in MapReduce and Beyond"
+    * (Kiveris et al., SoCC'14 — public algorithm, re-expressed as
+    * DataFrame ops):
+    *
+    *  - while the residual edge set holds more than `localCap` rows, one
+    *    large-star + small-star contraction round runs on the cluster
+    *    ([[starRound]]): O(log²) rounds whatever the dup-chain diameter
+    *    (10 rounds on a 500-link chain, SCALE.md r8);
+    *  - once it fits, the residual is collected and finished by a
+    *    driver-side union-find — no per-round scheduling cost. At
+    *    sf ≤ 0.1 every graph in the suite fits before any round runs.
+    *
+    * Exact: star rounds preserve connectivity and the node set, and never
+    * drop a component's minimum (it is the target of its neighbours'
+    * large-star edges), so the union-find minimum over the contracted
+    * edges is the component minimum. A self-pair rides along in the
+    * residual as a loop (u, u) and counts against the cap, so the driver
+    * finish labels its node too. A contraction that reaches its fixed
+    * point (edge set unchanged — an exact `except`, no checksum shortcut)
+    * while still above the cap is labeled on the cluster: there every
+    * edge is (doc → component min). `localCap = 0` forces that path.
+    * Past `maxIters` rounds without either end it releases everything it
+    * cached and throws rather than return wrong labels.
+    *
+    * Every round's edge set is `localCheckpoint`ed, so each round's plan
+    * is a leaf scan, not the lineage of all previous rounds.
     */
-  def dupComponents(pairs: DataFrame, maxIters: Int = 20,
-                    checkpointEvery: Int = 5): DataFrame = {
-    // localCheckpoint, not persist: the edges subtree is re-embedded in
-    // EVERY round's plan, so when `pairs` arrives with a deep upstream plan
-    // (LSH candidate gen inside corpus_full) an un-truncated edges lineage
-    // multiplies through all rounds. After the checkpoint each round sees a
-    // single leaf scan.
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+  def dupComponents(pairs: DataFrame, maxIters: Int = 25,
+                    localCap: Int = 1 << 20): DataFrame = {
+    // explicit aliases mint fresh attribute ids: a bare re-projection
+    // directly atop a Union whose children share upstream attributes
+    // trips Catalyst's union constraint rewrite (key-not-found during
+    // analysis) on Spark 4.1 — the delta callers pass unions
+    val canon = pairs
+      .select(least(col("doc_a"), col("doc_b")).as("u"),
+        greatest(col("doc_a"), col("doc_b")).as("v"))
       .distinct().localCheckpoint()
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("component", col("doc_id")).persist()
+    val loops = canon.filter(col("u") === col("v"))
+    var edges = canon
+    var n = edges.count()
     var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
-      val neighborMin = edges
-        .join(labels.select(col("doc_id").as("dst"), col("component").as("ncomp")), Seq("dst"))
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("ncomp")).as("nmin"))
-      // the convergence flag rides the round's own projection (r17):
-      // moved ⇔ the neighbor minimum beat the current label, so the
-      // changed-row count is a filter over `next` itself — the old
-      // formulation re-joined next against labels corpus-wide every
-      // round purely to detect the fixpoint (guide §2.4: don't compute
-      // what a carried column already knows)
-      val next0 = labels
-        .join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"),
-          (coalesce(col("nmin"), col("component")) < col("component")).as("moved"))
-      val next =
-        if ((iter + 1) % checkpointEvery == 0) next0.localCheckpoint()
-        else next0.persist()
-      val changed = next.filter(col("moved")).count()
-      labels.unpersist()
-      labels = next
-      done = changed == 0
-      iter += 1
+    var fixpoint = false
+    def release(): Unit = { dropCheckpoint(edges); dropCheckpoint(canon) }
+    while (n > localCap && !fixpoint) {
+      if (iter == maxIters) {
+        release()
+        throw new IllegalStateException(
+          s"dupComponents did not converge in $maxIters rounds; " +
+            "component labels would be wrong — raise maxIters")
+      }
+      val next = starRound(edges.filter(col("u") =!= col("v")))
+        .union(loops).localCheckpoint()
+      val m = next.count()
+      fixpoint = m == n && next.except(edges).isEmpty
+      if (edges ne canon) dropCheckpoint(edges)
+      edges = next; n = m; iter += 1
     }
-    // Exiting with changed > 0 means some labels never reached their
-    // component minimum — downstream dedup would keep multiple survivors
-    // per duplicate cluster. Fail loudly rather than return silently-wrong
-    // components: a dup-chain with diameter > maxIters indicates either a
-    // pathological corpus or a too-small cap (raise it, or switch to
-    // large-star/small-star contraction which converges in O(log n)).
-    if (!done) {
-      // free the cached blocks before failing — a library caller catching
-      // this must not inherit leaked edges/labels blocks
-      labels.unpersist(); edges.unpersist()
-      throw new IllegalStateException(
-        s"dupComponents did not converge in $maxIters iterations; " +
-          "component labels would be wrong — raise maxIters")
-    }
-    // Final checkpoint BEFORE dropping edges: consumers get a leaf-only
-    // plan (no per-round join lineage at all), and since localCheckpoint
-    // truncates lineage the result must be materialized while the blocks
-    // it derives from still exist. Only then is it safe to free the
-    // intermediates.
-    val out = labels.select(col("doc_id"), col("component")).localCheckpoint()
-    labels.unpersist()
-    edges.unpersist()
-    // observability breadcrumb (read by ComponentScaleBench and available
-    // to any caller diagnosing convergence): how many rounds this run took
-    pairs.sparkSession.conf.set("spark.graft.componentRounds", iter.toString)
+    val out =
+      if (n <= localCap)
+        unionFindLabels(pairs.sparkSession, canon.schema("u").dataType, edges.collect())
+      else {
+        val nodes = canon.select(col("u").as("doc_id"))
+          .union(canon.select(col("v").as("doc_id"))).distinct()
+        nodes.join(edges.filter(col("u") =!= col("v"))
+            .select(col("u").as("doc_id"), col("v").as("c")), Seq("doc_id"), "left")
+          .select(col("doc_id"), coalesce(col("c"), col("doc_id")).as("component"))
+          .localCheckpoint()
+      }
+    release()
     out
   }
 
-  /** Connected components via alternating large-star / small-star
-    * contraction — the O(log²) ROUND bound that survives pathological
-    * diameters, vs `dupComponents`' diameter-round min-label propagation
-    * (after "Connected Components in MapReduce and Beyond", Kiveris et
-    * al., SoCC'14 — public algorithm, re-expressed as DataFrame ops).
-    * Near-dup clusters are normally small and dense (diameter-round is
-    * fine, and cheaper per round); this is the variant to reach for when
-    * a template family chains thousands of docs into one long path —
-    * e.g. a boilerplate page mutated once per crawl snapshot.
+  /** Frees a `localCheckpoint`ed frame's blocks. `Dataset.unpersist` only
+    * uncaches plans registered with the cache manager, so on a checkpoint
+    * it is a no-op; the blocks belong to the RDD under its LogicalRDD leaf.
+    */
+  private def dropCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
+  /** One large-star + small-star contraction round over a non-self edge
+    * set (u, v); returns the contracted non-self edge set, distinct.
     *
     *  - large-star: every node connects its LARGER neighbors to the min
     *    of its neighborhood (incl. itself) — long chains fold toward
@@ -1520,104 +1508,64 @@ object DedupOps {
     *  - small-star: over the (larger → smaller) canonical direction,
     *    every node re-points its smaller-or-equal neighbors (and itself)
     *    at that min — flattening partial trees into stars.
-    *
-    * Each round is two groupBy-min + join passes over the current edge
-    * set (which only shrinks), localCheckpoint'ed per round to keep the
-    * plan leaf-bounded. Fixed point = edge set unchanged (exact
-    * `except`-based check, no checksum shortcut: a false convergence
-    * would silently merge/split clusters). At the fixed point every edge
-    * is (node → its component min); singletons and self-pairs label
-    * themselves, matching `dupComponents` exactly.
     */
-  def dupComponentsStar(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    val nodes = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct().localCheckpoint()
-    var edges = pairs
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct().localCheckpoint()
-    var iter = 0
-    var done = edges.isEmpty
-    while (!done && iter < maxIters) {
-      // large-star over the symmetric edge view
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = sym.join(mins, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      // small-star over the canonical (larger → smaller) direction
-      val canon = large.select(
-        greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-        .distinct()
-      val mins2 = canon.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val next = canon.join(mins2, Seq("u"))
-        .select(explode(array(
-          struct(col("v").as("a"), col("m").as("b")),
-          struct(col("u").as("a"), col("m").as("b")))).as("e"))
-        .select(col("e.a").as("u"), col("e.b").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint()
-      done = next.count() == edges.count() && next.except(edges).isEmpty
-      edges.unpersist()
-      edges = next
-      iter += 1
-    }
-    if (!done) {
-      // same cached-block discipline as dupComponents' failure path
-      edges.unpersist(); nodes.unpersist()
-      throw new IllegalStateException(
-        s"dupComponentsStar did not converge in $maxIters rounds; " +
-          "component labels would be wrong — raise maxIters")
-    }
-    // at the fixed point every edge is (doc → component min); nodes that
-    // no longer appear (roots, singletons, self-pairs) label themselves
-    val labels = nodes.join(edges.select(col("u").as("doc_id"), col("v").as("c")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("c"), col("doc_id")).as("component"))
-    val out = labels.localCheckpoint()
-    edges.unpersist(); nodes.unpersist()
-    pairs.sparkSession.conf.set("spark.graft.componentRounds", iter.toString)
-    out
+  private def starRound(edges: DataFrame): DataFrame = {
+    val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+    val mins = sym.groupBy("u").agg(min("v").as("mn"))
+      .select(col("u"), least(col("u"), col("mn")).as("m"))
+    val large = sym.join(mins, Seq("u"))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+    val canon = large.select(
+      greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+      .distinct()
+    val mins2 = canon.groupBy("u").agg(min("v").as("mn"))
+      .select(col("u"), least(col("u"), col("mn")).as("m"))
+    canon.join(mins2, Seq("u"))
+      .select(explode(array(
+        struct(col("v").as("a"), col("m").as("b")),
+        struct(col("u").as("a"), col("m").as("b")))).as("e"))
+      .select(col("e.a").as("u"), col("e.b").as("v"))
+      .filter(col("u") =!= col("v")).distinct()
   }
 
-  /** Connected components for BROADCAST-SCALE graphs — the third tier
-    * next to [[dupComponents]] (diameter rounds) and [[dupComponentsStar]]
-    * (O(log²) rounds): a driver-side union-find over a collected edge
-    * list, with exactly [[dupComponents]]' labeling (every node in ≥1
-    * pair labeled with its component's minimum id).
+  /** Connected components for BROADCAST-SCALE graphs: a driver-side
+    * union-find over a collected edge list, with exactly
+    * [[dupComponents]]' labeling (every node in ≥1 pair labeled with its
+    * component's minimum id).
     *
     * When to use it: a VALUE-level graph — a string column's distinct
     * values, an entity vocabulary — is bounded by vocabulary, not corpus
     * (EntityOps' scale note: names/brands/cities grow sublinearly in
-    * rows). For such graphs the distributed collapse pays ≥6 Spark jobs
-    * per round × graph diameter of pure scheduling fixed cost (~5 s at
-    * any data size — r14's fuzzy_canonicalize regression was exactly
-    * this, amplified by suite state), while the edge list itself is KBs.
-    * This is the same bounded-and-documented driver-side class as the
-    * BPE/WordPiece merge-table collects: the collect is HARD-CAPPED at
-    * `maxEdges` (limit + require, so a corpus-scale graph fails loudly
-    * with a pointer to the distributed tiers instead of OOMing the
-    * driver), and the result re-enters the cluster as a broadcast-scale
-    * frame.
+    * rows). The collect is HARD-CAPPED at `maxEdges` (limit + require,
+    * so a graph past the cap fails loudly instead of OOMing the driver
+    * or quietly turning distributed), and the result re-enters the
+    * cluster as a broadcast-scale frame. Corpus graphs go through
+    * [[dupComponents]], which ends in the same union-find once its
+    * residual fits.
     */
   def dupComponentsLocal(pairs: DataFrame, maxEdges: Int = 1 << 20): DataFrame = {
-    val sp = pairs.sparkSession
-    val idType = pairs.schema("doc_a").dataType
     val edges = pairs.select(col("doc_a"), col("doc_b"))
       .limit(maxEdges + 1).collect()
     require(edges.length <= maxEdges,
       s"dupComponentsLocal: graph exceeds $maxEdges edges — this tier is " +
-        "for broadcast-scale value graphs; use dupComponents/" +
-        "dupComponentsStar for corpus-scale graphs")
+        "for broadcast-scale value graphs; use dupComponents for " +
+        "corpus-scale graphs")
+    unionFindLabels(pairs.sparkSession, pairs.schema("doc_a").dataType, edges)
+  }
+
+  /** (doc_id, component) for every endpoint of `edges` (two-column rows
+    * of `idType`), component = min id of its connected component.
+    */
+  private def unionFindLabels(sp: SparkSession, idType: DataType,
+                              edges: Array[Row]): DataFrame = {
     val ord: Ordering[Any] = idType match {
       case StringType => Ordering.by(_.asInstanceOf[String])
       case LongType => Ordering.by(_.asInstanceOf[Long])
       case IntegerType => Ordering.by(_.asInstanceOf[Int])
       case other => throw new IllegalArgumentException(
-        s"dupComponentsLocal: unsupported id type $other")
+        s"unsupported component id type $other")
     }
     // classic union-find with path halving + size union; label = min id
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
@@ -1649,7 +1597,7 @@ object DedupOps {
       StructField("doc_id", idType), StructField("component", idType)))
     import scala.jdk.CollectionConverters._
     sp.createDataFrame(
-      label.map { case (n, c) => org.apache.spark.sql.Row(n, c) }.toSeq.asJava,
+      label.map { case (n, c) => Row(n, c) }.toSeq.asJava,
       schema)
   }
 
@@ -1662,7 +1610,7 @@ object DedupOps {
     * persistence at all: map each delta pair's old endpoint to its old
     * component label (labels are component minima, so supernode ids ARE
     * the candidate minima), collapse the contracted delta graph with
-    * the size-branched tier, and relabel — merged groups take the min
+    * [[dupComponents]], and relabel — merged groups take the min
     * over contracted node ids, which is exactly the grown component's
     * global min. Untouched components keep their labels by a left-join
     * miss; delta docs and previously-unpaired old docs enter through
@@ -1693,7 +1641,7 @@ object DedupOps {
       .select(coalesce(col("ca"), col("doc_a")).as("doc_a"),
         coalesce(col("cb"), col("doc_b")).as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b"))
-    val superMap = dupComponentsAuto(mapped)
+    val superMap = dupComponents(mapped)
       .select(col("doc_id").as("snode"), col("component").as("newc"))
       .localCheckpoint()
     val oldFinal = oldLabels
@@ -1750,29 +1698,7 @@ object DedupOps {
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
     untouched.unionByName(
-      dupComponentsAuto(pairs).select(col("doc_id"), col("component")))
-  }
-
-  /** Component tier picked by MEASURED graph size: edge lists at or
-    * under `localCap` take the driver-side union-find (zero iterative
-    * scheduling cost), larger ones take the distributed min-label
-    * collapse. The one count action runs on an eagerly checkpointed
-    * frame, so the edges compute once regardless of tier. This is the
-    * right default for DELTA-shaped callers ([[dupEvidenceBaseDelta]]'s
-    * rebuild region): a daily append's touched region is normally
-    * delta-bounded (local tier), but a template flood can touch a
-    * corpus-scale component — the branch keeps that case on the
-    * distributed path instead of failing the local cap.
-    */
-  def dupComponentsAuto(pairs: DataFrame, localCap: Int = 1 << 20): DataFrame = {
-    // explicit aliases mint fresh attribute ids: a bare re-projection
-    // directly atop a Union whose children share upstream attributes
-    // trips Catalyst's union constraint rewrite (key-not-found during
-    // analysis) on Spark 4.1 — aliasing sidesteps the rewrite
-    val p = pairs.select(col("doc_a").as("doc_a"), col("doc_b").as("doc_b"))
-      .localCheckpoint()
-    if (p.count() <= localCap) dupComponentsLocal(p, localCap)
-    else dupComponents(p)
+      dupComponents(pairs).select(col("doc_id"), col("component")))
   }
 
   /** Within-bucket ordered struct pairs (carries payload fields through,
@@ -1864,7 +1790,8 @@ object DedupOps {
     * min(doc_id)).
     */
   def segmentDedupBy(documents: DataFrame, segmentsSql: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.expressions.Window
     val segs = documents.select(
       col("doc_id"), posexplode(expr(segmentsSql)).as(Seq("seg_idx", "segment")))
     val w = Window.partitionBy(md5(col("segment"))).orderBy(col("doc_id"), col("seg_idx"))

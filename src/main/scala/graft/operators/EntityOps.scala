@@ -189,13 +189,13 @@ object EntityOps {
     * The component step runs on the distinct-value graph, which is
     * broadcast scale by the vocabulary argument in the object scaladoc —
     * so it uses `DedupOps.dupComponentsLocal` (hard-capped driver-side
-    * union-find), not the iterative distributed collapse: the match
-    * graph is KBs of edges, and `dupComponents`' per-round fixed cost
-    * (≥6 scheduled jobs × graph diameter) was this operator's entire
-    * wall time (the r14 bench regression — 5.2 s standalone of which
-    * ~4.9 s was collapse scheduling on a sub-10⁴-edge graph). The
-    * row-level assignment is one broadcast join, as before; semantics
-    * are unchanged (same min-label components, oracle shared).
+    * union-find): the match graph is KBs of edges, and a graph past the
+    * cap fails loudly here rather than turning distributed. The r14
+    * bench regression was a distributed collapse on this path — 5.2 s
+    * standalone of which ~4.9 s was per-round scheduling on a
+    * sub-10⁴-edge graph. The row-level assignment is one broadcast
+    * join, as before; semantics are unchanged (same min-id components,
+    * oracle shared).
     */
   def fuzzyCanonicalize(df: DataFrame, valueCol: String, maxDist: Int = 3): DataFrame = {
     val pairs = fuzzyNameMatch(df, valueCol, maxDist)

@@ -32,7 +32,7 @@ object GraphOps {
     * round is one co-partitioned join on src plus one partial-agg
     * shuffle on dst — the textbook distributed PageRank step with no
     * driver-side state. `localCheckpoint` every 4 rounds bounds lineage
-    * the same way the min-label collapse does; ranks are narrow
+    * the way `dupComponents`' per-round checkpoint does; ranks are narrow
     * (node, long) rows throughout.
     */
   def pagerankMicros(edges: DataFrame, iterations: Int = 8): DataFrame = {
@@ -165,9 +165,10 @@ object GraphOps {
     * replays round-for-round in the oracle. A round past convergence is
     * the identity (nothing left under the floor), so extra rounds are
     * harmless; a pathological peel sequence (a long chain peeling one end
-    * per round) needs rounds ≈ diameter — the same trade `dupComponents`
-    * documents, with the same escape hatch (raise rounds; each costs one
-    * join round, not a corpus pass). Output: surviving nodes with their
+    * per round) needs rounds ≈ diameter, the trade min-label propagation
+    * makes (`dupComponents` avoids it with star contraction); the escape
+    * hatch is to raise rounds — each costs one join round, not a corpus
+    * pass. Output: surviving nodes with their
     * degree INSIDE the core (≥ k by construction).
     */
   def kCore(pairs: DataFrame, k: Int = 2, rounds: Int = 8): DataFrame = {

@@ -834,24 +834,6 @@ object SimilarityOps {
     topKSelect(scored, Seq("q_id"), k)
   }
 
-  /** Brute-force top-k over the int8-quantized corpus — `cosineTopK` with
-    * 4-8× less data per scored row. Same broadcast/window shape; the scores
-    * are the quantized approximation (oracled exactly, since the
-    * quantizer is bit-portable). At scale, follow with a full-precision
-    * rescore of the top candidates if exact ordering matters.
-    *
-    * The quantized frame is `persist()`ed — cache lifecycle CALLER-owned,
-    * the engine-wide convention (`ann_recall`, trained IVF). Not an
-    * optimization nicety: the r9 int8 ladder (SCALE.md, "r8: ANN scaling
-    * exponents") measured that without a materialization barrier,
-    * whole-stage codegen inlines the interpreted-HOF quantize expression
-    * into the broadcast join's inner loop — once per SCORED PAIR, not
-    * once per corpus row (×100: 3.38 s vs 0.57 quantize + 0.71 score in
-    * isolation) — and that per-pair term was the entire ×100 exponent
-    * (0.54) of this tier. Quantize-once is also the semantic at any real scale: the
-    * quantized corpus is the artifact, scored by many query batches
-    * (`cosineTopKInt8Stored` is the same statement at rest).
-    */
   /** FILTERED top-k retrieval — the metadata-constrained search every
     * production vector store serves ("nearest neighbors WHERE label =
     * q.label"): each query ranks only corpus vectors sharing its label.
@@ -879,6 +861,24 @@ object SimilarityOps {
       .withColumnRenamed("q_label", "label")
   }
 
+  /** Brute-force top-k over the int8-quantized corpus — `cosineTopK` with
+    * 4-8× less data per scored row. Same broadcast/window shape; the scores
+    * are the quantized approximation (oracled exactly, since the
+    * quantizer is bit-portable). At scale, follow with a full-precision
+    * rescore of the top candidates if exact ordering matters.
+    *
+    * The quantized frame is `persist()`ed — cache lifecycle CALLER-owned,
+    * the engine-wide convention (`ann_recall`, trained IVF). Not an
+    * optimization nicety: the r9 int8 ladder (SCALE.md, "r8: ANN scaling
+    * exponents") measured that without a materialization barrier,
+    * whole-stage codegen inlines the interpreted-HOF quantize expression
+    * into the broadcast join's inner loop — once per SCORED PAIR, not
+    * once per corpus row (×100: 3.38 s vs 0.57 quantize + 0.71 score in
+    * isolation) — and that per-pair term was the entire ×100 exponent
+    * (0.54) of this tier. Quantize-once is also the semantic at any real scale: the
+    * quantized corpus is the artifact, scored by many query batches
+    * (`cosineTopKInt8Stored` is the same statement at rest).
+    */
   def cosineTopKInt8(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame =
     topKOverQuantized(quantizeInt8(embeddings).persist(), nQueries, k)
 

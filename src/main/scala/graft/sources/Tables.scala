@@ -38,14 +38,6 @@ object Tables {
 
   // --- Reference canonical schemas (SURVEY.md §1.3, FIXTURES.md §A) ---
 
-  /** raw.financial_data — /root/reference/sql/init_db.sql:1-5.
-    * `value` is deliberately TEXT; staging casts it (SURVEY.md §7.3.1).
-    */
-  val rawFinancialDataSchema: StructType = StructType(Seq(
-    StructField("series_id", StringType),
-    StructField("observation_date", DateType),
-    StructField("value", StringType)))
-
   /** raw_financial_data — reference README.md:253-266 (company fundamentals,
     * wide). NUMERIC(18,2) → DecimalType(18,2) for finance-report fidelity.
     */

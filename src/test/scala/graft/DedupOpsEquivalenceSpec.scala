@@ -98,10 +98,14 @@ class DedupOpsEquivalenceSpec extends SparkSpec {
       ("y", "z"), ("x", "z"), ("q", "r")).toDF("doc_a", "doc_b")
     assert(rows(DedupOps.dupComponentsLocal(sPairs)) ==
            rows(DedupOps.dupComponents(sPairs)))
+    assert(rows(DedupOps.dupComponentsLocal(sPairs)) ==
+           rows(DedupOps.dupComponents(sPairs, localCap = 0)))
     val lPairs = Seq((2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("doc_a", "doc_b")
     assert(rows(DedupOps.dupComponentsLocal(lPairs)) ==
            rows(DedupOps.dupComponents(lPairs)))
+    assert(rows(DedupOps.dupComponentsLocal(lPairs)) ==
+           rows(DedupOps.dupComponents(lPairs, localCap = 0)))
     val e = intercept[IllegalArgumentException] {
       DedupOps.dupComponentsLocal(lPairs, maxEdges = 3)
     }

@@ -371,23 +371,26 @@ class DedupTextOpsSpec extends SparkSpec {
   }
 
   test("dupComponents: periodic localCheckpoint bounds plan growth on deep chains") {
-    // path 1-2-...-13: diameter 12, so min-label propagation runs 12 rounds
-    // (plus one no-change round). Without the checkpoint the returned plan
-    // would embed all rounds of join/aggregate lineage; with
-    // checkpointEvery=5 it bottoms out in a scan of materialized blocks at
-    // most 4 rounds back.
+    // path 1-2-...-13 under localCap = 0: every round runs distributed, and
+    // without the per-round checkpoint the returned plan would embed all
+    // rounds of join/aggregate lineage; with it the labels bottom out in a
+    // scan of materialized blocks
     val chain = (1L until 13L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = DedupOps.dupComponents(chain, maxIters = 20, checkpointEvery = 5)
+    val labels = DedupOps.dupComponents(chain, maxIters = 20, localCap = 0)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (1L to 13L).map(_ -> 1L).toMap)
     // lineage truncated: a checkpointed leaf (LogicalRDD/ExistingRDD) is
     // present, and the analyzed plan stays small — a fixed bound that the
-    // 12-round unbounded lineage (hundreds of nodes) cannot meet
+    // unbounded multi-round lineage (hundreds of nodes) cannot meet
+    def nodes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.numberedTreeString.linesIterator.size
     val plan = labels.queryExecution.analyzed
     assert(plan.collectLeaves().exists(_.getClass.getSimpleName.startsWith("LogicalRDD")),
       s"expected a checkpoint scan leaf in:\n${plan.numberedTreeString}")
-    val nNodes = plan.numberedTreeString.linesIterator.size
-    assert(nNodes < 40, s"plan should stay bounded by the checkpoint cadence, got $nNodes nodes")
+    assert(nodes(labels) < 40, s"plan should stay bounded by the checkpoint cadence, got ${nodes(labels)} nodes")
+    // at the default cap the chain finishes on the driver: a local relation
+    val local = DedupOps.dupComponents(chain)
+    assert(nodes(local) < 40, s"driver-finished plan should be small, got ${nodes(local)} nodes")
   }
 
   test("screenDeltaAgainstCorpus: exact tier, near tier, within-delta dedup, short-doc floor") {
@@ -412,7 +415,9 @@ class DedupTextOpsSpec extends SparkSpec {
     assert(collide.count() >= 1, "fixture must produce a band collision for the near-dup")
   }
 
-  test("dupComponentsStar equals dupComponents on random graphs (seeded)") {
+  test("dupComponents: star rounds equal the driver finish on random graphs (seeded)") {
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (seed <- Seq(1, 2, 3)) {
       val rnd = new scala.util.Random(seed)
       // 120 nodes, 150 random edges: a mix of small components, cycles,
@@ -420,28 +425,41 @@ class DedupTextOpsSpec extends SparkSpec {
       val pairs = ((1 to 150).map { _ =>
         (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong)
       } :+ ((7L, 7L))).toDF("doc_a", "doc_b")
-      val minLabel = DedupOps.dupComponents(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val star = DedupOps.dupComponentsStar(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == minLabel, s"seed $seed")
+      // the two halves are each other's reference: default cap = driver
+      // union-find at once, 0 = star rounds to the fixed point, 40 = star
+      // rounds until the residual fits, then the driver finish
+      val driver = labels(DedupOps.dupComponents(pairs))
+      assert(labels(DedupOps.dupComponents(pairs, localCap = 0)) == driver, s"seed $seed")
+      assert(labels(DedupOps.dupComponents(pairs, localCap = 40)) == driver, s"seed $seed, cap 40")
     }
   }
 
-  test("dupComponentsStar: 400-node path converges in far fewer rounds than its diameter") {
-    // min-label propagation needs diameter rounds (399 here, > its cap);
-    // star contraction folds the chain in O(log n) — 15 rounds is generous
+  test("dupComponents: 400-node path contracts in far fewer star rounds than its diameter") {
+    // min-label propagation would need diameter rounds (399 here); star
+    // contraction folds the chain in O(log n) — 15 rounds is generous
     val chain = (1L until 400L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = DedupOps.dupComponentsStar(chain, maxIters = 15)
+    val got = DedupOps.dupComponents(chain, maxIters = 15, localCap = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == (1L to 400L).map(_ -> 1L).toMap)
   }
 
   test("dupComponents: throws rather than returning non-converged labels") {
-    // a 5-node path needs >1 min-label round; maxIters = 1 must fail loudly
+    // a 5-node path needs >1 star round; maxIters = 1 must fail loudly
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("doc_a", "doc_b")
-    val e = intercept[IllegalStateException](DedupOps.dupComponents(chain, maxIters = 1))
+    val e = intercept[IllegalStateException](
+      DedupOps.dupComponents(chain, maxIters = 1, localCap = 0))
     assert(e.getMessage.contains("did not converge"))
+  }
+
+  test("dupComponents: a non-converged run releases every block it cached") {
+    // compared by id, not count: the context cleaner may free blocks
+    // other tests left behind while this one runs
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalStateException](
+      DedupOps.dupComponents(chain, maxIters = 1, localCap = 0))
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"blocks still cached: $left")
   }
 
   test("simhash: identical docs equal; near-dups within small hamming distance") {

@@ -132,9 +132,10 @@ class EdgeCasesSpec extends SparkSpec {
     val banded = RelationalOps.asOfJoinBanded(left, right, Seq("k"), "ts", Seq("v"),
       c => date_trunc("day", c)).collect()
     assert(banded.length == 1 && banded(0).isNullAt(banded(0).fieldIndex("asof_v")))
-    // star contraction on empty pairs
+    // components of empty pairs at both caps (an empty residual fits even 0)
     val emptyPairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    assert(DedupOps.dupComponentsStar(emptyPairs).count() == 0)
+    assert(DedupOps.dupComponents(emptyPairs).count() == 0)
+    assert(DedupOps.dupComponents(emptyPairs, localCap = 0).count() == 0)
     // incremental screen: empty delta → empty; empty corpus → delta passes
     val docs = Seq((1L, "the quick brown fox jumps over the lazy old dog")).toDF("doc_id", "text")
     val emptyDelta = Seq.empty[(Long, String)].toDF("doc_id", "text")

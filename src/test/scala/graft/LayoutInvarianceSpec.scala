@@ -20,6 +20,9 @@ class LayoutInvarianceSpec extends SparkSpec {
   private val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "dupComponents(minhashCandidatePairs)" -> ((s, d) =>
       DedupOps.dupComponents(DedupOps.minhashCandidatePairs(Tables.load(s, d, "documents")))),
+    "dupComponents(minhashCandidatePairs, localCap = 0)" -> ((s, d) =>
+      DedupOps.dupComponents(DedupOps.minhashCandidatePairs(Tables.load(s, d, "documents")),
+        localCap = 0)),
     "runCorpusPipelineFull" -> ((s, d) =>
       Pipelines.runCorpusPipelineFull(Tables.load(s, d, "documents"))))
 

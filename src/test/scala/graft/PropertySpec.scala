@@ -102,13 +102,13 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("dupComponentsStar is invariant under pair order and partitioning; labels are fixpoints") {
+  test("dupComponents star rounds are invariant under pair order and partitioning; labels are fixpoints") {
     val pairGen = Gen.listOfN(10,
       for { a <- Gen.chooseNum(1L, 14L); b <- Gen.chooseNum(1L, 14L) } yield (a, b))
     for (pairs <- samples(pairGen, 3) if pairs.nonEmpty) {
       val df = pairs.toDF("doc_a", "doc_b")
       def comps(d: org.apache.spark.sql.DataFrame) =
-        DedupOps.dupComponentsStar(d).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        DedupOps.dupComponents(d, localCap = 0).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val base = comps(df)
       assert(base == comps(df.orderBy(desc("doc_b")).repartition(5)))
       assert(base.forall { case (_, c) => base(c) == c })
