@@ -56,8 +56,10 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       } finally {
         // queries that persist sub-frames (ann_recall, trained IVF) hand
-        // cache lifecycle to the caller: drop blocks even on failure so
-        // runs are independent and cached data can't accumulate
+        // cache lifecycle to the caller: drop them even on failure so
+        // runs are independent and cached frames can't accumulate.
+        // localCheckpoint blocks are not in the cache manager; they stay
+        // until the context cleaner collects their RDD
         spark.catalog.clearCache()
       }
     }

@@ -188,7 +188,8 @@ object Pipelines {
     // four downstream branches (three filter families + the final join)
     // each consume survivors — persist it once so the dedup chain (incl.
     // the iterative collapse) doesn't replay per branch. Cache lifecycle
-    // belongs to the caller (Verify/Bench clearCache between queries).
+    // belongs to the caller (Verify/Bench clearCache between queries
+    // frees this persist; it would not free a localCheckpoint).
     // The TOKENIZED staging column is materialized into the persisted
     // frame: quality + Gopher + repetition all consume `toks`, so the
     // tokenizer regex runs once per surviving row total, not once per

@@ -100,8 +100,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
         // queries that persist sub-frames hand cache lifecycle to the
-        // caller — drop blocks even on failure so a throwing query can't
-        // leak cached blocks into every subsequent dump
+        // caller — drop them even on failure so a throwing query can't
+        // leak cached frames into every subsequent dump. clearCache only
+        // reaches persist()ed frames: a localCheckpoint's blocks belong to
+        // the RDD under its LogicalRDD leaf and stay until the context
+        // cleaner collects that RDD
         spark.catalog.clearCache()
       }
     }

@@ -537,6 +537,97 @@ object SimilarityOps {
       .write.mode("append").partitionBy("centroid_id").parquet(s"$dir/lists")
   }
 
+  /** The drift audits' per-factor runner. `body(f, corpus)` builds factor
+    * `f`'s one-row result over `corpusOf(f)`, which the runner persists
+    * for the body's duration and unpersists when the body returns or
+    * throws. Factors run concurrently, one driver thread each from a pool
+    * that lives for this call: every body is a chain of small eager jobs
+    * over its own corpus slice, independent of its siblings, so
+    * submitting them together lets the scheduler overlap their stages on
+    * idle cores (r17: ivf_delete 1.17×, ivf_append 1.16× over the serial
+    * loop), and per-factor results do not depend on the
+    * interleaving. All of the call's jobs run in one job group: the first
+    * body to throw cancels the group, including jobs a sibling submits
+    * later, and the runner waits for every sibling to settle before it
+    * rethrows that first error. Rows come back in factor order, unioned,
+    * and are not materialized here — a lazy row is computed by the
+    * caller's consuming action.
+    */
+  private[graft] def factorSweep(factors: Seq[Int], corpusOf: Int => DataFrame)(
+      body: (Int, DataFrame) => DataFrame): DataFrame = {
+    require(factors.nonEmpty, "factorSweep needs at least one factor")
+    val corpora = factors.map(corpusOf)
+    val sc = corpora.head.sparkSession.sparkContext
+    val group = s"factorSweep-${java.util.UUID.randomUUID()}"
+    val firstError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(factors.size)
+    try {
+      val pending = factors.zip(corpora).map { case (f, corpus) =>
+        pool.submit(new java.util.concurrent.Callable[DataFrame] {
+          def call(): DataFrame = try {
+            sc.setJobGroup(group, s"drift factor $f")
+            body(f, corpus.persist())
+          } catch { case e: Throwable =>
+            if (firstError.compareAndSet(null, e)) sc.cancelJobGroupAndFutureJobs(group)
+            throw e
+          } finally corpus.unpersist()
+        })
+      }
+      val rows = pending.map(p => scala.util.Try(p.get()))
+      Option(firstError.get()).foreach(e => throw e)
+      rows.map(_.get).reduce(_.unionAll(_))
+    } finally pool.shutdown()
+  }
+
+  /** Recall@k counts of one or more hit sets against one brute top-k, as
+    * ONE row: each arm's `hits` under its own column name, then `tot`
+    * (the brute row count). Arms are (q_id, vec_id) frames; the first
+    * arm's aggregate carries `tot` and every further arm's 1-row
+    * aggregate rides a broadcast cross join.
+    */
+  private def recallCounts(brute: DataFrame, arms: (String, DataFrame)*): DataFrame = {
+    def counts(hits: DataFrame): DataFrame =
+      brute.join(hits.select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L)),
+          Seq("q_id", "vec_id"), "left")
+        .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"), count(lit(1)).as("tot"))
+    val (h0, hits0) = arms.head
+    arms.tail.foldLeft(counts(hits0).select(col("hits").as(h0), col("tot"))) {
+      case (row, (h, hits)) => row.crossJoin(broadcast(counts(hits).select(col("hits").as(h))))
+    }
+  }
+
+  /** Hit count `h` over `tot` in parts per million, rounded half up — the
+    * drift audits' one recall rule (exact BIGINT arithmetic, so the
+    * DuckDB oracles replay it bit for bit).
+    */
+  private def ppm(h: String): Column = expr(s"($h * 1000000 + tot div 2) div tot")
+
+  /** One IVF drift row: the `lead` columns, then recall@k of the stale
+    * centroids `cStale` and of a fresh retrain on `corpus` (both assigned
+    * and probed over `corpus`, against its brute top-k) and drift_ppm =
+    * fresh − stale. The eager localCheckpoint forces the 1-row aggregate
+    * NOW, so the fresh centroids and the factor's corpus cache can be
+    * dropped before the next factor grows its own copy — without it the
+    * cached corpora (the largest = the full frame) pile up for the
+    * session's lifetime (r12 advice).
+    */
+  private def ivfDriftRow(lead: Seq[Column], corpus: DataFrame, cStale: DataFrame,
+                          nCentroids: Int, iters: Int, nQueries: Int, k: Int,
+                          nProbe: Int): DataFrame = {
+    val brute = cosineTopK(corpus, nQueries, k).select(col("q_id"), col("vec_id"))
+    val queries = corpus.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    def hits(c: DataFrame): DataFrame =
+      ivfTopKOverLists(ivfAssignWith(corpus, c), c, queries, k, nProbe)
+    val cFresh = ivfTrainCentroids(corpus, nCentroids, iters)
+    try recallCounts(brute, "h_stale" -> hits(cStale), "h_fresh" -> hits(cFresh))
+      .select(lead ++ Seq(ppm("h_stale").as("recall_stale_ppm"),
+        ppm("h_fresh").as("recall_fresh_ppm"),
+        (ppm("h_fresh") - ppm("h_stale")).as("drift_ppm")): _*)
+      .localCheckpoint()
+    finally cFresh.unpersist()
+  }
+
   /** Recall decay of an UNRETRAINED IVF index under appends — the
     * measurement [[appendToIvfIndex]]'s doc promises as "operational
     * policy layered on the mechanism", now a gated value: centroids train
@@ -549,6 +640,8 @@ object SimilarityOps {
     * number the rebuild threshold reads: retrain when it exceeds the
     * recall budget. Base/growth slices are vec_id prefixes (deterministic;
     * the synthetic ids are dense), sized from one driver-side count.
+    * Releases every centroid frame it trains; a `prebuiltStale` frame
+    * stays the caller's.
     */
   def ivfAppendDrift(embeddings: DataFrame, factors: Seq[Int] = Seq(1, 5, 10),
                      nCentroids: Int = 16, iters: Int = 2,
@@ -562,48 +655,12 @@ object SimilarityOps {
     // re-running the Lloyd train per call; the default still trains
     // inline for standalone callers and specs
     val cStale = prebuiltStale.getOrElse(ivfTrainCentroids(base, nCentroids, iters))
-    // concurrent factor pipelines (r17): each factor's work is one eager
-    // row-checkpoint job chain over its own corpus slice — the factors
-    // are independent, so submitting them from driver threads lets the
-    // scheduler overlap their stages on idle cores, exactly the pattern
-    // the graph drift audits already use (guide §2.6 overlap independent
-    // jobs). Per-factor results are scheduling-independent; order is
-    // preserved by Future.sequence.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val rows = Await.result(Future.sequence(factors.map { f => Future {
-      val corpus = embeddings.filter(col("vec_id") < nb * (1 + f)).persist()
-      val brute = cosineTopK(corpus, nQueries, k).select(col("q_id"), col("vec_id"))
-      val queries = corpus.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      def recallOf(c: DataFrame): DataFrame = {
-        val hits = ivfTopKOverLists(ivfAssignWith(corpus, c), c, queries, k, nProbe)
-          .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
-        brute.join(hits, Seq("q_id", "vec_id"), "left")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-            count(lit(1)).as("tot"))
-      }
-      val cFresh = ivfTrainCentroids(corpus, nCentroids, iters)
-      // eager localCheckpoint forces the 1-row aggregate NOW so the
-      // per-factor corpus cache can be dropped before the next factor
-      // grows its own copy — without it the three cached corpora (the
-      // largest = the full frame) pile up for the session's lifetime
-      // (r12 advice)
-      val row = recallOf(cStale).select(col("hits").as("h_stale"), col("tot"))
-        .crossJoin(broadcast(recallOf(cFresh).select(col("hits").as("h_fresh"))))
-        .select(lit(f.toLong).as("append_factor"),
-          lit(nb).as("n_base"),
-          lit(nb * (1 + f)).as("n_corpus"),
-          expr("(h_stale * 1000000 + tot div 2) div tot").as("recall_stale_ppm"),
-          expr("(h_fresh * 1000000 + tot div 2) div tot").as("recall_fresh_ppm"),
-          expr("""(h_fresh * 1000000 + tot div 2) div tot
-            | - (h_stale * 1000000 + tot div 2) div tot""".stripMargin)
-            .as("drift_ppm"))
-        .localCheckpoint()
-      corpus.unpersist()
-      row
-    }}), scala.concurrent.duration.Duration.Inf)
-    rows.reduce(_.unionAll(_))
+    try factorSweep(factors, f => embeddings.filter(col("vec_id") < nb * (1 + f))) {
+      (f, corpus) =>
+        ivfDriftRow(Seq(lit(f.toLong).as("append_factor"), lit(nb).as("n_base"),
+          lit(nb * (1 + f)).as("n_corpus")),
+          corpus, cStale, nCentroids, iters, nQueries, k, nProbe)
+    } finally if (prebuiltStale.isEmpty) cStale.unpersist()
   }
 
   /** DELETE-drift audit for the IVF index — the centroid-bias question,
@@ -618,7 +675,8 @@ object SimilarityOps {
     * the survivors, both assigned/probed over the survivors and
     * recalled against brute. drift_ppm = fresh − stale is what a
     * retrain buys back; the rebuild policy reads it exactly like the
-    * append side's.
+    * append side's. Releases every centroid frame it trains; a
+    * `prebuiltStale` frame stays the caller's.
     */
   def ivfDeleteDrift(embeddings: DataFrame, delTenths: Seq[Int] = Seq(1, 2, 4),
                      nCentroids: Int = 16, iters: Int = 2,
@@ -629,47 +687,13 @@ object SimilarityOps {
     // per-(JVM, corpus) artifact (r16); the default trains inline
     val cStale = prebuiltStale.getOrElse(
       ivfTrainCentroids(embeddings, nCentroids, iters))
-    // concurrent fraction pipelines (r17): same argument as
-    // ivfAppendDrift — independent per-fraction chains, overlapped from
-    // driver threads (guide §2.6); cStale is shared read-only and
-    // unpersisted only after every fraction completes
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val rows = Await.result(Future.sequence(delTenths.map { f => Future {
-      val corpus = embeddings.filter(
-        col("vec_id") < nQueries || col("vec_id") % 10 >= f).persist()
-      val nAlive = corpus.count()
-      val brute = cosineTopK(corpus, nQueries, k).select(col("q_id"), col("vec_id"))
-      val queries = corpus.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      def recallOf(c: DataFrame): DataFrame = {
-        val hits = ivfTopKOverLists(ivfAssignWith(corpus, c), c, queries, k, nProbe)
-          .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
-        brute.join(hits, Seq("q_id", "vec_id"), "left")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-            count(lit(1)).as("tot"))
-      }
-      val cFresh = ivfTrainCentroids(corpus, nCentroids, iters)
-      val row = recallOf(cStale).select(col("hits").as("h_stale"), col("tot"))
-        .crossJoin(broadcast(recallOf(cFresh).select(col("hits").as("h_fresh"))))
-        .select(lit(f.toLong * 10L).as("del_pct"),
-          lit(nAlive).as("n_alive"),
-          expr("(h_stale * 1000000 + tot div 2) div tot").as("recall_stale_ppm"),
-          expr("(h_fresh * 1000000 + tot div 2) div tot").as("recall_fresh_ppm"),
-          expr("""(h_fresh * 1000000 + tot div 2) div tot
-            | - (h_stale * 1000000 + tot div 2) div tot""".stripMargin)
-            .as("drift_ppm"))
-        .localCheckpoint()
-      // ivfTrainCentroids persists its result internally; drop each
-      // fraction's fresh centroids once its row is checkpointed so cached
-      // blocks don't accumulate across fractions in a long-lived session
-      // (r15 ADVICE) — cStale is shared by every fraction, dropped below.
-      cFresh.unpersist()
-      corpus.unpersist()
-      row
-    }}), scala.concurrent.duration.Duration.Inf)
-    cStale.unpersist()
-    rows.reduce(_.unionAll(_))
+    try factorSweep(delTenths,
+        f => embeddings.filter(col("vec_id") < nQueries || col("vec_id") % 10 >= f)) {
+      (f, corpus) =>
+        val nAlive = corpus.count()
+        ivfDriftRow(Seq(lit(f.toLong * 10L).as("del_pct"), lit(nAlive).as("n_alive")),
+          corpus, cStale, nCentroids, iters, nQueries, k, nProbe)
+    } finally if (prebuiltStale.isEmpty) cStale.unpersist()
   }
 
   /** Top-k against a persisted index — no training, no assignment, just
@@ -1214,38 +1238,30 @@ object SimilarityOps {
       .select(col("src"), col("vec_id").as("dst")))
   }
 
-  /** Recall decay of an append-attached graph index vs a full rebuild —
-    * [[ivfAppendDrift]]'s analog for the graph tier (r12 verdict task 3):
-    * the base 1/11 of the corpus builds the graph, the corpus grows
-    * 1×/5×/10×, and per factor the audit reports beam-search recall@k of
-    * (a) the STALE index — base-time edges plus [[knnGraphAttach]]-only
-    * delta edges, exactly what repeated appends produce — vs (b) a FRESH
-    * [[knnGraphDescent]] rebuild, both under the scale-contract knobs for the
-    * GROWN size and both against full-precision brute. drift_ppm =
-    * fresh − stale is the rebuild-policy number. Slices are vec_id
-    * prefixes (deterministic, dense ids), sized from one driver count.
+  /** What both append audits ([[graphAppendDrift]],
+    * [[graphTopKRescoredDrift]]) derive before their factor sweep, as
+    * (nb, graphK, baseSym, queries, scoredAll). None of it depends on the
+    * factor (r13 verdict task 6):
+    *  - `baseSym`, the STALE side's base graph: graphK is scale-constant
+    *    in the contract (graphKnobs' third knob), so the NN-descent build
+    *    over the base 1/11 slice is identical for every factor. It is
+    *    "the index that predates the appends": when the caller holds it
+    *    persisted (the registry shares one base-slice artifact between
+    *    the two audits, built once per JVM), reading it skips a per-call
+    *    descent rebuild. symmetrize is idempotent on the already-symmetric
+    *    stored set, so the guard costs one distinct and a directed caller
+    *    still reads right;
+    *  - `scoredAll`, the brute baselines: the grown corpora are nested
+    *    vec_id prefixes, so one full-precision scored frame over the
+    *    LARGEST corpus replays every factor's cosineTopK as a prefix
+    *    filter + top-k — one corpus scoring pass instead of |factors|.
     */
-  def graphAppendDrift(embeddings: DataFrame, factors: Seq[Int] = Seq(1, 5, 10),
-                       nQueries: Int = 10, k: Int = 5,
-                       prebuiltBase: Option[DataFrame] = None): DataFrame = {
+  private def appendAuditPrelude(embeddings: DataFrame, factors: Seq[Int],
+                                 nQueries: Int, prebuiltBase: Option[DataFrame])
+      : (Long, Int, DataFrame, DataFrame, DataFrame) = {
     val nb = embeddings.count() / 11
-    // Factor-shared work (r13 verdict task 6): the audit's per-factor loop
-    // re-derived two frames that do not depend on the factor at all —
-    // (a) the STALE side's base graph: graphK is scale-constant in the
-    //     contract (graphKnobs third knob), so the NN-descent build over
-    //     the base 1/11 slice is identical for every factor; build once.
-    // (b) the brute baselines: the grown corpora are nested vec_id
-    //     prefixes, so one full-precision scored frame over the LARGEST
-    //     corpus replays every factor's cosineTopK as a prefix filter +
-    //     window — one corpus scoring pass instead of |factors|.
     val nMax = nb * (1 + factors.max)
     val graphK = graphKnobs(nMax)._3
-    // the STALE side's base graph is "the index that predates the
-    // appends" — when the caller holds it persisted (the registered query
-    // shares one base-slice artifact with graphTopKRescoredDrift, built
-    // once per JVM), reading it skips a per-call descent rebuild;
-    // symmetrize is idempotent on the already-symmetric stored set, so the
-    // guard costs one distinct and a directed caller still reads right
     val baseSym = prebuiltBase
       .map(e => symmetrize(e.select(col("src"), col("dst"))).localCheckpoint())
       .getOrElse(symmetrize(knnGraphDescent(
@@ -1261,65 +1277,66 @@ object SimilarityOps {
         round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4)
           .as("score"))
       .localCheckpoint()
-    // The three factor pipelines are independent chains of SMALL eager
-    // jobs (each localCheckpoint is an action on a few-hundred-row
-    // frame); run them from concurrent driver threads so the scheduler
-    // overlaps them on idle cores — multi-threaded job submission on one
-    // session is the standard Spark pattern, and per-arm results are
-    // scheduling-independent. Order is preserved by Future.sequence.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val rows = Await.result(Future.sequence(factors.map { f => Future {
-      val n = nb * (1 + f)
-      val corpus = embeddings.filter(col("vec_id") < n).persist()
-      val (beam, rounds, _, seeds) = graphKnobs(n)
-      // the persisted index keeps its BUILD-TIME hash moduli: appends
-      // attach through the base-size cells/groups (re-hashing IS a
-      // rebuild), while the fresh rebuild gets the grown corpus's moduli
-      val stale = baseSym
-        .unionByName(knnGraphAttach(corpus, nb, nb, graphK)).distinct()
-      val fresh = symmetrize(knnGraphDescent(corpus, graphK, knownN = Some(n)))
-      // brute ground truth via the bounded topKSelect aggregation (r17,
-      // guide §2.3): same (score desc, vec_id asc) contract as the old
-      // row_number window, no map-side sort of every scored pair
-      val brute = topKSelect(scoredAll.filter(col("vec_id") < n), Seq("q_id"), k)
-        .select(col("q_id"), col("vec_id"))
-      // ONE (arm, q_id)-keyed beam chain for both arms (r14): stale and
-      // fresh share corpus, queries and knobs within a factor — only the
-      // edge set differs — so a single keyed chain replaces two full
-      // chains (half the per-round jobs and checkpoints), per-arm
-      // results identical by construction. The arms ride uncheckpointed
-      // into the chain: graphAnnSearchArmsVisited materializes the union
-      // graph once (r17), replacing the two per-arm checkpoint jobs.
-      val hits = graphAnnSearchArms(corpus,
-          Seq("stale" -> stale, "fresh" -> fresh),
-          nQueries, k, beam, rounds, seeds)
-        .select(col("arm"), col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
-        .localCheckpoint()
-      corpus.unpersist()
-      def recallOf(arm: String): DataFrame =
-        brute.join(hits.filter(col("arm") === arm).drop("arm"),
-            Seq("q_id", "vec_id"), "left")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-            count(lit(1)).as("tot"))
-      // the factor's row is LAZY now (r17): every frame it reads (hits,
-      // scoredAll) is already checkpointed, so the per-factor row
-      // checkpoint was one more driver-barrier job per factor — the
-      // caller's single consuming action computes all factor rows in ONE
-      // job. corpus can unpersist above: hits is the last eager
-      // corpus-dependent frame.
-      recallOf("stale").select(col("hits").as("h_stale"), col("tot"))
-        .crossJoin(broadcast(recallOf("fresh").select(col("hits").as("h_fresh"))))
-        .select(lit(f.toLong).as("append_factor"),
-          lit(nb).as("n_base"),
-          lit(n).as("n_corpus"),
-          expr("(h_stale * 1000000 + tot div 2) div tot").as("recall_stale_ppm"),
-          expr("(h_fresh * 1000000 + tot div 2) div tot").as("recall_fresh_ppm"),
-          expr("""(h_fresh * 1000000 + tot div 2) div tot
-            | - (h_stale * 1000000 + tot div 2) div tot""".stripMargin)
-            .as("drift_ppm"))
-    }}), scala.concurrent.duration.Duration.Inf)
-    rows.reduce(_.unionAll(_))
+    (nb, graphK, baseSym, queries, scoredAll)
+  }
+
+  /** Recall decay of an append-attached graph index vs a full rebuild —
+    * [[ivfAppendDrift]]'s analog for the graph tier (r12 verdict task 3):
+    * the base 1/11 of the corpus builds the graph, the corpus grows
+    * 1×/5×/10×, and per factor the audit reports beam-search recall@k of
+    * (a) the STALE index — base-time edges plus [[knnGraphAttach]]-only
+    * delta edges, exactly what repeated appends produce — vs (b) a FRESH
+    * [[knnGraphDescent]] rebuild, both under the scale-contract knobs for the
+    * GROWN size and both against full-precision brute. drift_ppm =
+    * fresh − stale is the rebuild-policy number. Slices are vec_id
+    * prefixes (deterministic, dense ids), sized from one driver count.
+    */
+  def graphAppendDrift(embeddings: DataFrame, factors: Seq[Int] = Seq(1, 5, 10),
+                       nQueries: Int = 10, k: Int = 5,
+                       prebuiltBase: Option[DataFrame] = None): DataFrame = {
+    val (nb, graphK, baseSym, _, scoredAll) =
+      appendAuditPrelude(embeddings, factors, nQueries, prebuiltBase)
+    factorSweep(factors, f => embeddings.filter(col("vec_id") < nb * (1 + f))) {
+      (f, corpus) =>
+        val n = nb * (1 + f)
+        val (beam, rounds, _, seeds) = graphKnobs(n)
+        // the persisted index keeps its BUILD-TIME hash moduli: appends
+        // attach through the base-size cells/groups (re-hashing IS a
+        // rebuild), while the fresh rebuild gets the grown corpus's moduli
+        val stale = baseSym
+          .unionByName(knnGraphAttach(corpus, nb, nb, graphK)).distinct()
+        val fresh = symmetrize(knnGraphDescent(corpus, graphK, knownN = Some(n)))
+        // brute ground truth via the bounded topKSelect aggregation (r17):
+        // same (score desc, vec_id asc) contract as the old row_number
+        // window, no map-side sort of every scored pair
+        val brute = topKSelect(scoredAll.filter(col("vec_id") < n), Seq("q_id"), k)
+          .select(col("q_id"), col("vec_id"))
+        // ONE (arm, q_id)-keyed beam chain for both arms (r14): stale and
+        // fresh share corpus, queries and knobs within a factor — only the
+        // edge set differs — so a single keyed chain replaces two full
+        // chains (half the per-round jobs and checkpoints), per-arm
+        // results identical by construction. The arms ride uncheckpointed
+        // into the chain: graphAnnSearchArmsVisited materializes the union
+        // graph once (r17), replacing the two per-arm checkpoint jobs.
+        val hits = graphAnnSearchArms(corpus,
+            Seq("stale" -> stale, "fresh" -> fresh),
+            nQueries, k, beam, rounds, seeds)
+          .select(col("arm"), col("q_id"), col("vec_id"))
+          .localCheckpoint()
+        def arm(a: String): DataFrame = hits.filter(col("arm") === a)
+        // the factor's row is LAZY (r17): every frame it reads (hits,
+        // scoredAll) is already checkpointed, so a per-factor row
+        // checkpoint would be one more driver-barrier job per factor — the
+        // caller's single consuming action computes all factor rows in ONE
+        // job. hits is the last eager corpus-dependent frame.
+        recallCounts(brute, "h_stale" -> arm("stale"), "h_fresh" -> arm("fresh"))
+          .select(lit(f.toLong).as("append_factor"),
+            lit(nb).as("n_base"),
+            lit(n).as("n_corpus"),
+            ppm("h_stale").as("recall_stale_ppm"),
+            ppm("h_fresh").as("recall_fresh_ppm"),
+            (ppm("h_fresh") - ppm("h_stale")).as("drift_ppm"))
+    }
   }
 
   /** Append-drift audit for the PRODUCTION retrieval stack (r14 verdict
@@ -1337,9 +1354,8 @@ object SimilarityOps {
     * rescored − plain is how much of the stale index's recall loss the
     * rescore stage buys back — the number that decides whether the
     * rebuild threshold for the production stack differs from the plain
-    * tier's. Same factor-shared work as [[graphAppendDrift]]: one base
-    * build, one brute scoring pass over the largest slice, concurrent
-    * factor pipelines.
+    * tier's. Same factor-shared work as [[graphAppendDrift]]
+    * ([[appendAuditPrelude]]) and the same factor sweep.
     */
   def graphTopKRescoredDrift(embeddings: DataFrame,
                              factors: Seq[Int] = Seq(5, 10),
@@ -1347,111 +1363,46 @@ object SimilarityOps {
                              shortlist: Int = 20,
                              prebuiltBase: Option[DataFrame] = None): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must cover k = $k")
-    val nb = embeddings.count() / 11
-    val nMax = nb * (1 + factors.max)
-    val graphK = graphKnobs(nMax)._3
-    // same prebuilt-base read as [[graphAppendDrift]] — the two audits
-    // share one persisted base-slice artifact in the registry
-    val baseSym = prebuiltBase
-      .map(e => symmetrize(e.select(col("src"), col("dst"))).localCheckpoint())
-      .getOrElse(symmetrize(knnGraphDescent(
-        embeddings.filter(col("vec_id") < nb), graphK, knownN = Some(nb)))
-        .localCheckpoint())
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val scoredAll = embeddings.filter(col("vec_id") < nMax)
-      .select(col("vec_id"), col("embedding"))
-      .join(broadcast(queries))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4)
-          .as("score"))
-      .localCheckpoint()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val rows = Await.result(Future.sequence(factors.map { f => Future {
-      val n = nb * (1 + f)
-      val corpus = embeddings.filter(col("vec_id") < n).persist()
-      val (beam, rounds, _, seeds) = graphKnobs(n)
-      val stale = baseSym
-        .unionByName(knnGraphAttach(corpus, nb, nb, graphK)).distinct()
-      // brute ground truth via the bounded topKSelect aggregation (r17,
-      // guide §2.3): same (score desc, vec_id asc) contract as the old
-      // row_number window, no map-side sort of every scored pair
-      val brute = topKSelect(scoredAll.filter(col("vec_id") < n), Seq("q_id"), k)
-        .select(col("q_id"), col("vec_id"))
-      val sl = graphAnnSearch(corpus, stale.localCheckpoint(), nQueries,
-        shortlist, beam, rounds, seeds).localCheckpoint()
-      val plainHits = sl.filter(col("rank") <= k)
-        .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
-      val wResc = Window.partitionBy("q_id")
-        .orderBy(col("score").desc, col("vec_id"))
-      val rescHits = sl.select(col("q_id"), col("vec_id"))
-        .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-        .join(broadcast(queries), Seq("q_id"))
-        .withColumn("score",
-          round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4))
-        .select(col("q_id"), col("vec_id"),
-          row_number().over(wResc).as("rnk"))
-        .filter(col("rnk") <= k)
-        .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
-      def recallOf(hits: DataFrame): DataFrame =
-        brute.join(hits, Seq("q_id", "vec_id"), "left")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-            count(lit(1)).as("tot"))
-      // LAZY row (r17): sl is checkpointed and brute reads the
-      // checkpointed scoredAll; rescHits re-reads the (registry-persisted)
-      // embeddings slice — so the per-factor row checkpoint was one more
-      // driver barrier per factor, and the caller's single consuming
-      // action now computes both factor rows in one job
-      corpus.unpersist()
-      recallOf(plainHits).select(col("hits").as("h_plain"), col("tot"))
-        .crossJoin(broadcast(recallOf(rescHits).select(col("hits").as("h_resc"))))
-        .select(lit(f.toLong).as("append_factor"),
-          lit(nb).as("n_base"),
-          lit(n).as("n_corpus"),
-          expr("(h_plain * 1000000 + tot div 2) div tot")
-            .as("recall_stale_plain_ppm"),
-          expr("(h_resc * 1000000 + tot div 2) div tot")
-            .as("recall_stale_rescored_ppm"),
-          expr("""(h_resc * 1000000 + tot div 2) div tot
-            | - (h_plain * 1000000 + tot div 2) div tot""".stripMargin)
-            .as("rescore_lift_ppm"))
-    }}), scala.concurrent.duration.Duration.Inf)
-    rows.reduce(_.unionAll(_))
+    val (nb, graphK, baseSym, queries, scoredAll) =
+      appendAuditPrelude(embeddings, factors, nQueries, prebuiltBase)
+    factorSweep(factors, f => embeddings.filter(col("vec_id") < nb * (1 + f))) {
+      (f, corpus) =>
+        val n = nb * (1 + f)
+        val (beam, rounds, _, seeds) = graphKnobs(n)
+        val stale = baseSym
+          .unionByName(knnGraphAttach(corpus, nb, nb, graphK)).distinct()
+        // brute ground truth via the bounded topKSelect aggregation (r17):
+        // same (score desc, vec_id asc) contract as the old row_number
+        // window, no map-side sort of every scored pair
+        val brute = topKSelect(scoredAll.filter(col("vec_id") < n), Seq("q_id"), k)
+          .select(col("q_id"), col("vec_id"))
+        val sl = graphAnnSearch(corpus, stale.localCheckpoint(), nQueries,
+          shortlist, beam, rounds, seeds).localCheckpoint()
+        val wResc = Window.partitionBy("q_id")
+          .orderBy(col("score").desc, col("vec_id"))
+        val rescHits = sl.select(col("q_id"), col("vec_id"))
+          .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+          .join(broadcast(queries), Seq("q_id"))
+          .withColumn("score",
+            round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4))
+          .select(col("q_id"), col("vec_id"),
+            row_number().over(wResc).as("rnk"))
+          .filter(col("rnk") <= k)
+        // LAZY row (r17): sl is checkpointed and brute reads the
+        // checkpointed scoredAll; rescHits re-reads the (registry-persisted)
+        // embeddings slice — so a per-factor row checkpoint would be one
+        // more driver barrier per factor, and the caller's single
+        // consuming action computes both factor rows in one job
+        recallCounts(brute, "h_plain" -> sl.filter(col("rank") <= k), "h_resc" -> rescHits)
+          .select(lit(f.toLong).as("append_factor"),
+            lit(nb).as("n_base"),
+            lit(n).as("n_corpus"),
+            ppm("h_plain").as("recall_stale_plain_ppm"),
+            ppm("h_resc").as("recall_stale_rescored_ppm"),
+            (ppm("h_resc") - ppm("h_plain")).as("rescore_lift_ppm"))
+    }
   }
 
-  /** DELETE-drift audit for the graph index — the tombstone problem, the
-    * other half of the index-maintenance story next to the append-drift
-    * family: vectors leave a 100 TB corpus too (takedowns, dedup
-    * rewrites, retention), and a graph index degrades under deletion in
-    * a mode appends never trigger — removing a node's EDGES fragments
-    * the navigable graph, because deleted hubs were load-bearing routing
-    * waypoints. Per deleted fraction (delTenths/10 of the corpus, query
-    * vectors always kept), two serving policies against brute over the
-    * SURVIVORS:
-    *
-    *  - `tomb` (tombstone/route-through, what HNSW deployments ship):
-    *    the index keeps every edge; deleted nodes still ROUTE the beam
-    *    but are excluded from the final ranking;
-    *  - `hard` (edge prune, the tempting "clean" fix): every edge
-    *    touching a deleted node is dropped, no rewiring — connectivity
-    *    pays.
-    *
-    * `routing_gain_ppm` = tomb − hard is the measured value of letting
-    * tombstones route. The rebuild policy reads `recall_tomb_ppm`
-    * against the scale contract's 0.90 floor — a fresh rebuild on the
-    * survivors is the contract tier itself (gated at all SFs), so no
-    * third rebuild arm is burned here. ONE descent build (the index
-    * predates the deletes, fraction-independent) and ONE (1 + |tenths|)-
-    * arm beam chain serve every reading: the tomb arms of all fractions
-    * share the full-edge chain — only the exclusion at the final window
-    * differs — and each hard arm is the same chain over pruned edges.
-    * Entry seeds are drawn from the full corpus in EVERY arm (the seed
-    * list is part of the stale index too); a deleted seed routes in the
-    * tomb arm, expands nothing in a hard arm (its edges are gone), and
-    * is never returned anywhere.
-    */
   /** LOCAL repair of a graph index after deletes — the third policy
     * between tombstone routing and a full rebuild, and the one real HNSW
     * deployments apply at compaction: for every deleted waypoint d,
@@ -1504,6 +1455,42 @@ object SimilarityOps {
       .distinct()
   }
 
+  /** DELETE-drift audit for the graph index — the tombstone problem, the
+    * other half of the index-maintenance story next to the append-drift
+    * family: vectors leave a 100 TB corpus too (takedowns, dedup
+    * rewrites, retention), and a graph index degrades under deletion in
+    * a mode appends never trigger — removing a node's EDGES fragments
+    * the navigable graph, because deleted hubs were load-bearing routing
+    * waypoints. Per deleted fraction (delTenths/10 of the corpus, query
+    * vectors always kept), three serving policies against brute over
+    * the SURVIVORS:
+    *
+    *  - `tomb` (tombstone/route-through, what HNSW deployments ship):
+    *    the index keeps every edge; deleted nodes still ROUTE the beam
+    *    but are excluded from the final ranking;
+    *  - `hard` (edge prune, the tempting "clean" fix): every edge
+    *    touching a deleted node is dropped, no rewiring — connectivity
+    *    pays;
+    *  - `repair` ([[graphDeleteRepair]]): the hard prune plus local
+    *    bridges around each deleted waypoint.
+    *
+    * `routing_gain_ppm` = tomb − hard is the measured value of letting
+    * tombstones route; `repair_gain_ppm` = repair − hard is what the local
+    * repair buys back. The rebuild policy reads `recall_tomb_ppm`
+    * against the scale contract's 0.90 floor — a fresh rebuild on the
+    * survivors is the contract tier itself (gated at all SFs), so no
+    * rebuild arm is burned here. ONE descent build (the index predates
+    * the deletes, fraction-independent) and ONE (1 + 2·|tenths|)-arm beam
+    * chain serve every reading: the arms are `full`, then `hard$f` and
+    * `repair$f` per fraction. The tomb readings of all fractions share
+    * the `full` arm — only the exclusion at the final window differs —
+    * and each hard or repair arm is the same chain over its own edges.
+    * Entry seeds are drawn from the full corpus in EVERY arm (the seed
+    * list is part of the stale index too); a deleted seed routes in the
+    * tomb arm, expands nothing in a hard arm (its edges are gone), and
+    * is never returned anywhere. The fractions share one keyed chain, so
+    * this audit needs no [[factorSweep]]; it shares only the recall rule.
+    */
   def graphDeleteDrift(embeddings: DataFrame, delTenths: Seq[Int] = Seq(1, 2, 4),
                        nQueries: Int = 10, k: Int = 5,
                        prebuiltEdges: Option[DataFrame] = None): DataFrame = {
@@ -1558,11 +1545,6 @@ object SimilarityOps {
           .filter(aliveV)
           .select(col("q_id"), col("vec_id"), row_number().over(wq).as("rank"))
           .filter(col("rank") <= k)
-          .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1L))
-      def recallOf(arm: String): DataFrame =
-        brute.join(armTop(arm), Seq("q_id", "vec_id"), "left")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-            count(lit(1)).as("tot"))
       val nAlive = embeddings
         .agg(sum(when(aliveV, 1L).otherwise(0L)).as("n_alive"))
       // LAZY per-fraction rows (r17): everything they read (vis,
@@ -1570,21 +1552,16 @@ object SimilarityOps {
       // persisted frame, so the old per-fraction row checkpoints were
       // three more driver-barrier jobs — the caller's single consuming
       // action computes all fraction rows in one job
-      recallOf("full").select(col("hits").as("h_tomb"), col("tot"))
-        .crossJoin(broadcast(recallOf(s"hard$f").select(col("hits").as("h_hard"))))
-        .crossJoin(broadcast(recallOf(s"repair$f").select(col("hits").as("h_rep"))))
+      recallCounts(brute, "h_tomb" -> armTop("full"),
+          "h_hard" -> armTop(s"hard$f"), "h_rep" -> armTop(s"repair$f"))
         .crossJoin(broadcast(nAlive))
         .select(lit(f.toLong * 10L).as("del_pct"),
           col("n_alive"),
-          expr("(h_tomb * 1000000 + tot div 2) div tot").as("recall_tomb_ppm"),
-          expr("(h_hard * 1000000 + tot div 2) div tot").as("recall_hard_ppm"),
-          expr("(h_rep * 1000000 + tot div 2) div tot").as("recall_repair_ppm"),
-          expr("""(h_tomb * 1000000 + tot div 2) div tot
-            | - (h_hard * 1000000 + tot div 2) div tot""".stripMargin)
-            .as("routing_gain_ppm"),
-          expr("""(h_rep * 1000000 + tot div 2) div tot
-            | - (h_hard * 1000000 + tot div 2) div tot""".stripMargin)
-            .as("repair_gain_ppm"))
+          ppm("h_tomb").as("recall_tomb_ppm"),
+          ppm("h_hard").as("recall_hard_ppm"),
+          ppm("h_rep").as("recall_repair_ppm"),
+          (ppm("h_tomb") - ppm("h_hard")).as("routing_gain_ppm"),
+          (ppm("h_rep") - ppm("h_hard")).as("repair_gain_ppm"))
     }
     rows.reduce(_.unionAll(_))
   }
