@@ -157,17 +157,8 @@ object Pipelines {
     * and none once the pair graph fits its driver-side cap) — and the
     * full composition is DuckDB-oracled as the `corpus_pipeline` query.
     */
-  def runCorpusPipeline(docs: DataFrame, minQuality: Double = 0.3): DataFrame = {
-    val exact = DedupOps.exactDedup(docs)
-    val comps = DedupOps.dupComponents(DedupOps.minhashCandidatePairs(exact))
-    val survivors = exact.join(comps, Seq("doc_id"), "left")
-      .filter(col("component").isNull || col("component") === col("doc_id"))
-      .select(col("doc_id"), col("text"))
-    val kept = TextOps.qualityScore(survivors)
-      .filter(col("quality") >= minQuality)
-      .select(col("doc_id"))
-    TextOps.chunks(survivors.join(kept, Seq("doc_id")))
-  }
+  def runCorpusPipeline(docs: DataFrame, minQuality: Double = 0.3): DataFrame =
+    TextOps.chunks(dedupSurvivors(docs).filter(TextOps.quality >= minQuality))
 
   /** [EXT] The corpus pipeline at full width — every filter family a
     * modern training-data pipeline runs, composed in the standard order:
@@ -180,36 +171,28 @@ object Pipelines {
     * rounds at most, none once the pair graph fits its driver-side cap)
     * — and the whole composition is DuckDB-oracled as ONE query
     * (`corpus_full`).
+    *
+    * The three filter families are one per-row predicate
+    * ([[TextOps.corpusKeep]]) and one Filter: none of them aggregates, so
+    * nothing is branched, joined back or persisted. The predicate reads
+    * only `text`, so Catalyst pushes it below the exact-dedup aggregate
+    * to the scan, where it tokenizes each row once for all three.
     */
   def runCorpusPipelineFull(docs: DataFrame, minQuality: Double = 0.3,
                             maxDupTrigram: Double = 0.5): DataFrame = {
+    val kept = dedupSurvivors(docs).filter(TextOps.corpusKeep(minQuality, maxDupTrigram))
+    TextOps.chunks(TextOps.redactPii(kept).withColumnRenamed("redacted", "text"))
+  }
+
+  /** (doc_id, text) after exact dedup and near-dup collapse: every doc
+    * outside a duplicate component, plus each component's min doc_id.
+    */
+  private def dedupSurvivors(docs: DataFrame): DataFrame = {
     val exact = DedupOps.exactDedup(docs)
     val comps = DedupOps.dupComponents(DedupOps.minhashCandidatePairs(exact))
-    // four downstream branches (three filter families + the final join)
-    // each consume survivors — persist it once so the dedup chain (incl.
-    // the iterative collapse) doesn't replay per branch. Cache lifecycle
-    // belongs to the caller (Verify/Bench clearCache between queries
-    // frees this persist; it would not free a localCheckpoint).
-    // The TOKENIZED staging column is materialized into the persisted
-    // frame: quality + Gopher + repetition all consume `toks`, so the
-    // tokenizer regex runs once per surviving row total, not once per
-    // filter family (the SCALE.md "share via a tokenized staging column"
-    // item, now the default shape of the full pipeline).
-    val survivors = TextOps.tokenize(
-        exact.join(comps, Seq("doc_id"), "left")
-          .filter(col("component").isNull || col("component") === col("doc_id"))
-          .select(col("doc_id"), col("text")))
-      .persist()
-    val q = TextOps.qualityScore(survivors)
-      .filter(col("quality") >= minQuality).select("doc_id")
-    val gk = TextOps.gopherQuality(survivors)
-      .filter(col("keep")).select("doc_id")
-    val rep = TextOps.repetitionStats(survivors)
-      .filter(col("dup_trigram_ratio") <= maxDupTrigram).select("doc_id")
-    val kept = survivors
-      .join(q, Seq("doc_id")).join(gk, Seq("doc_id")).join(rep, Seq("doc_id"))
-    val clean = TextOps.redactPii(kept).withColumnRenamed("redacted", "text")
-    TextOps.chunks(clean)
+    exact.join(comps, Seq("doc_id"), "left")
+      .filter(col("component").isNull || col("component") === col("doc_id"))
+      .select(col("doc_id"), col("text"))
   }
 
   /** E2: the fundamentals pipeline — raw-zone CSV → ingest defaults →

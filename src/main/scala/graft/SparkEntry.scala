@@ -1256,11 +1256,8 @@ object SparkEntry {
     // integer quality score (sharded exact ranks) — the one-number check
     // on whether a length filter double-counts the quality filter
     "length_quality_corr" -> ((s, d) => {
-      val q = TextOps.qualityScore(t(s, d, "documents"))
-        .select(col("doc_id"),
-          expr("cast(round(quality * 1000000) as bigint)").as("q_ppm"))
       StatsOps.spearmanMicros(
-        t(s, d, "documents").select(col("doc_id"), col("n_chars")).join(q, "doc_id"),
+        t(s, d, "documents").select(col("doc_id"), col("n_chars"), TextOps.qualityPpm.as("q_ppm")),
         "doc_id", "n_chars", "q_ppm")
     }),
 

@@ -26,6 +26,7 @@ import org.apache.spark.sql.types._
   *    100 TB dedup run resumable.
   */
 object DedupOps {
+  import TextOps.{letScalar, tokensSql}
 
   /** Mersenne prime 2^31-1; a·h stays far below 2^63 for our multipliers. */
   val P: Long = 2147483647L
@@ -60,16 +61,11 @@ object DedupOps {
     * × tokens) regex calls pinning a core for minutes). Wrapping a value in
     * `transform(array(x), t -> body)` binds it to a lambda variable exactly
     * once per row, so every stage below is a chain of such lets and the
-    * whole signature pass is linear in document length.
+    * whole signature pass is linear in document length. This one serves
+    * array-typed bodies; [[TextOps.letScalar]] serves scalar ones.
     */
   private def let(value: String, varName: String, body: String): String =
     s"flatten(transform(array($value), $varName -> $body))"
-
-  /** Same let-binding for scalar-typed bodies (flatten needs arrays). */
-  private def letScalar(value: String, varName: String, body: String): String =
-    s"element_at(transform(array($value), $varName -> $body), 1)"
-
-  private val toksSql = s"regexp_extract_all(lower(text), '${TextOps.TokenPattern}', 0)"
 
   /** Each pipeline stage parameterized by its INPUT lambda variable, so
     * the same snippets compose either as standalone let-chains (one
@@ -86,7 +82,7 @@ object DedupOps {
     s"transform($sh, s -> cast(conv(substr(md5(s), 1, 8), 16, 10) as bigint))"
 
   /** Shingle expression with the token array let-bound (regex runs once). */
-  private val shSql = let(toksSql, "t", shFrom("t"))
+  private val shSql = let(tokensSql, "t", shFrom("t"))
 
   /** 48-bit md5-prefix hashes of the distinct shingles — wide enough that
     * cross-doc collisions are negligible (and 12 hex digits stays safely
@@ -116,7 +112,7 @@ object DedupOps {
     * and the explode emits zero rows for short docs — the filter is the
     * generator itself, with nothing for the optimizer to duplicate.
     */
-  private val sigOrEmptySql = letScalar(toksSql, "t",
+  private val sigOrEmptySql = letScalar(tokensSql, "t",
     s"if(size(t) >= 3, " +
       letScalar(shFrom("t"), "s0", letScalar(hvsFrom("s0"), "hs", mhsFrom("hs"))) +
       ", cast(array() as array<bigint>))")
@@ -220,7 +216,7 @@ object DedupOps {
         "x -> cast(x as string)), ',')))"
     // Generate-gated fusion — one tokenizer run per row, the short-doc
     // filter IS the empty-array explode (see sigOrEmptySql)
-    val bandsOrEmptySql = letScalar(toksSql, "t",
+    val bandsOrEmptySql = letScalar(tokensSql, "t",
       s"if(size(t) >= 3, " +
         letScalar(shFrom("t"), "s0",
           letScalar(hvsFrom("s0"), "hs",
@@ -681,7 +677,7 @@ object DedupOps {
         "then shiftleft(1L, b) else 0L end), 0L, (acc, x) -> acc + x)"
     // Generate-gated fusion — one tokenizer run per row; the single-element
     // array carries the signature for qualifying docs, nothing otherwise
-    val simhashOrEmptySql = letScalar(toksSql, "t",
+    val simhashOrEmptySql = letScalar(tokensSql, "t",
       s"if(size(t) >= 3, array(cast(" +
         letScalar(shFrom("t"), "s0", letScalar(hvsFrom("s0"), "hs", simhashBody)) +
         " as bigint)), cast(array() as array<bigint>))")
@@ -737,8 +733,7 @@ object DedupOps {
     * ranks by; survivors derive from the shared component frame.
     */
   def dedupQualityShift(documents: DataFrame, components: DataFrame): DataFrame = {
-    val q = TextOps.qualityScore(documents)
-      .select(col("doc_id"), expr("cast(round(quality * 1000000) as bigint)").as("q"))
+    val q = documents.select(col("doc_id"), TextOps.qualityPpm.as("q"))
       .join(components.select(col("doc_id"), col("component")), Seq("doc_id"), "left")
       .withColumn("component", coalesce(col("component"), col("doc_id")))
     // min-id survivor per component; keep-best survivor = max (q, -doc_id)
@@ -1817,7 +1812,7 @@ import org.apache.spark.sql.expressions.Window
     * construction as TextOps.chunks with stride = size).
     */
   private def tokenWindowsSql(segTokens: Int): String =
-    letScalar(toksSql, "t",
+    letScalar(tokensSql, "t",
       s"if(size(t) < 1, cast(array() as array<string>), " +
         s"transform(sequence(0, size(t) - 1, $segTokens), " +
         s"st -> concat_ws(' ', slice(t, st + 1, $segTokens))))")
@@ -1924,7 +1919,7 @@ import org.apache.spark.sql.expressions.Window
     * under any partitioning.
     */
   def substringDedup(documents: DataFrame, k: Int = 8): DataFrame = {
-    val winsSql = letScalar(toksSql, "t",
+    val winsSql = letScalar(tokensSql, "t",
       s"if(size(t) < $k, cast(array() as array<struct<pos:int,wh:string>>), " +
         s"transform(sequence(0, size(t) - $k), " +
         s"st -> struct(st as pos, md5(concat_ws(' ', slice(t, st + 1, $k))) as wh)))")
@@ -1939,7 +1934,7 @@ import org.apache.spark.sql.expressions.Window
       .select(col("doc_id"), explode(expr(s"sequence(pos + 1, pos + $k)")).as("tok_idx"))
       .distinct()
     val tokpos = documents
-      .select(col("doc_id"), posexplode(expr(toksSql)).as(Seq("idx0", "tok")))
+      .select(col("doc_id"), posexplode(expr(tokensSql)).as(Seq("idx0", "tok")))
       .select(col("doc_id"), (col("idx0") + 1).as("tok_idx"), col("tok"))
     val reassembled = tokpos
       .join(covered, Seq("doc_id", "tok_idx"), "left_anti")
@@ -1951,7 +1946,7 @@ import org.apache.spark.sql.expressions.Window
           .as("clean_text"))
     // zero-token docs and fully-removed docs both belong in the output
     documents
-      .select(col("doc_id"), expr(s"size($toksSql)").cast(LongType).as("n_tokens"))
+      .select(col("doc_id"), expr(s"size($tokensSql)").cast(LongType).as("n_tokens"))
       .join(reassembled, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
@@ -1974,7 +1969,7 @@ import org.apache.spark.sql.expressions.Window
     * corpus-level pass at 100 TB.
     */
   def intraDocDedup(documents: DataFrame, k: Int = 8): DataFrame = {
-    val winsSql = letScalar(toksSql, "t",
+    val winsSql = letScalar(tokensSql, "t",
       s"if(size(t) < $k, cast(array() as array<struct<pos:int,wh:string>>), " +
         s"transform(sequence(0, size(t) - $k), " +
         s"st -> struct(st as pos, md5(concat_ws(' ', slice(t, st + 1, $k))) as wh)))")
@@ -1988,7 +1983,7 @@ import org.apache.spark.sql.expressions.Window
       .select(col("doc_id"), explode(expr(s"sequence(pos + 1, pos + $k)")).as("tok_idx"))
       .distinct()
     val tokpos = documents
-      .select(col("doc_id"), posexplode(expr(toksSql)).as(Seq("idx0", "tok")))
+      .select(col("doc_id"), posexplode(expr(tokensSql)).as(Seq("idx0", "tok")))
       .select(col("doc_id"), (col("idx0") + 1).as("tok_idx"), col("tok"))
     val reassembled = tokpos
       .join(covered, Seq("doc_id", "tok_idx"), "left_anti")
@@ -1999,7 +1994,7 @@ import org.apache.spark.sql.expressions.Window
           "transform(sort_array(collect_list(struct(tok_idx, tok))), x -> x.tok)"))
           .as("clean_text"))
     documents
-      .select(col("doc_id"), expr(s"size($toksSql)").cast(LongType).as("n_tokens"))
+      .select(col("doc_id"), expr(s"size($tokensSql)").cast(LongType).as("n_tokens"))
       .join(reassembled, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
@@ -2032,7 +2027,7 @@ import org.apache.spark.sql.expressions.Window
     * explodes, 1-row rollup — the same scale shape as the dedup itself.
     */
   def spanDedupRecallAudit(documents: DataFrame, k: Int = 8): DataFrame = {
-    val winsSql = letScalar(toksSql, "t",
+    val winsSql = letScalar(tokensSql, "t",
       s"if(size(t) < $k, cast(array() as array<struct<pos:int,wh:string>>), " +
         s"transform(sequence(0, size(t) - $k), " +
         s"st -> struct(st as pos, md5(concat_ws(' ', slice(t, st + 1, $k))) as wh)))")
@@ -2050,7 +2045,7 @@ import org.apache.spark.sql.expressions.Window
     val covered = positions(col("c") >= 2)
     val removed = positions(col("rn") > 1)
     val tot = documents.agg(
-      sum(expr(s"size($toksSql)").cast(LongType)).as("n_token_positions"))
+      sum(expr(s"size($tokensSql)").cast(LongType)).as("n_token_positions"))
     val cn = covered.agg(count(lit(1)).as("covered_positions"))
     val rm = removed.agg(count(lit(1)).as("removed_positions"))
     val viol = removed.join(covered, Seq("doc_id", "tok_idx"), "left_anti")

@@ -14,6 +14,12 @@ import org.apache.spark.sql.types._
   * inside whole-stage codegen. Where a lambda/higher-order function is
   * needed (`filter`, `transform`) we use `expr(...)` so the plan is the
   * same one Spark SQL would produce.
+  *
+  * Each op tokenizes `text` itself, with the token array let-bound so the
+  * regex runs once per row. The per-document quality signals are
+  * `Column`s over `text` ([[quality]], [[gopherSignals]],
+  * [[repetition]]); their per-query faces are selects over those Columns,
+  * and a pipeline filters on them in one predicate ([[corpusKeep]]).
   */
 object TextOps {
 
@@ -26,26 +32,27 @@ object TextOps {
   def tokensOf(colName: String): Column =
     expr(s"regexp_extract_all(lower($colName), '$TokenPattern', 0)")
 
-  /** Tokenized STAGING column: materialize the token array once and let
-    * every downstream text op consume it. The tokenizer regex is the one
-    * repeated per-row cost of the text family (SCALE.md "known
-    * trade-offs"); at 100 TB a pipeline that fans a corpus into several
-    * per-doc filter families (quality + Gopher + repetition, as
-    * `runCorpusPipelineFull` does) should tokenize at the staging
-    * boundary and cache/persist THAT, so the regex runs once per row
-    * total instead of once per row per family. Every op below detects
-    * the `toks` column and skips its own tokenizer when present —
-    * outputs are identical either way (same token def), which keeps the
-    * staged and unstaged paths hash-interchangeable.
+  private[operators] val tokensSql = s"regexp_extract_all(lower(text), '$TokenPattern', 0)"
+
+  /** The token array as a `toks` column: the input of the bigram tables
+    * ([[knTable]], [[bigramEntropyRate]], [[knCrossEntropy]]), which read
+    * it by name. Every other op tokenizes `text` inline, let-bound, so
+    * its regex runs once per row.
     */
   def tokenize(documents: DataFrame): DataFrame =
     documents.withColumn("toks", tokensOf("text"))
 
-  /** The token-array expression an op should consume: the staged column
-    * when the caller materialized one, the inline tokenizer otherwise.
+  /** Let-binds the SQL `value` as `varName` in `body`. Catalyst has no
+    * let and does not share subexpressions with lambdas, so a value
+    * wrapped in a one-element `transform` is evaluated once per row
+    * however often `body` reads it.
     */
-  private def toksExprFor(df: DataFrame): String =
-    if (df.columns.contains("toks")) "toks" else tokensSql
+  private[operators] def letScalar(value: String, varName: String, body: String): String =
+    s"element_at(transform(array($value), $varName -> $body), 1)"
+
+  /** Let-binds `text`'s token array as `t` and its line split as `ls`. */
+  private def withTokensAndLines(body: String): String =
+    letScalar(tokensSql, "t", letScalar("split(text, '\\n')", "ls", body))
 
   /** Stopword-membership filter over a token-array SQL expression. The
     * lambda variable is `sw` (not `t`) so the snippet can nest inside the
@@ -59,7 +66,7 @@ object TextOps {
     documents.select(
       col("doc_id"),
       length(col("text")).as("n_chars_measured"),
-      expr(s"size(${toksExprFor(documents)})").as("n_tokens"))
+      expr(s"size($tokensSql)").as("n_tokens"))
 
   /** Heuristic language ID: stopword-ratio n-gram heuristic. With the
     * synthetic corpus (English-ish vocab regardless of the `lang` label)
@@ -70,23 +77,30 @@ object TextOps {
     documents.select(
       col("doc_id"),
       col("lang").as("lang_label"),
-      when(expr(stopHitsSql(toksExprFor(documents))) >= 2, lit("en"))
+      when(expr(stopHitsSql(tokensSql)) >= 2, lit("en"))
         .otherwise(lit("und")).as("lang_pred"))
 
-  /** Quality score in [0,1]: half length-based (saturating at 200 chars),
-    * half stopword density. Pure double arithmetic → bit-identical across
-    * engines; rounded for the oracle hash. The token array is let-bound
-    * (or read from the staging column), so the tokenizer runs ONCE per
-    * row — the r7 form ran it twice (token count + stopword filter).
+  /** [[quality]]'s body over the let-bound tokens `t`. */
+  private val qualitySql =
+    s"""round(least(cast(length(text) as double) / 200.0d, 1.0d) * 0.5d +
+       |  coalesce(cast(${stopHitsSql("t")} as double)
+       |           / nullif(cast(size(t) as double), 0.0d), 0.0d) * 0.5d, 6)""".stripMargin
+
+  /** Quality score in [0,1] over `text`: half length-based (saturating at
+    * 200 chars), half stopword density. Pure double arithmetic →
+    * bit-identical across engines; rounded for the oracle hash. One
+    * let-bound expression, so the tokenizer runs once per row.
     */
-  def qualityScore(documents: DataFrame): DataFrame = {
-    val sql =
-      s"""element_at(transform(array(${toksExprFor(documents)}), t ->
-         |  round(least(cast(length(text) as double) / 200.0d, 1.0d) * 0.5d +
-         |        coalesce(cast(${stopHitsSql("t")} as double)
-         |                 / nullif(cast(size(t) as double), 0.0d), 0.0d) * 0.5d, 6)), 1)""".stripMargin
-    documents.select(col("doc_id"), expr(sql).as("quality"))
-  }
+  def quality: Column = expr(letScalar(tokensSql, "t", qualitySql))
+
+  /** [[quality]] as integer ppm (half-up at scale 0): the one form every
+    * integer consumer sums, ranks and thresholds.
+    */
+  def qualityPpm: Column = round(quality * 1000000).cast(LongType)
+
+  /** (doc_id, quality): [[quality]] per document. */
+  def qualityScore(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"), quality.as("quality"))
 
   /** Quality-proportional importance sampling: each doc is kept with
     * probability equal to its quality score — the standard
@@ -98,13 +112,10 @@ object TextOps {
     * per-row predicate: pushes to the scan, no shuffle, no RNG state.
     */
   def importanceSample(documents: DataFrame): DataFrame =
-    qualityScore(documents)
-      .join(documents.select(col("doc_id"), col("source")), "doc_id")
-      .withColumn("keep_ppm", expr("cast(round(quality * 1000000) as bigint)"))
+    documents.select(col("doc_id"), col("source"), qualityPpm.as("keep_ppm"))
       .filter(
         expr("cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint) % 1000000")
           < col("keep_ppm"))
-      .select(col("doc_id"), col("source"), col("keep_ppm"))
 
   /** Exact-k weighted sampling without replacement per source
     * (Efraimidis–Spirakis A-ES): rank docs by key u^(1/w) — equivalently
@@ -122,8 +133,7 @@ object TextOps {
     * source-keyed bounded window — no corpus sort, no RNG state.
     */
   def weightedSampleTopK(documents: DataFrame, k: Int = 10): DataFrame = {
-    val d = documents.select(col("doc_id"), col("source"))
-      .join(qualityScore(documents), Seq("doc_id"))
+    val d = documents.select(col("doc_id"), col("source"), quality.as("quality"))
       .filter(col("quality") > 0)
       .withColumn("key_micros", expr(
         "cast(round(ln((cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint) + 1) " +
@@ -237,7 +247,7 @@ object TextOps {
     */
   def lengthCorr(documents: DataFrame): DataFrame =
     documents
-      .select(expr(s"cast(size(${toksExprFor(documents)}) as bigint)").as("x"),
+      .select(expr(s"cast(size($tokensSql) as bigint)").as("x"),
         col("n_chars").cast(LongType).as("y"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
         sum(expr("x * y")).as("sxy"), sum(expr("x * x")).as("sxx"),
@@ -286,7 +296,7 @@ object TextOps {
       .agg(
         count(lit(1)).as("n_docs"),
         RelationalOps.moneySum(col("n_chars")).as("total_chars"),
-        round(sum(expr(s"size(${toksExprFor(documents)})")).cast(DoubleType) / count(lit(1)), 6)
+        round(sum(expr(s"size($tokensSql)")).cast(DoubleType) / count(lit(1)), 6)
           .as("avg_tokens"))
 
   /** Token chunking — the one-to-many "table function" of an LLM data
@@ -296,7 +306,7 @@ object TextOps {
     */
   def chunks(documents: DataFrame, chunkSize: Int = 32, stride: Int = 16): DataFrame = {
     val sql =
-      s"""flatten(transform(array(${toksExprFor(documents)}), t ->
+      s"""flatten(transform(array($tokensSql), t ->
          |  if(size(t) < 1, cast(array() as array<struct<chunk_idx: int, chunk: string, n_chunk_tokens: int>>),
          |     transform(sequence(0, size(t) - 1, $stride), st -> named_struct(
          |       'chunk_idx', cast(st / $stride as int),
@@ -343,15 +353,13 @@ object TextOps {
         sum(col("z.cnts")).cast(LongType).as("n_chunk_tokens"))
   }
 
-  private val tokensSql = s"regexp_extract_all(lower(text), '$TokenPattern', 0)"
-
   /** Global token histogram: explode + one hash aggregate. The groupBy key
     * is the token — on a skewed corpus AQE's skew handling splits hot
     * tokens; partial aggregation keeps the shuffle small regardless.
     */
   def termFrequencies(documents: DataFrame): DataFrame =
     documents
-      .select(explode(expr(toksExprFor(documents))).as("token"))
+      .select(explode(expr(tokensSql)).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("n"))
 
@@ -422,9 +430,8 @@ object TextOps {
     */
   def pmiCollocations(documents: DataFrame, minCount: Long = 5,
                       k: Int = 50): DataFrame = {
-    val toks = toksExprFor(documents)
     val bgc = documents
-      .withColumn("tk", expr(toks)).filter(expr("size(tk) >= 2"))
+      .withColumn("tk", expr(tokensSql)).filter(expr("size(tk) >= 2"))
       .select(explode(expr(
         "transform(sequence(0, size(tk) - 2), i -> " +
           "named_struct('w1', tk[i], 'w2', tk[i + 1]))")).as("b"))
@@ -560,7 +567,7 @@ object TextOps {
       when(col(s"h_$l") === col("m") && col("m") > 0, lit(l)).otherwise(acc)
     }
     documents
-      .select(col("doc_id"), col("lang"), expr(toksExprFor(documents)).as("tk"))
+      .select(col("doc_id"), col("lang"), expr(tokensSql).as("tk"))
       .select(Seq(col("doc_id"), col("lang")) ++ hits: _*)
       .withColumn("m", m)
       .withColumn("pred_lang",
@@ -600,7 +607,7 @@ object TextOps {
     val tok = documents.select(
       (expr("cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)")
         % buckets).cast(IntegerType).as("bucket"),
-      explode(expr(toksExprFor(documents))).as("token"))
+      explode(expr(tokensSql)).as("token"))
     val newTypes = tok.groupBy(col("token")).agg(min(col("bucket")).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("new_types"))
     val perBucket = tok.groupBy(col("bucket")).agg(count(lit(1)).as("n_tokens"))
@@ -683,7 +690,7 @@ object TextOps {
     */
   private def docTokenTf(documents: DataFrame): DataFrame =
     documents
-      .select(col("doc_id"), explode(expr(toksExprFor(documents))).as("token"))
+      .select(col("doc_id"), explode(expr(tokensSql)).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
 
@@ -759,7 +766,7 @@ object TextOps {
     */
   private def classKeywords(tagged: DataFrame, keyCol: String, k: Int): DataFrame = {
     val tf = tagged
-      .select(col(keyCol), explode(expr(toksExprFor(tagged))).as("token"))
+      .select(col(keyCol), explode(expr(tokensSql)).as("token"))
       .groupBy(col(keyCol), col("token"))
       .agg(count(lit(1)).as("tf"))
     val dfs = tf.groupBy(col("token")).agg(count(lit(1)).as("df_classes"))
@@ -797,42 +804,57 @@ object TextOps {
         round(col("tf") * log(col("n_docs").cast(DoubleType) / col("df")), 6).as("tf_idf"))
   }
 
-  /** Gopher-style quality-filter signals (the rule family of Rae et al.'s
-    * Gopher corpus filtering, re-expressed as one codegen'd pass): token
-    * count, mean word length, alphabetic-word ratio, symbol-to-word ratio
-    * ('#' and '...'), bullet-/ellipsis-line ratios, and the composite
-    * `keep` verdict with the published-style thresholds. Everything is
-    * per-row expression arithmetic — no shuffle, no UDF; the whole corpus
-    * gate is one narrow projection that pushes to the scan.
-    *
-    * Tokens and lines are let-bound via nested single-element transforms
-    * so the tokenizer and the line split each run once per document.
+  /** [[gopherSignals]]' struct over the let-bound tokens `t` and lines
+    * `ls`; stop_hits rides inside it (r8: a second stopword projection
+    * ran the tokenizer regex a second time per row).
     */
-  def gopherQuality(documents: DataFrame): DataFrame = {
-    val sql =
-      s"""transform(array(${toksExprFor(documents)}), t ->
-         |  transform(array(split(text, '\\n')), ls -> named_struct(
-         |    'stop_hits', ${stopHitsSql("t")},
-         |    'n_tokens', size(t),
-         |    'mean_word_len', if(size(t) = 0, cast(0.0 as double),
-         |       round(aggregate(t, 0, (acc, x) -> acc + length(x)) / cast(size(t) as double), 6)),
-         |    'alpha_ratio', if(size(t) = 0, cast(0.0 as double),
-         |       round(size(filter(t, x -> x rlike '[a-z]')) / cast(size(t) as double), 6)),
-         |    'symbol_ratio', if(size(t) = 0, cast(0.0 as double),
-         |       round(((length(text) - length(replace(text, '#', '')))
-         |            + (length(text) - length(replace(text, '...', ''))) div 3)
-         |           / cast(size(t) as double), 6)),
-         |    'bullet_line_ratio',
-         |       round(size(filter(ls, l -> left(ltrim(l), 2) IN ('- ', '* ')))
-         |           / cast(size(ls) as double), 6),
-         |    'ellipsis_line_ratio',
-         |       round(size(filter(ls, l -> right(l, 3) = '...'))
-         |           / cast(size(ls) as double), 6)))[0])[0]""".stripMargin
-    // stop_hits rides inside the same let-bound struct (r8): the r7 form
-    // computed it via a second single-expression stopword projection,
-    // which ran the tokenizer regex a second time per row
+  private val gopherSql =
+    s"""named_struct(
+       |  'stop_hits', ${stopHitsSql("t")},
+       |  'n_tokens', size(t),
+       |  'mean_word_len', if(size(t) = 0, cast(0.0 as double),
+       |     round(aggregate(t, 0, (acc, x) -> acc + length(x)) / cast(size(t) as double), 6)),
+       |  'alpha_ratio', if(size(t) = 0, cast(0.0 as double),
+       |     round(size(filter(t, x -> x rlike '[a-z]')) / cast(size(t) as double), 6)),
+       |  'symbol_ratio', if(size(t) = 0, cast(0.0 as double),
+       |     round(((length(text) - length(replace(text, '#', '')))
+       |          + (length(text) - length(replace(text, '...', ''))) div 3)
+       |         / cast(size(t) as double), 6)),
+       |  'bullet_line_ratio',
+       |     round(size(filter(ls, l -> left(ltrim(l), 2) IN ('- ', '* ')))
+       |         / cast(size(ls) as double), 6),
+       |  'ellipsis_line_ratio',
+       |     round(size(filter(ls, l -> right(l, 3) = '...'))
+       |         / cast(size(ls) as double), 6))""".stripMargin
+
+  /** Gopher-style quality-filter signals over `text` (the rule family of
+    * Rae et al.'s Gopher corpus filtering, re-expressed as one codegen'd
+    * expression): stopword hits, token count, mean word length,
+    * alphabetic-word ratio, symbol-to-word ratio ('#' and '...'), and
+    * bullet-/ellipsis-line ratios, as one struct. Tokens and lines are
+    * let-bound, so the tokenizer and the line split each run once per row.
+    */
+  def gopherSignals: Column = expr(withTokensAndLines(gopherSql))
+
+  /** The Gopher `keep` verdict over a [[gopherSignals]] struct, with the
+    * published-style thresholds.
+    */
+  def gopherKeep(g: Column): Column =
+    g("n_tokens").between(50, 100000) &&
+      g("mean_word_len").between(3.0, 10.0) &&
+      g("symbol_ratio") < 0.1 &&
+      g("bullet_line_ratio") < 0.9 &&
+      g("ellipsis_line_ratio") < 0.3 &&
+      g("alpha_ratio") > 0.8 &&
+      g("stop_hits") >= 2
+
+  /** Per-document Gopher signals and `keep` verdict: per-row expression
+    * arithmetic, no shuffle, no UDF; the whole corpus gate is one narrow
+    * projection that pushes to the scan.
+    */
+  def gopherQuality(documents: DataFrame): DataFrame =
     documents
-      .select(col("doc_id"), expr(sql).as("g"))
+      .select(col("doc_id"), gopherSignals.as("g"))
       .select(
         col("doc_id"),
         col("g.n_tokens").as("n_tokens"),
@@ -841,44 +863,48 @@ object TextOps {
         col("g.symbol_ratio").as("symbol_ratio"),
         col("g.bullet_line_ratio").as("bullet_line_ratio"),
         col("g.ellipsis_line_ratio").as("ellipsis_line_ratio"),
-        (col("g.n_tokens").between(50, 100000) &&
-          col("g.mean_word_len").between(3.0, 10.0) &&
-          col("g.symbol_ratio") < 0.1 &&
-          col("g.bullet_line_ratio") < 0.9 &&
-          col("g.ellipsis_line_ratio") < 0.3 &&
-          col("g.alpha_ratio") > 0.8 &&
-          col("g.stop_hits") >= 2).as("keep"))
-  }
+        gopherKeep(col("g")).as("keep"))
 
-  /** Within-document repetition signals — the C4/Gopher "repetitious
-    * content" filters: duplicate-token, duplicate-trigram, and
-    * duplicate-line fractions (1 − distinct/total). High values flag
-    * boilerplate, keyword stuffing, and template spam. Per-row expression
-    * arithmetic only; the trigram list is derived from the let-bound token
-    * array so the tokenizer runs once per document.
+  /** The duplicate-trigram ratio over the let-bound tokens `t`. */
+  private val dupTrigramSql =
+    """transform(array(if(size(t) < 3, cast(array() as array<string>),
+      |                   transform(sequence(0, size(t) - 3),
+      |                     i -> concat(t[i], ' ', t[i+1], ' ', t[i+2])))), g ->
+      |  if(size(g) = 0, cast(0.0 as double),
+      |     round(1.0 - size(array_distinct(g)) / cast(size(g) as double), 6)))[0]""".stripMargin
+
+  /** Within-document repetition signals over `text` — the C4/Gopher
+    * "repetitious content" filters: duplicate-token, duplicate-trigram,
+    * and duplicate-line fractions (1 − distinct/total), as one struct.
+    * High values flag boilerplate, keyword stuffing, and template spam.
+    * The trigram list derives from the let-bound token array, so the
+    * tokenizer runs once per row.
     */
-  def repetitionStats(documents: DataFrame): DataFrame = {
-    val sql =
-      s"""transform(array(${toksExprFor(documents)}), t ->
-         |  transform(array(if(size(t) < 3, cast(array() as array<string>),
-         |                     transform(sequence(0, size(t) - 3),
-         |                       i -> concat(t[i], ' ', t[i+1], ' ', t[i+2])))), g ->
-         |    transform(array(split(text, '\\n')), ls -> named_struct(
-         |      'n_tokens', size(t),
-         |      'dup_token_ratio', if(size(t) = 0, cast(0.0 as double),
-         |         round(1.0 - size(array_distinct(t)) / cast(size(t) as double), 6)),
-         |      'dup_trigram_ratio', if(size(g) = 0, cast(0.0 as double),
-         |         round(1.0 - size(array_distinct(g)) / cast(size(g) as double), 6)),
-         |      'dup_line_ratio',
-         |         round(1.0 - size(array_distinct(ls)) / cast(size(ls) as double), 6)))[0])[0])[0]""".stripMargin
-    documents
-      .select(col("doc_id"), expr(sql).as("r"))
-      .select(
-        col("doc_id"),
-        col("r.n_tokens").as("n_tokens"),
-        col("r.dup_token_ratio").as("dup_token_ratio"),
-        col("r.dup_trigram_ratio").as("dup_trigram_ratio"),
-        col("r.dup_line_ratio").as("dup_line_ratio"))
+  def repetition: Column = expr(withTokensAndLines(
+    s"""named_struct(
+       |  'n_tokens', size(t),
+       |  'dup_token_ratio', if(size(t) = 0, cast(0.0 as double),
+       |     round(1.0 - size(array_distinct(t)) / cast(size(t) as double), 6)),
+       |  'dup_trigram_ratio', $dupTrigramSql,
+       |  'dup_line_ratio',
+       |     round(1.0 - size(array_distinct(ls)) / cast(size(ls) as double), 6))""".stripMargin))
+
+  /** Per-document [[repetition]] signals. */
+  def repetitionStats(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"), repetition.as("r")).select(col("doc_id"), col("r.*"))
+
+  /** The full corpus pipeline's keep verdict as ONE let-bound boolean:
+    * quality ≥ `minQuality`, the Gopher `keep`, and duplicate-trigram
+    * ratio ≤ `maxDupTrigram` — exactly the three faces' verdicts
+    * intersected. Tokens and lines are bound once for all three, so the
+    * tokenizer runs once per row wherever Catalyst pushes the filter.
+    */
+  def corpusKeep(minQuality: Double, maxDupTrigram: Double): Column = {
+    val signals = expr(withTokensAndLines(s"named_struct('quality', $qualitySql, " +
+      s"'gopher', $gopherSql, 'dup_trigram_ratio', $dupTrigramSql)"))
+    transform(array(signals), s =>
+      s("quality") >= minQuality && gopherKeep(s("gopher")) &&
+        s("dup_trigram_ratio") <= maxDupTrigram)(0)
   }
 
   /** PII scrubbing pass: emails → <EMAIL>, IPv4-ish quads → <IP>, long
@@ -987,7 +1013,7 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     val base = documents.select(
       col("doc_id"), col("source"),
-      expr(s"size(${toksExprFor(documents)})").cast(LongType).as("n_tokens"),
+      expr(s"size($tokensSql)").cast(LongType).as("n_tokens"),
       expr("cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)")
         .as("priority"))
     val w = Window.partitionBy(col("source")).orderBy(col("priority"), col("doc_id"))
@@ -1017,7 +1043,7 @@ object TextOps {
     val weightOf = // token -> bucket -> signed integer weight
       s"(${hash32(s"cast(pmod(${hash32("tk")}, $dim) as string)")} % 2001) - 1000"
     val sql =
-      s"""element_at(transform(array(${toksExprFor(documents)}), t -> named_struct(
+      s"""element_at(transform(array($tokensSql), t -> named_struct(
          |  'n', size(t),
          |  's', aggregate(t, 0L, (acc, tk) -> acc + ($weightOf)))), 1)""".stripMargin
     documents
@@ -1058,7 +1084,7 @@ object TextOps {
   def tfidfTopKSim(documents: DataFrame, k: Int = 3, maxDf: Int = 50): DataFrame = {
     val nDocs = documents.agg(count(lit(1)).as("n_docs"))
     val tf = documents
-      .select(col("doc_id"), explode(expr(toksExprFor(documents))).as("token"))
+      .select(col("doc_id"), explode(expr(tokensSql)).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
     val dfs = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
@@ -1101,8 +1127,7 @@ object TextOps {
     * table joined back, one hash aggregate.
     */
   def qualityCalibrate(documents: DataFrame, q: Double = 0.25): DataFrame = {
-    val scored = qualityScore(documents)
-      .join(documents.select(col("doc_id"), col("source")), Seq("doc_id"))
+    val scored = documents.select(col("source"), quality.as("quality"))
     val thr = scored.groupBy(col("source"))
       .agg(round(expr(s"percentile(quality, ${q}d)"), 6).as("threshold"))
     scored.join(broadcast(thr), Seq("source"))
@@ -1135,7 +1160,7 @@ object TextOps {
   def dsirWeights(documents: DataFrame, targetSource: String = "src0",
                   nBuckets: Int = 4096): DataFrame = {
     val bigramsSql =
-      s"""flatten(transform(array(${toksExprFor(documents)}), t ->
+      s"""flatten(transform(array($tokensSql), t ->
          |  if(size(t) < 2, cast(array() as array<string>),
          |     transform(sequence(0, size(t) - 2), i -> concat(t[i], ' ', t[i+1])))))"""
         .stripMargin
@@ -1178,7 +1203,7 @@ object TextOps {
   def lmPerplexity(documents: DataFrame, targetSource: String = "src0"): DataFrame = {
     val bi = documents.select(col("doc_id"), col("source"),
       explode(expr(
-        s"""flatten(transform(array(${toksExprFor(documents)}), t ->
+        s"""flatten(transform(array($tokensSql), t ->
            |  if(size(t) < 2, cast(array() as array<struct<w1: string, w2: string>>),
            |     transform(sequence(0, size(t) - 2),
            |               i -> named_struct('w1', t[i], 'w2', t[i+1])))))""".stripMargin)).as("b"))
@@ -1227,15 +1252,15 @@ object TextOps {
                kTop: Int = 20, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val toks = documents.select(
       col("doc_id"),
-      expr(s"size(${toksExprFor(documents)})").cast(DoubleType).as("dl"),
-      explode(expr(toksExprFor(documents))).as("token"))
+      expr(s"size($tokensSql)").cast(DoubleType).as("dl"),
+      explode(expr(tokensSql)).as("token"))
     val hits = toks.filter(col("token").isin(queryTerms: _*))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).cast(DoubleType).as("tf"), first(col("dl")).as("dl"))
     val dfs = hits.groupBy(col("token")).agg(count(lit(1)).cast(DoubleType).as("df"))
     val corpus = documents.agg(
       count(lit(1)).cast(DoubleType).as("n_docs"),
-      avg(expr(s"size(${toksExprFor(documents)})").cast(DoubleType)).as("avgdl"))
+      avg(expr(s"size($tokensSql)").cast(DoubleType)).as("avgdl"))
     hits
       .join(broadcast(dfs), Seq("token"))
       .crossJoin(broadcast(corpus))
@@ -1269,7 +1294,7 @@ object TextOps {
     val D = DecimalType(38, 0)
     val flags = documents.select(
       (col("n_chars") >= minChars).as("a"),
-      (expr(s"size(${toksExprFor(documents)})") >= minTokens).as("b"))
+      (expr(s"size($tokensSql)") >= minTokens).as("b"))
     flags
       .agg(count(lit(1)).as("n"),
         sum(when(col("a"), 1L).otherwise(0L)).as("a1"),
@@ -1306,10 +1331,10 @@ object TextOps {
               kTop: Int = 20, mu: Double = 2000.0): DataFrame = {
     val toks = documents.select(
       col("doc_id"),
-      expr(s"size(${toksExprFor(documents)})").cast(LongType).as("dl"),
-      explode(expr(toksExprFor(documents))).as("token"))
+      expr(s"size($tokensSql)").cast(LongType).as("dl"),
+      explode(expr(tokensSql)).as("token"))
     val tot = documents
-      .agg(sum(expr(s"size(${toksExprFor(documents)})").cast(LongType)).as("t_all"))
+      .agg(sum(expr(s"size($tokensSql)").cast(LongType)).as("t_all"))
     val cf = toks.filter(col("token").isin(queryTerms: _*))
       .groupBy(col("token")).agg(count(lit(1)).as("cf"))
     val qn = cf.agg(count(lit(1)).as("qn"))
@@ -1344,7 +1369,7 @@ object TextOps {
     */
   def heavyHitters(documents: DataFrame, kTop: Int = 25): DataFrame =
     documents
-      .select(explode(expr(toksExprFor(documents))).as("token"))
+      .select(explode(expr(tokensSql)).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token"))
@@ -1366,7 +1391,7 @@ object TextOps {
   def heavyHittersCms(documents: DataFrame, kTop: Int = 25,
                       eps: Double = 0.001, confidence: Double = 0.99): DataFrame = {
     val spark = documents.sparkSession
-    val toks = documents.select(explode(expr(toksExprFor(documents))).as("token"))
+    val toks = documents.select(explode(expr(tokensSql)).as("token"))
     val sketch = toks.stat.countMinSketch("token", eps, confidence, /*seed=*/ 42)
     val counts = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt"))).head().getLong(0)
@@ -1398,7 +1423,7 @@ object TextOps {
     */
   def sourceDrift(documents: DataFrame): DataFrame = {
     val st = documents
-      .select(col("source"), explode(expr(toksExprFor(documents))).as("t"))
+      .select(col("source"), explode(expr(tokensSql)).as("t"))
       .groupBy(col("source"), col("t")).agg(count(lit(1)).as("c_st"))
     val ct = st.groupBy(col("t")).agg(sum(col("c_st")).as("c_t"))
     val ns = st.groupBy(col("source")).agg(sum(col("c_st")).as("n_s"))
@@ -1454,7 +1479,7 @@ object TextOps {
                minFreq: Long = 1L): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val init = documents
-      .select(explode(expr(toksExprFor(documents))).as("w"))
+      .select(explode(expr(tokensSql)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .filter(col("freq") >= minFreq)
       .select(expr(symsInitSql).as("syms"), col("freq"))
@@ -1511,7 +1536,7 @@ object TextOps {
       s"replace($acc, '|$a||$b|', '|$a$b|')"
     }
     val toks = withSplit.select(col("split"), col("doc_id"),
-      explode(expr(toksExprFor(withSplit))).as("w"))
+      explode(expr(tokensSql)).as("w"))
     val trainVocab = toks.filter(col("split") === "train")
       .select(col("w")).distinct()
     val enc = toks
@@ -1678,7 +1703,7 @@ object TextOps {
       s"bad unigram params: $vocabTarget/$emRounds/$maxPieceLen")
     val sp = documents.sparkSession
     val wf = documents
-      .select(explode(expr(toksExprFor(documents))).as("w"))
+      .select(explode(expr(tokensSql)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .localCheckpoint()
     val seeds = wf.select(col("freq"), explode(expr(
@@ -1740,7 +1765,7 @@ object TextOps {
       map_from_entries(collect_list(struct(col("piece"), col("logp_micros"))))
         .as("vmap"))
     val toks = documents
-      .select(col("doc_id"), explode(expr(toksExprFor(documents))).as("w"))
+      .select(col("doc_id"), explode(expr(tokensSql)).as("w"))
     val perWord = toks.select(col("w")).distinct()
       .crossJoin(broadcast(vmap))
       .withColumn("dp", expr(unigramDpSql(maxPieceLen)))
@@ -1771,7 +1796,7 @@ object TextOps {
     val vocab = unigramTrain(withSplit.filter(col("split") === "train"),
       vocabTarget, emRounds, maxPieceLen)
     val toks = withSplit.select(col("split"), col("doc_id"),
-      explode(expr(toksExprFor(withSplit))).as("w"))
+      explode(expr(tokensSql)).as("w"))
     val trainWords = toks.filter(col("split") === "train")
       .select(col("w")).distinct()
     val vmap = vocab.agg(
@@ -1828,7 +1853,7 @@ object TextOps {
       s"replace($acc, '|$a||$b|', '|$a$b|')"
     }
     documents
-      .select(col("doc_id"), explode(expr(toksExprFor(documents))).as("w"))
+      .select(col("doc_id"), explode(expr(tokensSql)).as("w"))
       // Generate gate: materialize the K-deep replace chain ONCE per
       // token (projection collapse would otherwise inline it into both
       // the substr and the length consumer below)
@@ -1868,7 +1893,7 @@ object TextOps {
                      minFreq: Long = 1L): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val init = documents
-      .select(explode(expr(toksExprFor(documents))).as("w"))
+      .select(explode(expr(tokensSql)).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .filter(col("freq") >= minFreq)
       .select(expr(symsInitSql).as("syms"), col("freq"))
@@ -1936,7 +1961,7 @@ object TextOps {
   def wordpieceVocabFrom(train: DataFrame, merges: DataFrame,
                          maxPieceLen: Int = 8): DataFrame = {
     val chars = train
-      .select(explode(expr(toksExprFor(train))).as("w"))
+      .select(explode(expr(tokensSql)).as("w"))
       .select(explode(expr("regexp_extract_all(w, '.', 0)")).as("piece"))
     chars.unionByName(merges.select(col("merged").as("piece")))
       .filter(length(col("piece")) <= maxPieceLen)
@@ -1982,7 +2007,7 @@ object TextOps {
       map_from_entries(collect_list(struct(col("piece"), lit(1))))
         .as("vmap"))
     val toks = documents
-      .select(col("doc_id"), explode(expr(toksExprFor(documents))).as("w"))
+      .select(col("doc_id"), explode(expr(tokensSql)).as("w"))
     val perWord = toks.select(col("w")).distinct()
       .crossJoin(broadcast(vmap))
       .select(col("w"), expr(wordpieceFoldSql(maxPieceLen)).as("seg"))
@@ -2038,7 +2063,7 @@ object TextOps {
     val vmap = vocab.agg(
       map_from_entries(collect_list(struct(col("piece"), lit(1)))).as("vmap"))
     val toks = withSplit.select(col("split"), col("doc_id"),
-      explode(expr(toksExprFor(withSplit))).as("w"))
+      explode(expr(tokensSql)).as("w"))
     val trainWords = toks.filter(col("split") === "train")
       .select(col("w")).distinct()
     val perWord = toks.select(col("w")).distinct()
@@ -2077,7 +2102,7 @@ object TextOps {
     val sp = documents.sparkSession
     import sp.implicits._
     val freq = documents
-      .select(explode(expr(toksExprFor(documents))).as("token"))
+      .select(explode(expr(tokensSql)).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("f"))
     // rank and cumulative mass share the (freq desc, token) total order
     // (ordering by rk ≡ ordering by the rank key), so one fused pass
@@ -2109,9 +2134,7 @@ object TextOps {
     * share a percentile by construction. Half-up integer ppm.
     */
   def qualityPctBySource(documents: DataFrame): DataFrame = {
-    val q = qualityScore(documents)
-      .select(col("doc_id"), expr("cast(round(quality * 1000000) as bigint)").as("q_ppm"))
-      .join(documents.select(col("doc_id"), col("source")), "doc_id")
+    val q = documents.select(col("doc_id"), col("source"), qualityPpm.as("q_ppm"))
     val cnt = q.groupBy(col("source"), col("q_ppm")).agg(count(lit(1)).as("c"))
     val w = Window.partitionBy(col("source")).orderBy(col("q_ppm"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2145,10 +2168,7 @@ object TextOps {
       .select(col("doc_id"),
         expr("cast(round(clf_score * 1000000) as bigint)").as("score_u"))
       .filter(col("score_u").isNotNull)
-    val q = qualityScore(documents)
-      .select(col("doc_id"),
-        expr("cast(round(quality * 1000000) as bigint)").as("q_ppm"))
-    clf.join(q, "doc_id")
+    clf.join(documents.select(col("doc_id"), qualityPpm.as("q_ppm")), "doc_id")
   }
 
   def classifierReliability(documents: DataFrame, bins: Int = 10): DataFrame = {
@@ -2252,11 +2272,8 @@ object TextOps {
       .select(col("doc_id"),
         expr("cast(round(clf_score * 1000000) as bigint)").as("score_u"))
       .filter(col("score_u").isNotNull)
-      .join(qualityScore(documents)
-        .select(col("doc_id"),
-          expr("cast(round(quality * 1000000) as bigint) >= 500000").as("pos")),
+      .join(documents.select(col("doc_id"), col("source"), (qualityPpm >= 500000).as("pos")),
         "doc_id")
-      .join(documents.select(col("doc_id"), col("source")), "doc_id")
     val grid = scored.groupBy(col("source"), col("score_u"))
       .agg(sum(expr("cast(pos as bigint)")).as("np"),
         sum(expr("cast(not pos as bigint)")).as("nn"))
@@ -2296,11 +2313,8 @@ object TextOps {
       .select(col("doc_id"),
         expr("cast(round(clf_score * 1000000) as bigint)").as("score_u"))
       .filter(col("score_u").isNotNull)
-      .join(qualityScore(documents)
-        .select(col("doc_id"),
-          expr("cast(round(quality * 1000000) as bigint) >= 500000").as("pos")),
+      .join(documents.select(col("doc_id"), col("source"), (qualityPpm >= 500000).as("pos")),
         "doc_id")
-      .join(documents.select(col("doc_id"), col("source")), "doc_id")
       .withColumn("neg_s", -col("score_u"))
     // rank and relevant-cumulative share the (source, −score, doc_id)
     // order, so they ride the FUSED one-exchange primitive (r16)
@@ -2354,7 +2368,7 @@ object TextOps {
     val stop = Seq("the", "a", "of", "and", "to", "in")
     val fb = bm25TopK(documents, queryTerms, fbDocs, k1, b).select(col("doc_id"))
     val expansion = documents.join(fb, Seq("doc_id"), "left_semi")
-      .select(explode(expr(toksExprFor(documents))).as("token"))
+      .select(explode(expr(tokensSql)).as("token"))
       .filter(!col("token").isin(queryTerms ++ stop: _*))
       .groupBy(col("token")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("token")).limit(fbTerms)
@@ -2363,8 +2377,8 @@ object TextOps {
       .unionByName(expansion)
     val toks = documents.select(
       col("doc_id"),
-      expr(s"size(${toksExprFor(documents)})").cast(DoubleType).as("dl"),
-      explode(expr(toksExprFor(documents))).as("token"))
+      expr(s"size($tokensSql)").cast(DoubleType).as("dl"),
+      explode(expr(tokensSql)).as("token"))
     val hits = toks.join(broadcast(terms), Seq("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).cast(DoubleType).as("tf"), first(col("dl")).as("dl"),
@@ -2372,7 +2386,7 @@ object TextOps {
     val dfs = hits.groupBy(col("token")).agg(count(lit(1)).cast(DoubleType).as("df"))
     val corpus = documents.agg(
       count(lit(1)).cast(DoubleType).as("n_docs"),
-      avg(expr(s"size(${toksExprFor(documents)})").cast(DoubleType)).as("avgdl"))
+      avg(expr(s"size($tokensSql)").cast(DoubleType)).as("avgdl"))
     hits
       .join(broadcast(dfs), Seq("token"))
       .crossJoin(broadcast(corpus))
@@ -2404,7 +2418,7 @@ object TextOps {
   def corpusMixTemperature(documents: DataFrame, tauPpm: Long = 700000L): DataFrame = {
     require(tauPpm >= 100000L && tauPpm <= 1000000L, s"alpha out of range: $tauPpm")
     val tf = documents
-      .select(col("source"), expr(s"size(${toksExprFor(documents)})").as("nt"))
+      .select(col("source"), expr(s"size($tokensSql)").as("nt"))
       .groupBy(col("source")).agg(sum(col("nt")).as("n_tokens"))
     val tot = tf.agg(sum(col("n_tokens")).as("tot"))
     val shares = tf.crossJoin(broadcast(tot))
@@ -2462,10 +2476,7 @@ object TextOps {
       .select(col("doc_id"),
         expr("cast(round(clf_score * 1000000) as bigint)").as("score_u"))
       .filter(col("score_u").isNotNull)
-      .join(qualityScore(documents)
-        .select(col("doc_id"),
-          expr("cast(round(quality * 1000000) as bigint) >= 500000").as("pos")),
-        "doc_id")
+      .join(documents.select(col("doc_id"), (qualityPpm >= 500000).as("pos")), "doc_id")
       .withColumn("neg_s", -col("score_u"))
     val ranked = ShardedOrder.withGlobalRank(scored, "grank", 32,
       col("neg_s"), col("doc_id"))
@@ -2516,7 +2527,7 @@ object TextOps {
   def burrowsDelta(documents: DataFrame, topK: Int = 30): DataFrame = {
     require(topK >= 1, s"topK must be positive, got $topK")
     val tf = documents
-      .select(col("source"), explode(expr(toksExprFor(documents))).as("token"))
+      .select(col("source"), explode(expr(tokensSql)).as("token"))
       .groupBy(col("source"), col("token")).agg(count(lit(1)).as("c"))
     val tot = tf.groupBy(col("source")).agg(sum(col("c")).as("tot"))
     val top = tf.groupBy(col("token")).agg(sum(col("c")).as("ct"))
@@ -2557,7 +2568,7 @@ object TextOps {
     */
   def ttrBySource(documents: DataFrame): DataFrame = {
     val tf = documents
-      .select(col("source"), explode(expr(toksExprFor(documents))).as("token"))
+      .select(col("source"), explode(expr(tokensSql)).as("token"))
       .groupBy(col("source"), col("token"))
       .agg(count(lit(1)).as("c"))
     tf.groupBy(col("source"))
@@ -2640,9 +2651,7 @@ object TextOps {
     * means (never a signed division).
     */
   def sourceAblation(documents: DataFrame): DataFrame = {
-    val q = qualityScore(documents)
-      .select(col("doc_id"), expr("cast(round(quality * 1000000) as bigint)").as("q_ppm"))
-      .join(documents.select(col("doc_id"), col("source")), "doc_id")
+    val q = documents.select(col("source"), qualityPpm.as("q_ppm"))
     val perSrc = q.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("q_ppm")).as("sq"))
     val tot = perSrc.agg(sum(col("n_docs")).as("n_all"), sum(col("sq")).as("sq_all"))
@@ -2671,7 +2680,7 @@ object TextOps {
     */
   def tokenBurstiness(documents: DataFrame, k: Int = 10): DataFrame = {
     val perDoc = documents
-      .select(col("doc_id"), explode(expr(toksExprFor(documents))).as("token"))
+      .select(col("doc_id"), explode(expr(tokensSql)).as("token"))
       .groupBy(col("token"), col("doc_id")).agg(count(lit(1)).as("c"))
     val n = documents.agg(count(lit(1)).as("n"))
     perDoc.groupBy(col("token"))
@@ -2840,11 +2849,8 @@ object TextOps {
     */
   def curriculumPhases(documents: DataFrame, phases: Int = 4): DataFrame = {
     require(phases >= 1, s"phases out of range: $phases")
-    val scored = qualityScore(documents)
-      .join(tokenCounts(documents).select(col("doc_id"), col("n_tokens")), "doc_id")
-      .select(col("doc_id"),
-        expr("cast(round(quality * 1000000) as bigint)").as("q_ppm"),
-        col("n_tokens").cast(LongType).as("n_tokens"))
+    val scored = documents.select(col("doc_id"), qualityPpm.as("q_ppm"),
+      expr(s"size($tokensSql)").cast(LongType).as("n_tokens"))
     val cum = ShardedOrder.withRunningSum(scored, col("n_tokens"), "cum", 32,
       col("q_ppm").desc, col("doc_id"))
     val tot = scored.agg(sum(col("n_tokens")).as("total"))

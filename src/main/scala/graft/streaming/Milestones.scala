@@ -66,7 +66,13 @@ object Milestones {
     * RocksDB state from growing with the all-time user count). TTL
     * requires processing-time semantics, so a non-NONE ttl switches
     * the processor to TimeMode.ProcessingTime; the spec pins both the
-    * expiry reset and restart-from-checkpoint state survival.
+    * expiry reset and restart-from-checkpoint state survival. A
+    * ProcessingTime transformWithState always asks for another batch
+    * (Spark 4.1), so a caller driving a ttl'd query with
+    * `Trigger.AvailableNow()` must set
+    * `spark.sql.streaming.noDataMicroBatches.enabled=false` before
+    * `start()`, or the run never terminates; expiry is still applied on
+    * read, so expired state reads as absent in the next data batch.
     */
   def milestones(purchases: Dataset[Purchase],
                  stepCents: Long = 10000L,

@@ -13,27 +13,6 @@ class DedupTextOpsSpec extends SparkSpec {
     (4L, "completely different words appear here without any overlap whatsoever today again", "de", "s2", 80L))
     .toDF("doc_id", "text", "lang", "source", "n_chars")
 
-  test("tokenize staging: every text op yields identical output staged and unstaged, " +
-       "and the staged plan contains no tokenizer regex") {
-    val staged = TextOps.tokenize(docs)
-    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.toString).toSet
-    assert(rows(TextOps.tokenCounts(staged)) == rows(TextOps.tokenCounts(docs)))
-    assert(rows(TextOps.langId(staged)) == rows(TextOps.langId(docs)))
-    assert(rows(TextOps.qualityScore(staged)) == rows(TextOps.qualityScore(docs)))
-    assert(rows(TextOps.gopherQuality(staged)) == rows(TextOps.gopherQuality(docs)))
-    assert(rows(TextOps.repetitionStats(staged)) == rows(TextOps.repetitionStats(docs)))
-    assert(rows(TextOps.corpusStats(staged)) == rows(TextOps.corpusStats(docs)))
-    assert(rows(TextOps.chunks(staged)) == rows(TextOps.chunks(docs)))
-    // consuming the staged column means the op itself runs NO tokenizer —
-    // the regex appears once, in the staging projection, not per family
-    val plan = TextOps.qualityScore(staged.persist()).queryExecution
-      .optimizedPlan.toString
-    staged.unpersist()
-    assert(!plan.contains("regexp_extract_all"),
-      s"staged qualityScore must not re-tokenize:\n$plan")
-  }
-
   test("single-pass tokenization: unstaged quality/gopher plans run the tokenizer regex once") {
     // analyzed (not optimized) plan: the local fixture constant-folds to a
     // LocalRelation under the optimizer, hiding the expression tree
@@ -42,6 +21,21 @@ class DedupTextOpsSpec extends SparkSpec {
       val hits = "regexp_extract_all".r.findAllIn(plan).length
       assert(hits == 1, s"expected exactly one tokenizer run, found $hits in:\n$plan")
     }
+    // the full corpus pipeline filters on all three families in ONE
+    // predicate that tokenizes once, wherever the optimizer pushes it;
+    // parquet input keeps the optimizer from folding the plan away
+    val dir = java.nio.file.Files.createTempDirectory("graft-corpus-plan").resolve("docs").toString
+    docs.write.parquet(dir)
+    val plan = Pipelines.runCorpusPipelineFull(spark.read.parquet(dir)).queryExecution.optimizedPlan
+    val signalFilters = plan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
+          if f.condition.sql.contains("regexp_extract_all") => f.condition.sql
+    }
+    assert(signalFilters.size == 1, s"expected one signal filter in:\n$plan")
+    val hits = "regexp_extract_all".r.findAllIn(signalFilters.head).length
+    assert(hits == 1, s"expected exactly one tokenizer run in the filter, found $hits in:\n$plan")
+    assert(plan.collect { case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r }.isEmpty,
+      s"the full pipeline must persist nothing:\n$plan")
   }
 
   test("exactDedup keeps the minimum doc_id per distinct text") {

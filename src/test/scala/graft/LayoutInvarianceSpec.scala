@@ -7,8 +7,8 @@ import graft.sources.Tables
 
 /** Results must not depend on the physical layout. AQE sizes cached and
   * checkpointed frames from the data it observes, so the partition count
-  * an operator sees inside a fixpoint or a persisted survivor set varies
-  * with data and settings; the rows may not. Each entry of `queries` runs
+  * an operator sees inside a fixpoint varies with data and settings; the
+  * rows may not. Each entry of `queries` runs
   * over sf0.001 at every shuffle-partition count in `partitionCounts`, and
   * the sorted rows must be identical. Extend `queries` to widen the check.
   */

@@ -116,4 +116,73 @@ class PipelinesSpec extends SparkSpec {
     assert(!byDoc.contains(9L)) // junk gone
     assert(byDoc.contains(1L) && byDoc(1L).nonEmpty) // survivor chunked
   }
+
+  test("runCorpusPipelineFull: the fused keep predicate keeps exactly the docs " +
+       "all three filter faces keep") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{DedupOps, TextOps}
+    // content words unique per doc (so no two docs are near-dups), every
+    // third token the stopword "the": quality 0.5 + 1/6, all Gopher rules
+    // pass, no repeated trigram
+    def plain(doc: Int)(i: Int): String = f"d$doc%02dw$i%03d"
+    def words(n: Int, w: Int => String): Seq[String] =
+      (0 until n).map(i => if (i % 3 == 0) "the" else w(i))
+    def text(ws: Seq[String], perLine: Int = 1000): String =
+      ws.grouped(perLine).map(_.mkString(" ")).mkString("\n")
+    val minQ = 0.508
+    val docs = Seq(
+      1 -> text(words(60, plain(1))),                // keeps; one line
+      2 -> text(words(60, plain(2)), perLine = 12),  // keeps; five lines
+      // quality 0.5 + 2/400 < minQ: two stopwords in 200 tokens
+      3 -> text((0 until 200).map(i => if (i < 2) "the" else f"d03w$i%03d")),
+      4 -> text(words(30, i => f"d04word$i%03d")),   // n_tokens < 50
+      5 -> text(words(60, i => f"d05${"x" * 20}$i%03d")), // mean word length > 10
+      6 -> (text(words(60, plain(6))) + " #" * 8),   // symbol ratio ≥ 0.1
+      7 -> words(60, plain(7)).grouped(10)           // every line a bullet
+        .map("- " + _.mkString(" ")).mkString("\n"),
+      8 -> words(60, plain(8)).grouped(10).zipWithIndex // half the lines end in "..."
+        .map { case (l, i) => l.mkString(" ") + (if (i % 2 == 0) "..." else "") }.mkString("\n"),
+      9 -> text(words(60, i => if (i % 3 == 1) f"${9000 + i}" else plain(9)(i))), // alpha ratio
+      // one stopword in 50 tokens: quality 0.5 + 1/100 ≥ minQ, stop_hits < 2
+      10 -> text((0 until 50).map(i => if (i == 0) "the" else f"d10w$i%03d")),
+      11 -> text(Seq.fill(20)(Seq("the", "alpha", "beta")).flatten), // dup trigram ratio > 0.5
+      12 -> "")                                      // empty text
+      .map { case (id, t) => (id.toLong, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    assert(DedupOps.minhashCandidatePairs(docs).isEmpty, "fixture docs must not be near-dups")
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("doc_id").as[Long].collect().toSet
+    val all = (1L to 12L).toSet
+    val failQ = all -- ids(TextOps.qualityScore(docs).filter(col("quality") >= minQ))
+    val failG = all -- ids(TextOps.gopherQuality(docs).filter(col("keep")))
+    val failR = all -- ids(TextOps.repetitionStats(docs).filter(col("dup_trigram_ratio") <= 0.5))
+    // each doc 3–11 fails exactly one family; the empty doc fails quality and Gopher
+    assert(failQ == Set(3L, 12L), s"quality: $failQ")
+    assert(failG == Set(4L, 5L, 6L, 7L, 8L, 9L, 10L, 12L), s"gopher: $failG")
+    assert(failR == Set(11L), s"repetition: $failR")
+    val fused = ids(Pipelines.runCorpusPipelineFull(docs, minQuality = minQ))
+    assert(fused == all -- failQ -- failG -- failR)
+    assert(fused == Set(1L, 2L))
+  }
+
+  test("corpus pipelines leave no cached data behind") {
+    import spark.implicits._
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val stopdense = "the a of and to in " * 10
+    val docs = Seq((1L, stopdense), (2L, stopdense), (3L, stopdense + "again"),
+        (9L, "zz qq ww zz qq ww zz qq"))
+      .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    spark.catalog.clearCache()
+    // compared by id, not count: the context cleaner may free blocks
+    // other tests left behind while this one runs
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Pipelines.runCorpusPipelineFull(docs).collect()
+    Pipelines.runCorpusPipeline(docs).collect()
+    assert(cacheManager.isEmpty, "a corpus pipeline left cached data behind")
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"blocks still cached: $left")
+  }
 }

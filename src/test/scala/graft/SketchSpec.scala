@@ -54,7 +54,7 @@ class SketchSpec extends SparkSpec {
       .writeStream.format("memory").queryName("qs_stream").outputMode("complete")
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    awaitBounded(q, 120000)
     val streamed = spark.table("qs_stream").collect()
       .map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
     val batch = data.groupBy(col("grp")).agg(agg(col("v")).as("est")).collect()
@@ -133,7 +133,7 @@ class SketchSpec extends SparkSpec {
       .writeStream.format("memory").queryName("kmv_stream").outputMode("complete")
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    awaitBounded(q, 120000)
     val streamed = spark.table("kmv_stream").collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     val batch = data.groupBy(col("grp")).agg(agg(col("h")).as("s")).collect()

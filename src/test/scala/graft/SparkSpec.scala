@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -12,6 +13,14 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session shared across suites; JVM exit cleans up
+
+  /** Waits for a bounded (AvailableNow) streaming query: fails the test
+    * when it has not terminated within `ms`, and stops it either way so a
+    * hung query never outlives its test.
+    */
+  protected def awaitBounded(q: StreamingQuery, ms: Long): Unit =
+    try assert(q.awaitTermination(ms), s"streaming query ${q.id} did not terminate within $ms ms")
+    finally q.stop()
 }
 
 object SparkSpec {

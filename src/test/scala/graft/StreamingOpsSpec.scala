@@ -57,7 +57,7 @@ class StreamingOpsSpec extends SparkSpec {
       .parquet(in.toString)
     val agg = StreamingOps.tumblingCounts(StreamingOps.withEventTimeBounds(stream))
     val q = StreamingOps.availableNowWriter(agg, out, ckpt).start()
-    q.awaitTermination(180000)
+    awaitBounded(q, 180000)
 
     val rows = spark.read.parquet(out)
       .collect().map(r => (r.getTimestamp(0).toString, r.getString(1)) -> r.getLong(2)).toMap
@@ -92,7 +92,7 @@ class StreamingOpsSpec extends SparkSpec {
     val s = spark.readStream.schema(schema).option("recursiveFileLookup", "true").parquet(sin)
     val q = StreamingOps.availableNowWriter(
       StreamingOps.purchaseAttribution(p, s), out, ckpt).start()
-    q.awaitTermination(180000)
+    awaitBounded(q, 180000)
     val got = spark.read.parquet(out).collect().map(r => (r.getLong(0), r.getTimestamp(3).toString))
     assert(got.toSeq == Seq((1L, "2024-01-08 00:00:00.0")))
   }
@@ -142,7 +142,7 @@ class StreamingOpsSpec extends SparkSpec {
       .option("recursiveFileLookup", "true").parquet(sin)
     val q = StreamingOps.availableNowWriter(
       StreamingOps.purchaseAttributionOuter(p, s), out, ckpt).start()
-    q.awaitTermination(180000)
+    awaitBounded(q, 180000)
     val got = spark.read.parquet(out).collect()
       .map(r => (r.getLong(0), Option(r.getTimestamp(3)).map(_.toString))).toMap
     assert(got.get(1L).exists(_.contains("2024-01-08 00:00:00.0")),
@@ -162,7 +162,7 @@ class StreamingOpsSpec extends SparkSpec {
     val stream = spark.readStream.schema(eventsDf.schema).parquet(in)
     val deduped = StreamingOps.dedupWithinWatermark(StreamingOps.withEventTimeBounds(stream))
     val q = StreamingOps.availableNowWriter(deduped, out, ckpt).start()
-    q.awaitTermination(120000)
+    awaitBounded(q, 120000)
 
     val got = spark.read.parquet(out)
     assert(got.count() == 3)
@@ -184,7 +184,7 @@ class StreamingOpsSpec extends SparkSpec {
       val q = StreamingOps.jdbcSinkWriter(stream, url, "stream_mart", "app", "app",
           ckpt, numPartitions = 2)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      awaitBounded(q, 120000)
     }
     runOnce()
     assert(readBack().count() == 2)
@@ -220,7 +220,7 @@ class StreamingOpsSpec extends SparkSpec {
             ckptPath, numPartitions = 2)
       val q = writer
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      awaitBounded(q, 120000)
     }
     // Forced replay: clone the checkpoint WITHOUT the batch-0 commit
     // marker — byte-for-byte the crash window between sink write and
@@ -280,7 +280,7 @@ class StreamingOpsSpec extends SparkSpec {
     val q = gated.writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    awaitBounded(q, 120000)
     val got = spark.read.parquet(out).select("doc_id", "keep")
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(got == Map(1L -> true, 2L -> false))
@@ -306,7 +306,7 @@ class StreamingOpsSpec extends SparkSpec {
         .option("maxFilesPerTrigger", "1").parquet(in)
       val q = StreamingOps.corpusScreenWriter(stream, idx, out, ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      awaitBounded(q, 120000)
     }
     run()
     val clean1 = spark.read.parquet(out).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -343,7 +343,7 @@ class StreamingOpsSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1).parquet(in)
       val q = StreamingOps.mvStreamWriter(stream, state, ckptPath)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      awaitBounded(q, 120000)
     }
     run(ckpt)
     assert(StreamingOps.mvVersions(state).sorted == Seq(0L, 1L),
@@ -414,7 +414,7 @@ class StreamingOpsSpec extends SparkSpec {
       .writeStream.format("memory").queryName("enrich_stream").outputMode("complete")
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    awaitBounded(q, 120000)
     val streamed = spark.table("enrich_stream").collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
     val batch = StreamingOps.enrichWithSegments(events, dim).collect()
@@ -444,7 +444,7 @@ class StreamingOpsSpec extends SparkSpec {
         .option("maxFilesPerTrigger", "1").parquet(in)
       val q = StreamingOps.driftMonitorWriter(stream, refDir, out, ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      awaitBounded(q, 120000)
     }
     runOnce()
     b1.coalesce(1).write.mode("append").parquet(in)
@@ -494,7 +494,7 @@ class StreamingOpsSpec extends SparkSpec {
         .option("maxFilesPerTrigger", "1").parquet(in)
       val q = StreamingOps.seasonalMonitorWriter(stream, baseDir, out, ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      awaitBounded(q, 120000)
     }
     runOnce()
     b1.coalesce(1).write.mode("append").parquet(in)
@@ -545,7 +545,7 @@ class StreamingOpsSpec extends SparkSpec {
       .as[graft.streaming.Debounce.Event]
     val kept = graft.streaming.Debounce.debounce(stream).toDF()
     val q = StreamingOps.availableNowWriter(kept, out, ckpt).start()
-    q.awaitTermination(180000)
+    awaitBounded(q, 180000)
     val got = spark.read.parquet(out).collect().map(_.getAs[Long]("event_id")).sorted
     assert(got.sameElements(Array(1L, 4L)),
       s"burst must stay collapsed across micro-batches: ${got.toSeq}")
@@ -625,7 +625,7 @@ class StreamingOpsSpec extends SparkSpec {
           .option("checkpointLocation", ckpt)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(180000)
+        awaitBounded(q, 180000)
       }
       // run 1: $60 + $50 → cum 11000, crossing at mark 10000
       Seq(Purchase(1L, ts("2024-01-01 00:00:00"), 60.0, 1L),
@@ -660,12 +660,18 @@ class StreamingOpsSpec extends SparkSpec {
     // middle. (ProcessingTime mode + a continuous trigger never settles
     // for processAllAvailable: expiry work keeps every trigger busy, so
     // the bounded-run shape is the deterministic way to drive TTL.)
+    // A ProcessingTime transformWithState always asks for another batch,
+    // so AvailableNow ends only with no-data batches off (Milestones'
+    // scaladoc); expired state still reads as absent on the next read.
     val in = Files.createTempDirectory("graft-ttl-in")
     val out = Files.createTempDirectory("graft-ttl-out").toString
     val ckpt = Files.createTempDirectory("graft-ttl-ckpt").toString
     val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prevNoData = spark.conf.getOption(noDataKey)
+    spark.conf.set(noDataKey, "false")
     try {
       def runOnce(): Unit = {
         val stream = spark.readStream
@@ -679,7 +685,7 @@ class StreamingOpsSpec extends SparkSpec {
           .option("checkpointLocation", ckpt)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(180000)
+        awaitBounded(q, 180000)
       }
       // run 1: $120 → cum 12000, crossing at mark 10000; state written
       // with a 2s TTL
@@ -699,9 +705,15 @@ class StreamingOpsSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
       assert(got == Set((7L, 1L, 10000L, 12000L), (7L, 2L, 10000L, 12000L)),
         s"TTL must reset the dormant cumulative: $got")
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    } finally {
+      prevProvider match {
+        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
+      prevNoData match {
+        case Some(v) => spark.conf.set(noDataKey, v)
+        case None => spark.conf.unset(noDataKey)
+      }
     }
   }
 }

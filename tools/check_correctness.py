@@ -6,9 +6,10 @@ Usage: python3 tools/check_correctness.py <sf_dir> <verify_out_dir>
 For each query dir under verify_out: load the Spark result parquet and run
 the matching oracle SQL in DuckDB over the sf_dir tables; compare rowcount,
 schema (column names), and a hash of the value matrix with columns sorted
-by name and rows sorted canonically.
+by name and rows sorted canonically. Each oracle run is timed, and the ten
+slowest are printed at the end.
 """
-import sys, os, json, glob
+import sys, os, json, glob, time
 import decimal
 import duckdb
 
@@ -78,6 +79,7 @@ def main(sf_dir, out_dir):
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     results = {}
+    oracle_s = {}
     for qdir in sorted(os.listdir(out_dir)):
         qpath = os.path.join(out_dir, qdir)
         if not os.path.isdir(qpath):
@@ -90,6 +92,7 @@ def main(sf_dir, out_dir):
         if qdir not in oracle:
             results[qdir] = {"status": "rows_only", "rows": len(spark_rows)}
             continue
+        t0 = time.perf_counter()
         try:
             rel = con.sql(oracle[qdir])
             o_cols = list(rel.columns)
@@ -99,6 +102,8 @@ def main(sf_dir, out_dir):
         except Exception as e:
             results[qdir] = {"status": "oracle_error", "error": str(e)[:200]}
             continue
+        finally:
+            oracle_s[qdir] = time.perf_counter() - t0
         if o_hugeint:
             # Policy breach, not just a model note: the driver hashes these
             # through pandas float64 while the Spark parquet stays int64 —
@@ -151,6 +156,10 @@ def main(sf_dir, out_dir):
     for k, v in results.items():
         if v.get("status") != "PASS":
             print(k, json.dumps(v, default=str)[:600])
+    slowest = sorted(oracle_s.items(), key=lambda kv: -kv[1])[:10]
+    print(f"\nslowest oracle runs (of {len(oracle_s)}, {sum(oracle_s.values()):.1f} s in all):")
+    for k, secs in slowest:
+        print(f"  {secs:8.2f} s  {k}")
     print(f"\nPASS {npass}  FAIL {nfail}  other {len(results)-npass-nfail}  total {len(results)}")
 
 
