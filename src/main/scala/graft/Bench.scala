@@ -9,7 +9,19 @@ package graft
   * empty scan (round-1 verdict, "What's wrong" #3).
   */
 object Bench {
+  /** The optional query subset of Bench's arguments, or the message it
+    * exits with. */
+  def parseArgs(args: Seq[String], registered: collection.Set[String])
+      : Either[String, Option[Set[String]]] = args match {
+    case Seq() => Right(None)
+    case Seq(names) => Verify.querySubset(names, registered).map(Some(_))
+    case _ => Left("usage: graft.Bench [query,query,...]")
+  }
+
   def main(args: Array[String]): Unit = {
+    // optional arg: comma-separated query names — isolate one query's
+    // timing outside the full suite (suite-state A/B diagnosis)
+    val only = parseArgs(args.toSeq, SparkEntry.queries.keySet).fold(Verify.exitWith, identity)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.getOrCreate("graft-bench")
     // Session-wide warm-up on the smallest table, exercising the plan
@@ -44,16 +56,18 @@ object Bench {
     // have to persist across the whole run to poison both. Queries whose
     // two passes still disagree by >3x are flagged "suspect": true in
     // BENCH_local.json so a round artifact can't silently ship a phantom.
-    // optional arg: comma-separated query names — isolate one query's
-    // timing outside the full suite (suite-state A/B diagnosis)
-    val only = args.headOption.map(_.split(",").toSet)
     val registry = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    def once(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // Janino compiles so far in this JVM (one per compiled-class cache miss)
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // (seconds, compiles) of one run
+    def once(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long) = {
+      val c0 = compiles()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        ((System.nanoTime() - t0) / 1e9, compiles() - c0)
       } finally {
         // queries that persist sub-frames (ann_recall, trained IVF) hand
         // cache lifecycle to the caller: drop them even on failure so
@@ -64,18 +78,19 @@ object Bench {
       }
     }
     def timedPass(pass: String, qs: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)],
-                  warmup: Boolean): Map[String, Double] =
+                  warmup: Boolean): Map[String, (Double, Long)] =
       qs.map { case (name, fn) =>
         // stderr marker so JVM warnings (task-binary size, GC) between two
         // markers attribute to a query — the r11 hygiene pass had to guess
         System.err.println(s"[bench] $pass $name")
         val t =
           try { if (warmup) once(name, fn); once(name, fn) }
-          catch { case e: Throwable => System.err.println(s"[bench] $name failed ($pass): $e"); -1.0 }
+          catch { case e: Throwable => System.err.println(s"[bench] $name failed ($pass): $e"); (-1.0, -1L) }
         name -> t
       }.toMap
-    val passA = timedPass("A", registry, warmup = true)
-    val passB = timedPass("B", registry.reverse, warmup = false)
+    val runA = timedPass("A", registry, warmup = true)
+    val passA = runA.map { case (k, v) => k -> v._1 }
+    val passB = timedPass("B", registry.reverse, warmup = false).map { case (k, v) => k -> v._1 }
     // cross-pass disagreement >3x on a non-trivial reading (>0.5 s floor:
     // sub-half-second queries jitter 3x on scheduler noise alone and are
     // not what the flag exists to catch)
@@ -90,6 +105,7 @@ object Bench {
     val passC: Map[String, Double] =
       if (suspects0.isEmpty) Map.empty
       else timedPass("C", registry.filter(q => suspects0.contains(q._1)), warmup = false)
+        .map { case (k, v) => k -> v._1 }
     val results = registry.map { case (name, _) =>
       val samples = Seq(passA(name), passB(name)) ++ passC.get(name)
       val ok = samples.filter(_ >= 0)
@@ -208,8 +224,14 @@ object Bench {
     // Per query: the cross-pass min (sec) plus both raw pass readings and
     // the suspect flag — a consumer can both trust `sec` (min of two
     // temporally separated samples) and see WHY a number was flagged.
+    // `compiles`: Janino compiles of the timed pass-A run (null: failed).
+    // After its warm-up run this reads 0 unless the run generated a source
+    // the warm-up did not, or one the compiled-class cache had evicted. It
+    // follows `sec`, so the prior-artifact regex above still parses.
     val fullQs = results.map { case (k, v) =>
+      val c = runA(k)._2
       "\"" + k + "\":{\"sec\":" + full(v) +
+        ",\"compiles\":" + (if (c < 0) "null" else c.toString) +
         ",\"pass_a\":" + full(passA(k)) + ",\"pass_b\":" + full(passB(k)) +
         passC.get(k).map(c => ",\"pass_c\":" + full(c)).getOrElse("") +
         ",\"suspect\":" + suspect(k) + "}"

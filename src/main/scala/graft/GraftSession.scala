@@ -4,14 +4,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Defaults are tuned for the harness (`local[32]`, single JVM) but every
-  * choice is the one we'd make on a real cluster too:
+  * Every default is the one we'd make on a real cluster too:
   *  - AQE on: runtime join re-planning + skew-join splitting, which is the
   *    scale path for the TPC-H-style joins (SURVEY.md §4).
   *  - shuffle.partitions follows core count locally; on a 1000-executor
   *    cluster this is overridden by the submitter (AQE coalesces anyway).
   *  - UTC session timezone: required for DuckDB-oracle timestamp parity
   *    (SURVEY.md §7.3.3).
+  *  - Each generated-code shape compiles once per JVM: class names carry
+  *    no stage id, and the compiled-class cache holds a whole suite's
+  *    shapes (SCALE.md r22).
   */
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -65,6 +67,21 @@ object GraftSession {
       // partitioning, so a join on its key re-shuffles it (SCALE.md r18).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // Whole-stage codegen puts the stage id in each generated class's
+      // name by default, so one pipeline shape planned as another AQE
+      // stage, round, factor or query is a new source and compiles again.
+      // Off, identical pipelines share one source and one compiled class
+      // (ann_audit at sf0.01, one cold pass: ~405 → ~195 Janino compiles).
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      // Spark's compiled-class cache is a 100-entry LRU, and one ann_audit
+      // pass needs ~200 entries even without ids, so each round evicted
+      // the shapes the next one needed: a second pass in the same JVM
+      // recompiled ~300 classes. The whole registry at sf0.001 fills 5014
+      // entries (2988 distinct sources; Spark keys each by the thread's
+      // class loader too), so 8192 holds every registered query's classes
+      // at once, for ~37 MB more metaspace than the default cap. Static:
+      // it is read once, when the JVM first generates code.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
 

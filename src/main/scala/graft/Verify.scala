@@ -69,11 +69,38 @@ object Verify {
     }
   }
 
+  /** The registered queries a comma-separated main argument names, or
+    * the message the main exits with: at least one name, and every name
+    * registered, so a typo fails loudly instead of running nothing. */
+  def querySubset(arg: String, registered: collection.Set[String]): Either[String, Set[String]] = {
+    val names = arg.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names.filterNot(registered).toSeq.sorted
+    if (names.isEmpty) Left(s"no query named in '$arg'")
+    else if (unknown.nonEmpty) Left(s"unknown queries: ${unknown.mkString(", ")}")
+    else Right(names)
+  }
+
+  val usage = "usage: graft.Verify <sf dir> <out dir> [query,query,...]"
+
+  /** `(sfDir, outDir, subset)` of Verify's arguments, or the message it
+    * exits with. The optional third argument names a subset of queries
+    * (local iteration on one operator without the full dump). */
+  def parseArgs(args: Seq[String], registered: collection.Set[String])
+      : Either[String, (String, String, Option[Set[String]])] = args match {
+    case Seq(sf, out) => Right((sf, out, None))
+    case Seq(sf, out, names) => querySubset(names, registered).map(s => (sf, out, Some(s)))
+    case _ => Left(usage)
+  }
+
+  /** Prints `msg` to stderr and exits the JVM with status 2. */
+  def exitWith(msg: String): Nothing = {
+    System.err.println(msg)
+    sys.exit(2)
+  }
+
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query names — local iteration on a
-    // single operator without paying the full 87-query dump
-    val subset = args.lift(2).map(_.split(",").toSet)
+    val (sfDir, outDir, subset) =
+      parseArgs(args.toSeq, SparkEntry.queries.keySet).fold(exitWith, identity)
     val spark = GraftSession.getOrCreate("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

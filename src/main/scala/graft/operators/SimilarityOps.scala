@@ -539,8 +539,12 @@ object SimilarityOps {
 
   /** The drift audits' per-factor runner. `body(f, corpus)` builds factor
     * `f`'s one-row result over `corpusOf(f)`, which the runner persists
-    * for the body's duration and unpersists when the body returns or
-    * throws. Factors run concurrently, one driver thread each from a pool
+    * and builds in one job before the body runs, and unpersists when the
+    * body returns or throws. Built first, because AQE turns every scan of
+    * a not-yet-built cache into its own cache-building stage job (12
+    * one-task jobs per factor in `graphTopKRescoredDrift`); the build is
+    * a `noop` write, which adds no Exchange, where a `count()` adds one.
+    * Factors run concurrently, one driver thread each from a pool
     * that lives for this call: every body is a chain of small eager jobs
     * over its own corpus slice, independent of its siblings, so
     * submitting them together lets the scheduler overlap their stages on
@@ -566,7 +570,8 @@ object SimilarityOps {
         pool.submit(new java.util.concurrent.Callable[DataFrame] {
           def call(): DataFrame = try {
             sc.setJobGroup(group, s"drift factor $f")
-            body(f, corpus.persist())
+            corpus.persist().write.format("noop").mode("overwrite").save()
+            body(f, corpus)
           } catch { case e: Throwable =>
             if (firstError.compareAndSet(null, e)) sc.cancelJobGroupAndFutureJobs(group)
             throw e

@@ -28,14 +28,20 @@ class DriftAuditSpec extends SparkSpec {
   private def cacheManager =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
 
-  /** Records (job group, submission time) of every factorSweep job. */
+  /** Records (job group, submission time) of every factorSweep job;
+    * `running` opens at factor 2's first job (each factor also runs a
+    * corpus-build job of its own, so any job of the group is not enough).
+    */
   private final class SweepJobs extends SparkListener {
     val starts = new ConcurrentLinkedQueue[(String, Long)]()
     val running = new CountDownLatch(1)
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .filter(_.startsWith("factorSweep-"))
-        .foreach { g => starts.add(g -> e.time); running.countDown() }
+      Option(e.properties).foreach { p =>
+        Option(p.getProperty("spark.jobGroup.id")).filter(_.startsWith("factorSweep-")).foreach { g =>
+          starts.add(g -> e.time)
+          if (p.getProperty("spark.job.description") == "drift factor 2") running.countDown()
+        }
+      }
   }
 
   test("factorSweep: a failing factor propagates its error, cancels the " +
