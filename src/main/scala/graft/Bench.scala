@@ -9,13 +9,13 @@ package graft
   * empty scan (round-1 verdict, "What's wrong" #3).
   */
 object Bench {
-  /** The optional query subset of Bench's arguments, or the message it
-    * exits with. */
+  /** The optional query subset of Bench's (and BenchSf1's) arguments, or
+    * the message the main exits with. */
   def parseArgs(args: Seq[String], registered: collection.Set[String])
       : Either[String, Option[Set[String]]] = args match {
     case Seq() => Right(None)
     case Seq(names) => Verify.querySubset(names, registered).map(Some(_))
-    case _ => Left("usage: graft.Bench [query,query,...]")
+    case _ => Left("usage: graft.Bench | graft.BenchSf1 [query,query,...]")
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,11 +1,16 @@
 package graft
 
-/** Committed sf1 bench for the HEAVY query tier (r13 verdict task 2):
-  * until now the "survives 10×" evidence lived as ad-hoc `Sf1Ladder`
-  * rows quoted in SCALE.md prose; this main makes it a tracked per-round
-  * artifact. It expands the sf0.1 fixture 10× (the `Sf1Ladder.expand`
-  * methodology — FK-consistent key shifts, near-dup document suffixes,
-  * perturbed embeddings), then runs the heavy tier under the SAME
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** Committed sf1 bench for the HEAVY query tier (r13 verdict task 2): the
+  * "survives 10×" evidence as a tracked per-round artifact. `expand` grows
+  * the sf0.1 fixture 10× with key-shifted copies: FK consistency preserved
+  * (order/cust/part/supp keys shift together), documents get a per-copy
+  * token suffix so exact duplicates across copies become near-duplicates
+  * (the realistic crawl-growth shape, same methodology as the r6
+  * df-growth ladder in SCALE.md), embeddings get a per-copy
+  * micro-perturbation on dim 0. It then runs the heavy tier under the SAME
   * protocol as `graft.Bench`: pass A (warm-up + timed) ascending, pass B
   * timed descending, suspect tie-break pass C, per-query min. Each row
   * also carries one timed sf0.1 reading and the decade exponent
@@ -13,7 +18,10 @@ package graft
   * checks "no query above ~2× its ladder-predicted time" as
   * e ≲ 1.3 without reaching for SCALE.md history.
   *
-  * Output: BENCH_sf1.json in the repo root (committed at round close).
+  * Usage: runMain graft.BenchSf1 [query,query,...] — with no argument it
+  * runs `HeavyTier` and writes BENCH_sf1.json in the repo root (committed
+  * at round close); a subset names any registered queries (a one-query
+  * ladder row) and writes BENCH_sf1_subset.json.
   */
 object BenchSf1 {
   /** The heavy tier: the bench's slowest ~30 by sf0.1 cost plus recent
@@ -44,14 +52,67 @@ object BenchSf1 {
     "graph_delete_drift", "ivf_delete_drift",
     "dup_evidence_shrunk", "dup_components_shrunk")
 
+  private def expand(spark: SparkSession, srcDir: String, outDir: String,
+                     factor: Int = 10): Unit = {
+    val done = new java.io.File(s"$outDir/_LADDER_DONE")
+    if (done.exists()) return
+    def tbl(n: String) = graft.sources.Tables.load(spark, srcDir, n)
+    def maxOf(df: DataFrame, c: String): Long =
+      df.agg(max(col(c))).head().getLong(0) + 1
+    val copies = (0 until factor).map(_.toLong)
+    def shifted(df: DataFrame, shifts: Map[String, Long],
+                extra: (DataFrame, Long) => DataFrame = (d, _) => d): DataFrame =
+      copies.map { k =>
+        val s = shifts.foldLeft(df) { case (acc, (c, m)) =>
+          acc.withColumn(c, col(c) + lit(k * m))
+        }
+        extra(s, k)
+      }.reduce(_ unionByName _)
+
+    val (cust, ord, li, part, supp) =
+      (tbl("customer"), tbl("orders"), tbl("lineitem"), tbl("part"), tbl("supplier"))
+    val (mc, mo, mp, ms) = (maxOf(cust, "c_custkey"), maxOf(ord, "o_orderkey"),
+      maxOf(part, "p_partkey"), maxOf(supp, "s_suppkey"))
+    new java.io.File(outDir).mkdirs()
+    shifted(cust, Map("c_custkey" -> mc))
+      .write.mode("overwrite").parquet(s"$outDir/customer.parquet")
+    shifted(ord, Map("o_orderkey" -> mo, "o_custkey" -> mc))
+      .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
+    shifted(li, Map("l_orderkey" -> mo, "l_partkey" -> mp, "l_suppkey" -> ms))
+      .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
+    shifted(part, Map("p_partkey" -> mp))
+      .write.mode("overwrite").parquet(s"$outDir/part.parquet")
+    shifted(supp, Map("s_suppkey" -> ms))
+      .write.mode("overwrite").parquet(s"$outDir/supplier.parquet")
+    Seq("region", "nation").foreach(n =>
+      tbl(n).write.mode("overwrite").parquet(s"$outDir/$n.parquet"))
+    tbl("events").write.mode("overwrite").parquet(s"$outDir/events.parquet")
+    val docs = tbl("documents")
+    val md = maxOf(docs, "doc_id")
+    // copy 0 stays byte-identical to the source corpus (no suffix) so the
+    // sf0.1-vs-sf1 comparison is a strict superset expansion for document
+    // queries (r12 advice); only the shifted copies get the near-dup suffix
+    shifted(docs, Map("doc_id" -> md), (d, k) =>
+      if (k == 0) d
+      else d.withColumn("text",
+        concat(col("text"), lit(s" copy$k v"), pmod(col("doc_id"), lit(97L)))))
+      .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+    val emb = tbl("embeddings")
+    val mv = maxOf(emb, "vec_id")
+    shifted(emb, Map("vec_id" -> mv), (d, k) =>
+      d.withColumn("embedding", expr(
+        s"transform(embedding, (x, i) -> if(i = 0, x + cast($k as float) * 0.0001f, x))")))
+      .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
+    done.createNewFile(): Unit
+  }
+
   def main(args: Array[String]): Unit = {
+    val only = Bench.parseArgs(args.toSeq, SparkEntry.queries.keySet).fold(Verify.exitWith, identity)
+    val tier = only.fold(HeavyTier)(_.toSeq.sorted)
     val spark = GraftSession.getOrCreate("graft-bench-sf1")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sf1 = "/tmp/graft_sf1_ladder"
-    Sf1Ladder.expand(spark, src, sf1)
-    val only = args.headOption.map(_.split(",").toSet)
-    val tier = HeavyTier.filter(n => only.forall(_.contains(n)))
-      .filter(SparkEntry.queries.contains)
+    expand(spark, src, sf1)
     def once(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
       try {
@@ -81,12 +142,19 @@ object BenchSf1 {
     val passC =
       if (suspects0.isEmpty) Map.empty[String, Double]
       else timedPass("C", suspects0, sf1, warmup = false)
-    def full(v: Double): String =
-      if (v < 0) "null"
-      else String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+    def fmt4(v: Double): String = String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+    def full(v: Double): String = if (v < 0) "null" else fmt4(v)
+    def samplesOf(n: String): Seq[Double] = (Seq(passA(n), passB(n)) ++ passC.get(n)).filter(_ >= 0)
+    val bestOf: Map[String, Double] = tier.map { n =>
+      val s = samplesOf(n)
+      n -> (if (s.isEmpty) -1.0 else s.min)
+    }.toMap
+    val eOf: Map[String, Double] = tier.flatMap { n =>
+      val b = bestOf(n)
+      if (b > 0 && base01(n) > 0) Some(n -> math.log10(b / base01(n))) else None
+    }.toMap
     val rows = tier.map { n =>
-      val samples = (Seq(passA(n), passB(n)) ++ passC.get(n)).filter(_ >= 0)
-      val best = if (samples.isEmpty) -1.0 else samples.min
+      val samples = samplesOf(n)
       // max-gated sub-half-second escape, same rationale as Bench.scala:
       // a tiny outlier min outvoted by two large samples must stay suspect
       val corroborated = samples.nonEmpty &&
@@ -96,13 +164,9 @@ object BenchSf1 {
       // the FAILED-TIMING sentinel, and reusing it here silently swallowed
       // legitimate NEGATIVE exponents (sf1 faster than sf0.1 — constant
       // artifact-replay paths) as null in the committed artifact
-      val e =
-        if (best > 0 && base01(n) > 0)
-          String.format(java.util.Locale.ROOT, "%.4f",
-            Double.box(math.log10(best / base01(n))))
-        else "null"
+      val e = eOf.get(n).map(fmt4).getOrElse("null")
       "\"" + n + "\":{\"sec_sf01\":" + full(base01(n)) +
-        ",\"sec_sf1\":" + full(best) +
+        ",\"sec_sf1\":" + full(bestOf(n)) +
         ",\"pass_a\":" + full(passA(n)) + ",\"pass_b\":" + full(passB(n)) +
         passC.get(n).map(c => ",\"pass_c\":" + full(c)).getOrElse("") +
         ",\"e\":" + e + ",\"suspect\":" + susp + "}"
@@ -131,14 +195,6 @@ object BenchSf1 {
           sec.map(s => m.group(1) -> (s, e))
         }.toMap
       }.getOrElse(Map.empty)
-    val bestOf: Map[String, Double] = tier.map { n =>
-      val s = (Seq(passA(n), passB(n)) ++ passC.get(n)).filter(_ >= 0)
-      n -> (if (s.isEmpty) -1.0 else s.min)
-    }.toMap
-    val eOf: Map[String, Double] = tier.flatMap { n =>
-      val b = bestOf(n)
-      if (b > 0 && base01(n) > 0) Some(n -> math.log10(b / base01(n))) else None
-    }.toMap
     val regressions = tier.collect {
       case n if bestOf(n) > 0.5 &&
         priorEntries.get(n).exists { case (p, _) => p > 0 && bestOf(n) > 3.0 * p } =>
@@ -153,10 +209,7 @@ object BenchSf1 {
       "\"" + n + "\":{\"prior\":" + full(p) + ",\"now\":" + full(v) + "}"
     }.mkString("{", ",", "}")
     val driftStr = eDrift.map { case (n, (p, v)) =>
-      "\"" + n + "\":{\"prior_e\":" +
-        String.format(java.util.Locale.ROOT, "%.4f", Double.box(p)) +
-        ",\"now_e\":" +
-        String.format(java.util.Locale.ROOT, "%.4f", Double.box(v)) + "}"
+      "\"" + n + "\":{\"prior_e\":" + fmt4(p) + ",\"now_e\":" + fmt4(v) + "}"
     }.mkString("{", ",", "}")
     val json = s"""{"tier":"heavy","n_queries":${tier.size},"n_failed":$nFailed,""" +
       s""""n_regressions":${regressions.size},"regressions":$regStr,""" +

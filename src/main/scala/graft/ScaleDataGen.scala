@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * SCALE.md: N vocabulary-disjoint shards, each structurally identical to
   * the source `documents` table.
   *
-  * Shard k ≥ 1 offsets doc_id by k·10⁶ and suffixes every
+  * Shard k ≥ 1 offsets doc_id by k·(max(doc_id)+1) and suffixes every
   * whitespace-token with the alphanumeric tag `q<k>`. Under the engine's
   * `[a-z0-9]+` tokenizer that is (for clean tokens) a BIJECTIVE token
   * relabeling, so within-shard Jaccard/MinHash/SimHash similarity is
@@ -21,10 +21,18 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleDataGen [srcSfDir] [outDir] [copies]
   */
 object ScaleDataGen {
+  /** `(srcSfDir, outDir, copies)` of the arguments, or the message the
+    * main exits with: at most three arguments, `copies` a positive integer.
+    */
+  def parseArgs(args: Seq[String]): Either[String, (String, String, Int)] =
+    if (args.size > 3) Left("usage: graft.ScaleDataGen [srcSfDir] [outDir] [copies]")
+    else args.lift(2).fold[Either[String, Int]](Right(10)) { c =>
+      c.toIntOption.filter(_ > 0).toRight(s"copies must be a positive integer, got '$c'")
+    }.map(copies => (args.headOption.getOrElse("/root/testdata/sf0.1"),
+      args.lift(1).getOrElse("/tmp/graft_sf1"), copies))
+
   def main(args: Array[String]): Unit = {
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val out = args.lift(1).getOrElse("/tmp/graft_sf1")
-    val copies = args.lift(2).map(_.toInt).getOrElse(10)
+    val (src, out, copies) = parseArgs(args.toSeq).fold(Verify.exitWith, identity)
     val spark = GraftSession.getOrCreate("graft-scale-gen")
     val docs = graft.sources.Tables.load(spark, src, "documents")
     // Shard stride from the data, not a constant: a fixed 10⁶ would make

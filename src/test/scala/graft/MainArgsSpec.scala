@@ -35,4 +35,18 @@ class MainArgsSpec extends AnyFunSuite {
       Left("unknown queries: q1_pricing_sumary"))
     assert(Bench.parseArgs(Seq("tf_idf", "extra"), registered).isLeft)
   }
+
+  test("BenchSf1: every heavy-tier query is registered") {
+    assert(BenchSf1.HeavyTier.filterNot(SparkEntry.queries.contains).isEmpty)
+  }
+
+  test("ScaleDataGen.parseArgs: copies must be a positive integer") {
+    assert(ScaleDataGen.parseArgs(Seq()) == Right(("/root/testdata/sf0.1", "/tmp/graft_sf1", 10)))
+    assert(ScaleDataGen.parseArgs(Seq("a", "b", "100")) == Right(("a", "b", 100)))
+    assert(ScaleDataGen.parseArgs(Seq("a", "b", "ten")) ==
+      Left("copies must be a positive integer, got 'ten'"))
+    assert(ScaleDataGen.parseArgs(Seq("a", "b", "0")).isLeft)
+    assert(ScaleDataGen.parseArgs(Seq("a", "b", "-3")).isLeft)
+    assert(ScaleDataGen.parseArgs(Seq("a", "b", "10", "d")).isLeft)
+  }
 }
