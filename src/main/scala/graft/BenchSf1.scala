@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
 
 /** Committed sf1 bench for the HEAVY query tier (r13 verdict task 2): the
   * "survives 10×" evidence as a tracked per-round artifact. `expand` grows
-  * the sf0.1 fixture 10× with key-shifted copies: FK consistency preserved
+  * the source fixture (`SPARK_GRAFT_SF_DIR`, default sf0.1) 10× with
+  * key-shifted copies: FK consistency preserved
   * (order/cust/part/supp keys shift together), documents get a per-copy
   * token suffix so exact duplicates across copies become near-duplicates
   * (the realistic crawl-growth shape, same methodology as the r6
@@ -21,15 +23,17 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.BenchSf1 [query,query,...] — with no argument it
   * runs `HeavyTier` and writes BENCH_sf1.json in the repo root (committed
   * at round close); a subset names any registered queries (a one-query
-  * ladder row) and writes BENCH_sf1_subset.json.
+  * ladder row) and writes BENCH_sf1_subset.json with `"tier":"subset"`.
+  * Both record the factor and the source dir they ran on.
   */
 object BenchSf1 {
   /** The heavy tier: the bench's slowest ~30 by sf0.1 cost plus recent
     * rounds' additions — the queries whose scale behavior is worth a
     * tracked number. Static so the tier is stable round over round;
     * refreshed at close when the bench top-30 changes. r15: dropped the
-    * retired inline `dup_evidence` control (verdict task 4) and added
-    * the six r14 top-30 absentees (verdict task 5).
+    * inline `dup_evidence` control (verdict task 4; the inline derivation
+    * has since left DedupOps, and `dup_evidence_stored`/`_budgeted` carry
+    * the family) and added the six r14 top-30 absentees (verdict task 5).
     */
   val HeavyTier: Seq[String] = Seq(
     "graph_append_drift", "dup_evidence_budgeted",
@@ -52,10 +56,17 @@ object BenchSf1 {
     "graph_delete_drift", "ivf_delete_drift",
     "dup_evidence_shrunk", "dup_components_shrunk")
 
-  private def expand(spark: SparkSession, srcDir: String, outDir: String,
-                     factor: Int = 10): Unit = {
-    val done = new java.io.File(s"$outDir/_LADDER_DONE")
-    if (done.exists()) return
+  /** Writes `factor` key-shifted copies of every table in `srcDir` to
+    * `outDir`. The `_LADDER_DONE` marker records the source dir and the
+    * factor; an existing expansion is reused only when both match,
+    * otherwise it is expanded again.
+    */
+  private[graft] def expand(spark: SparkSession, srcDir: String, outDir: String,
+                            factor: Int): Unit = {
+    val done = Paths.get(outDir, "_LADDER_DONE")
+    val stamp = s"${new java.io.File(srcDir).getCanonicalPath}\n$factor\n"
+    if (Files.exists(done) && Files.readString(done) == stamp) return
+    Files.deleteIfExists(done)
     def tbl(n: String) = graft.sources.Tables.load(spark, srcDir, n)
     def maxOf(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).head().getLong(0) + 1
@@ -103,7 +114,7 @@ object BenchSf1 {
       d.withColumn("embedding", expr(
         s"transform(embedding, (x, i) -> if(i = 0, x + cast($k as float) * 0.0001f, x))")))
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    done.createNewFile(): Unit
+    Files.writeString(done, stamp): Unit
   }
 
   def main(args: Array[String]): Unit = {
@@ -112,7 +123,8 @@ object BenchSf1 {
     val spark = GraftSession.getOrCreate("graft-bench-sf1")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sf1 = "/tmp/graft_sf1_ladder"
-    expand(spark, src, sf1)
+    val factor = 10
+    expand(spark, src, sf1, factor)
     def once(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
       try {
@@ -184,8 +196,7 @@ object BenchSf1 {
     val priorEntries: Map[String, (Double, Option[Double])] =
       if (only.nonEmpty) Map.empty // subset runs have no comparable prior
       else scala.util.Try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_sf1.json")), "UTF-8")
+        val txt = Files.readString(Paths.get("BENCH_sf1.json"))
         """"([A-Za-z0-9_]+)":\{([^{}]*)\}""".r.findAllMatchIn(txt).flatMap { m =>
           val body = m.group(2)
           val sec = """"sec_sf1":([0-9.]+)""".r.findFirstMatchIn(body)
@@ -211,18 +222,18 @@ object BenchSf1 {
     val driftStr = eDrift.map { case (n, (p, v)) =>
       "\"" + n + "\":{\"prior_e\":" + fmt4(p) + ",\"now_e\":" + fmt4(v) + "}"
     }.mkString("{", ",", "}")
-    val json = s"""{"tier":"heavy","n_queries":${tier.size},"n_failed":$nFailed,""" +
+    val tierName = if (only.isEmpty) "heavy" else "subset"
+    val json = s"""{"tier":"$tierName","n_queries":${tier.size},"n_failed":$nFailed,""" +
       s""""n_regressions":${regressions.size},"regressions":$regStr,""" +
       s""""n_e_drift":${eDrift.size},"e_drift":$driftStr,""" +
-      s""""expand_factor":10,"src_sf":0.1,"queries":$rows}"""
+      s""""expand_factor":$factor,"src_dir":"$src","queries":$rows}"""
     println(json)
     // subset runs (diagnosis) must not clobber the committed full-tier
     // artifact — the same guard Bench.scala applies to BENCH_metric.json/
     // BENCH_local.json (r14: a one-query diagnostic overwrote the
     // committed metric line)
     val outName = if (only.isEmpty) "BENCH_sf1.json" else "BENCH_sf1_subset.json"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outName),
-      json + "\n")
+    Files.writeString(Paths.get(outName), json + "\n")
     spark.stop()
   }
 }

@@ -794,14 +794,12 @@ object SparkEntry {
         DedupOps.pairIndex(s, pairIndexFor(s, d)))),
     // multi-screen evidence fusion: per union-graph pair, LSH band
     // agreement + shared winnowing fingerprints + SimHash Hamming, with
-    // the fired-tier count — the collapse-review explanation row. The
-    // production default path (r13 verdict task 3) routes through the
-    // persisted evidence base; the inline derivation no longer runs in
-    // the bench registry (r14 verdict task 4: it cost 16.5 s × 2 passes
-    // at sf0.1 purely as an A/B control) — its ≡-stored equivalence is
-    // proven once per round by DedupOpsSpec's sf0.01 hash gate, and the
-    // oracle below replays the FULL inline derivation in DuckDB, so the
-    // store stays hash-proven equal to the derivation every round.
+    // the fired-tier count — the collapse-review explanation row. It
+    // reads the persisted evidence base (r13 verdict task 3), the only
+    // Spark path: the inline derivation left the registry in r14 (16.5 s
+    // × 2 passes at sf0.1 purely as an A/B control) and DedupOps since.
+    // The oracle below replays the FULL derivation in DuckDB, so the
+    // store stays hash-proven equal to it every round.
     "dup_evidence_stored" -> ((s, d) =>
       DedupOps.dupEvidenceFromBase(evidenceBaseFor(s, d))),
     // the per-cluster pair budget BINDING (keep 2): same base, budget=2,
@@ -3814,10 +3812,10 @@ object SparkEntry {
     dupComponentsCtes + "\nSELECT doc_id, component FROM comps"
 
   /** dup_evidence oracle with the per-cluster pair budget replayed in
-    * SQL — mirrors DedupOps.dupEvidence's default path exactly: union
-    * pair graph → recursive-CTE components → signature-agreement rank
-    * (est DESC, doc_a, doc_b) → keep rn ≤ budget → the three screens
-    * over kept pairs only.
+    * SQL — the full derivation that DedupOps.dupEvidenceBase lands and
+    * dupEvidenceFromBase replays: union pair graph → recursive-CTE
+    * components → signature-agreement rank (est DESC, doc_a, doc_b) →
+    * keep rn ≤ budget → the three screens over kept pairs only.
     */
   private def dupEvidenceOracleSql(budget: Int): String =
     "WITH RECURSIVE " + minhashPairsCtes.stripPrefix("WITH ") +

@@ -174,16 +174,7 @@ object DedupOps {
     * O(|pairs|) on top of the signature pass at any corpus size.
     */
   def minhashEstimateAudit(documents: DataFrame, pairs: DataFrame): DataFrame = {
-    val sig = minhashSignatures(documents)
-    val est = pairs
-      .join(sig.select(col("doc_id").as("doc_a"), col("hash_idx"),
-        col("minhash").as("ma")), Seq("doc_a"))
-      .join(sig.select(col("doc_id").as("doc_b"), col("hash_idx"),
-        col("minhash").as("mb")), Seq("doc_b", "hash_idx"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(expr(
-        "cast((sum(case when ma = mb then 1 else 0 end) * 1000000 + 8) div 16 as bigint)")
-        .as("est_ppm"))
+    val est = signatureAgreement(pairs, documents)
     val sh = shinglesArray(documents)
       .select(col("doc_id"), explode(col("sh")).as("s"))
     val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -201,6 +192,24 @@ object DedupOps {
           | div (na + nb - coalesce(inter, 0L)) as bigint)""".stripMargin)
           .as("exact_ppm"))
       .withColumn("err_ppm", abs(col("est_ppm") - col("exact_ppm")))
+  }
+
+  /** Signature-estimated Jaccard per pair, (doc_a, doc_b, est_ppm): the
+    * agreeing components of the two 16-hash signatures over 16, half-up
+    * ppm — 16 signature rows per pair, O(|pairs|). A pair with an
+    * endpoint whose signature is empty (fewer than 3 tokens) has no row.
+    */
+  private def signatureAgreement(pairs: DataFrame, documents: DataFrame): DataFrame = {
+    val sig = minhashSignatures(documents)
+    pairs
+      .join(sig.select(col("doc_id").as("doc_a"), col("hash_idx"),
+        col("minhash").as("ma")), Seq("doc_a"))
+      .join(sig.select(col("doc_id").as("doc_b"), col("hash_idx"),
+        col("minhash").as("mb")), Seq("doc_b", "hash_idx"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(expr(
+        "cast((sum(case when ma = mb then 1 else 0 end) * 1000000 + 8) div 16 as bigint)")
+        .as("est_ppm"))
   }
 
   /** LSH band keys per doc: the 16 minhashes sliced into NumBands keys of
@@ -246,13 +255,33 @@ object DedupOps {
     * colliding in multiple bands.
     */
   def minhashCandidatePairs(documents: DataFrame): DataFrame =
-    lshBands(documents)
+    bandBucketPairs(lshBands(documents)).distinct()
+
+  /** Pairs within each (band, band_key) bucket of a (doc_id, band,
+    * band_key) frame, doc_a < doc_b; a pair colliding in several bands
+    * repeats once per band.
+    */
+  private def bandBucketPairs(bands: DataFrame): DataFrame =
+    bands
       .groupBy(col("band"), col("band_key"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
       .filter(size(col("ds")) > 1)
       .select(explode(expr(bucketPairsSql)).as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+
+  /** The band pairs an append adds: band keys are per-doc, so old-old
+    * pairs never change and new pairs come only from buckets the delta's
+    * bands touch; a pair has a delta endpoint iff its larger id clears
+    * the cutoff (delta ids are the largest by construction).
+    */
+  private def bandDeltaPairs(oldBands: DataFrame, newBands: DataFrame,
+                             cutoff: Long): DataFrame = {
+    val touchedKeys = newBands.select(col("band"), col("band_key")).distinct()
+    bandBucketPairs(oldBands.unionByName(newBands)
+        .join(touchedKeys, Seq("band", "band_key"), "left_semi"))
+      .filter(col("doc_b") >= cutoff)
       .distinct()
+  }
 
   /** Corpus index artifacts for INCREMENTAL ingestion ([EXT]): at 100 TB
     * you do not re-dedup the world per batch — you keep two narrow
@@ -792,114 +821,30 @@ object DedupOps {
           | div (precision_ppm + recall_ppm)""".stripMargin))
   }
 
-  /** Multi-screen near-dup EVIDENCE audit — the per-pair explanation row
-    * behind the union graph `graph_triangles` consumes: for every
-    * candidate pair (MinHash ∪ winnowing), how many LSH bands agreed,
-    * how many winnowing fingerprints are shared, and the SimHash Hamming
-    * distance — three independent detectors on one audit line, with
-    * `evidence_tiers` counting how many fired at their shipping
-    * thresholds. A pair flagged by one screen but contradicted by the
-    * other two is the false-positive shape a collapse review looks for;
-    * three-of-three is safe to hard-merge. Scale: the band self-join is
-    * the same bucket join the candidate derivation already pays, the
-    * rest is per-pair probes — O(|pairs|), never corpus². NOTE |pairs|
-    * itself is quadratic in duplicate-CLUSTER size (a 10-copy cluster is
-    * 45 pairs — measured e=1.87 on the sf1 ladder's dup-heavy
-    * expansion), so the collapse-first deploy rule is ENFORCED here
-    * (r12 verdict task 2), not just documented: the default path runs
-    * the component collapse over the union pair graph and keeps at most
-    * `maxPairsPerComponent` pairs per cluster — deterministic keep, top
-    * pairs by (signature-estimated Jaccard DESC, doc_a, doc_b) — before
-    * any of the three per-pair screens run. A template-flood cluster of
-    * c docs then costs c·log c (components) + the cheap 16-row signature
-    * probe per candidate pair for the ranking, but the three-detector
-    * evidence work and the output are bounded at `maxPairsPerComponent`
-    * rows per cluster instead of c(c−1)/2. Pass Int.MaxValue for the
-    * unbudgeted control shape.
-    */
-  def dupEvidence(documents: DataFrame, mpairs: DataFrame, wpairs: DataFrame,
-                  maxHamming: Int = 3,
-                  maxPairsPerComponent: Int = 24): DataFrame = {
-    val uAll = mpairs.select(col("doc_a"), col("doc_b"))
-      .union(wpairs.select(col("doc_a"), col("doc_b"))).distinct()
-    val u =
-      if (maxPairsPerComponent == Int.MaxValue) uAll
-      else {
-        val comps = dupComponents(uAll)
-        val sig = minhashSignatures(documents)
-        // the SAME signature-agreement estimate minhashEstimateAudit
-        // gates — 16 signature rows per pair, O(|pairs|) — as the rank
-        // key; left + coalesce(0) so a pair whose doc has an empty
-        // signature (sub-shingle-length text) still ranks, at the bottom
-        val est = uAll
-          .join(sig.select(col("doc_id").as("doc_a"), col("hash_idx"),
-            col("minhash").as("ma")), Seq("doc_a"))
-          .join(sig.select(col("doc_id").as("doc_b"), col("hash_idx"),
-            col("minhash").as("mb")), Seq("doc_b", "hash_idx"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(expr(
-            "cast((sum(case when ma = mb then 1 else 0 end) * 1000000 + 8) div 16 as bigint)")
-            .as("est_ppm"))
-        val wspec = Window.partitionBy(col("component"))
-          .orderBy(col("est_ppm").desc, col("doc_a"), col("doc_b"))
-        uAll
-          .join(est, Seq("doc_a", "doc_b"), "left")
-          .na.fill(0L, Seq("est_ppm"))
-          .join(comps.select(col("doc_id").as("doc_a"), col("component")),
-            Seq("doc_a"))
-          .withColumn("rn", row_number().over(wspec))
-          .filter(col("rn") <= maxPairsPerComponent)
-          .select(col("doc_a"), col("doc_b"))
-      }
-    val bands = lshBands(documents)
-    val bshare = bands.select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
-      .join(bands.select(col("band"), col("band_key"), col("doc_id").as("doc_b")),
-        Seq("band", "band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_bands"))
-    val sim = simhash(documents)
-    u.join(bshare, Seq("doc_a", "doc_b"), "left")
-      .join(wpairs.select(col("doc_a"), col("doc_b"), col("n_shared").as("n_winnow")),
-        Seq("doc_a", "doc_b"), "left")
-      .join(sim.select(col("doc_id").as("doc_a"), col("simhash").as("sa")), Seq("doc_a"))
-      .join(sim.select(col("doc_id").as("doc_b"), col("simhash").as("sb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        coalesce(col("n_bands"), lit(0L)).as("n_bands"),
-        coalesce(col("n_winnow"), lit(0L)).as("n_winnow"),
-        expr("cast(bit_count(sa ^ sb) as int)").as("sim_hamming"))
-      .withColumn("evidence_tiers",
-        expr(s"""cast(n_bands > 0 as int) + cast(n_winnow >= 2 as int)
-                | + cast(sim_hamming <= $maxHamming as int)""".stripMargin))
-  }
-
-  /** The persisted EVIDENCE-BASE build for [[dupEvidence]] (r13 verdict
-    * task 3): every union-graph pair with its component label, its
-    * signature-agreement rank key, and all three detector readings, as
-    * one narrow table landed once per corpus snapshot. [[dupEvidence]]
-    * and its budget variants re-derived union pairs + components +
-    * signature ranks + the band self-join PER QUERY (~25 s combined at
-    * sf0.1; a full re-clustering per consumer at 100 TB); against this
-    * base each budget read is one window + one filter — the
-    * `graph_triangles_stored` amortization, applied to the evidence
-    * family. Columns: (doc_a, doc_b, component, est_ppm, n_bands,
-    * n_winnow, sim_hamming) — everything [[dupEvidenceFromBase]] needs
-    * to replay ANY budget, so one artifact serves every budget knob.
+  /** The persisted near-dup EVIDENCE base, landed once per corpus
+    * snapshot (r13 verdict task 3): every union-graph pair (MinHash ∪
+    * winnowing) with its component label, its signature-agreement rank
+    * key, and three independent detector readings — how many LSH bands
+    * agreed, how many winnowing fingerprints are shared, and the SimHash
+    * Hamming distance. Columns: (doc_a, doc_b, component, est_ppm,
+    * n_bands, n_winnow, sim_hamming) — everything [[dupEvidenceFromBase]]
+    * needs to replay ANY budget, so one artifact serves every budget
+    * knob, and each budget read is one window + one filter instead of a
+    * per-query re-derivation of union pairs + components + signature
+    * ranks + the band self-join (~25 s combined at sf0.1; a full
+    * re-clustering per consumer at 100 TB) — the `graph_triangles_stored`
+    * amortization, applied to the evidence family. Scale: the band
+    * self-join is the same bucket join the candidate derivation already
+    * pays, the rest is per-pair probes — O(|pairs|), never corpus².
+    * [[dupEvidenceBaseDelta]] and [[dupEvidenceBaseShrink]] maintain it
+    * in O(delta).
     */
   def dupEvidenceBase(documents: DataFrame, mpairs: DataFrame,
                       wpairs: DataFrame): DataFrame = {
     val uAll = mpairs.select(col("doc_a"), col("doc_b"))
       .union(wpairs.select(col("doc_a"), col("doc_b"))).distinct()
     val comps = dupComponents(uAll)
-    val sig = minhashSignatures(documents)
-    val est = uAll
-      .join(sig.select(col("doc_id").as("doc_a"), col("hash_idx"),
-        col("minhash").as("ma")), Seq("doc_a"))
-      .join(sig.select(col("doc_id").as("doc_b"), col("hash_idx"),
-        col("minhash").as("mb")), Seq("doc_b", "hash_idx"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(expr(
-        "cast((sum(case when ma = mb then 1 else 0 end) * 1000000 + 8) div 16 as bigint)")
-        .as("est_ppm"))
+    val est = signatureAgreement(uAll, documents)
     val bands = lshBands(documents)
     val bshare = bands.select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
       .join(bands.select(col("band"), col("band_key"), col("doc_id").as("doc_b")),
@@ -922,13 +867,22 @@ object DedupOps {
         expr("cast(bit_count(sa ^ sb) as int)").as("sim_hamming"))
   }
 
-  /** Budget replay over the persisted evidence base — semantically
-    * identical to [[dupEvidence]] at the same budget (the oracle is
-    * shared VERBATIM in the registry): per component, keep the top
-    * `maxPairsPerComponent` pairs by (est_ppm DESC, doc_a, doc_b), then
-    * read the three detector columns already landed in the base. Cost
-    * shape: one component-keyed window over the pair table — no corpus
-    * scan, no band self-join, no component iteration.
+  /** Multi-screen near-dup EVIDENCE audit over the landed base — the
+    * per-pair explanation row behind the union graph `graph_triangles`
+    * consumes, with `evidence_tiers` counting how many of the three
+    * detectors fired at their shipping thresholds. A pair flagged by one
+    * screen but contradicted by the other two is the false-positive
+    * shape a collapse review looks for; three-of-three is safe to
+    * hard-merge. |pairs| is quadratic in duplicate-CLUSTER size (a
+    * 10-copy cluster is 45 pairs — measured e=1.87 on the sf1 ladder's
+    * dup-heavy expansion), so the collapse-first deploy rule is enforced
+    * here (r12 verdict task 2): per component, keep the top
+    * `maxPairsPerComponent` pairs by (est_ppm DESC, doc_a, doc_b) — a
+    * deterministic keep — then read the three detector columns already
+    * in the base. Pass Int.MaxValue for the unbudgeted shape. Cost: one
+    * component-keyed window over the pair table — no corpus scan, no
+    * band self-join, no component iteration. The registry's oracle
+    * replays the full derivation in DuckDB.
     */
   def dupEvidenceFromBase(base: DataFrame, maxHamming: Int = 3,
                           maxPairsPerComponent: Int = 24): DataFrame = {
@@ -955,15 +909,34 @@ object DedupOps {
     TextOps.winnowFingerprints(documents)
       .select(col("doc_id"), col("fp")).distinct()
 
-  /** Everything the delta maintenance shares between the base update and
-    * the staleness row: the grown union pair set with its change sets.
+  /** One change set against the landed evidence base, from either
+    * direction: the union pair set before (`uOld`) and after (`uNew`)
+    * the change, the pairs it adds and removes, the winnow slice `wANew`
+    * recomputed on A×A for the affected doc set `aDocs`, and the band
+    * rows after the change. [[evidenceBaseAfter]] turns it into the new
+    * base; [[dupEvidenceStaleness]] counts it.
     */
   private case class EvidencePairDelta(
-      uOld: DataFrame, uGrown: DataFrame, added: DataFrame,
+      uOld: DataFrame, uNew: DataFrame, added: DataFrame,
       removed: DataFrame, wANew: DataFrame, aDocs: DataFrame,
-      newBands: DataFrame)
+      bands: DataFrame)
 
-  /** The pair-set half of [[dupEvidenceBaseDelta]] — all frames are
+  /** Shared winnow fingerprints per pair of `prints` (doc_id, fp),
+    * counting only fingerprints whose GLOBAL doc-frequency in `dfs`
+    * (fp, df) sits in the (1, 50] guard window.
+    */
+  private def wsharedOf(prints: DataFrame, dfs: DataFrame): DataFrame = {
+    val guarded = prints.join(
+      dfs.filter(col("df") > 1 && col("df") <= 50).select(col("fp")),
+      Seq("fp"), "left_semi")
+    guarded.select(col("fp"), col("doc_id").as("doc_a"))
+      .join(guarded.select(col("fp"), col("doc_id").as("doc_b")), Seq("fp"))
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_shared"))
+  }
+
+  /** The append change set for [[dupEvidenceBaseDelta]] — all frames are
     * delta-bounded given the persisted indexes (see that method's
     * scaladoc for the touched-fingerprint argument).
     */
@@ -1007,16 +980,6 @@ object DedupOps {
     val dfGrown = oldDf.join(newDf, Seq("fp"), "full_outer")
       .select(col("fp"),
         (coalesce(col("df"), lit(0L)) + coalesce(col("dfn"), lit(0L))).as("df"))
-    def wsharedOf(prints: DataFrame, dfs: DataFrame): DataFrame = {
-      val guarded = prints.join(
-        dfs.filter(col("df") > 1 && col("df") <= 50).select(col("fp")),
-        Seq("fp"), "left_semi")
-      guarded.select(col("fp"), col("doc_id").as("doc_a"))
-        .join(guarded.select(col("fp"), col("doc_id").as("doc_b")), Seq("fp"))
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_shared"))
-    }
     val wANew = wsharedOf(printsA, dfGrown).localCheckpoint()
     val wAOld = wsharedOf(printsAOld, oldDf)
     // membership is n_shared >= 2 (winnowOverlapPairs' minShared); the
@@ -1029,25 +992,11 @@ object DedupOps {
       .union(wANew.filter(col("n_shared") >= 2).select(col("doc_a"), col("doc_b")))
       .distinct()
 
-    // ---- minhash tier: band keys are per-doc, so the old-old pair set
-    // is INVARIANT under growth (no df guard in the band join); new pairs
-    // come only from buckets the delta touches, and a pair has a delta
-    // endpoint iff its larger id clears the cutoff (delta ids are the
-    // largest by construction).
-    val touchedKeys = newBands.select(col("band"), col("band_key")).distinct()
-    val bandsTouched = oldBands.unionByName(newBands)
-      .join(touchedKeys, Seq("band", "band_key"), "left_semi")
-    val mDelta = bandsTouched
-      .groupBy(col("band"), col("band_key"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .select(explode(expr(bucketPairsSql)).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .filter(col("doc_b") >= cutoff)
-      .distinct()
+    // ---- minhash tier: the old-old pair set is INVARIANT under growth
+    // (no df guard in the band join); only the delta's buckets add pairs
     val mGrownPairs = oldBase.filter(col("n_bands") >= 1)
       .select(col("doc_a"), col("doc_b"))
-      .union(mDelta).distinct()
+      .union(bandDeltaPairs(oldBands, newBands, cutoff)).distinct()
 
     val uOld = oldBase.select(col("doc_a"), col("doc_b"))
     val uGrown = mGrownPairs.union(wGrownPairs).distinct().localCheckpoint()
@@ -1055,7 +1004,8 @@ object DedupOps {
       .localCheckpoint()
     val removed = uOld.join(uGrown, Seq("doc_a", "doc_b"), "left_anti")
       .localCheckpoint()
-    EvidencePairDelta(uOld, uGrown, added, removed, wANew, aDocs, newBands)
+    EvidencePairDelta(uOld, uGrown, added, removed, wANew, aDocs,
+      oldBands.unionByName(newBands))
   }
 
   /** O(delta) maintenance for the persisted dup-evidence base (r14
@@ -1076,163 +1026,21 @@ object DedupOps {
     *    of delta-touched fingerprints) is recomputed exactly, old A×A
     *    slice and grown A×A slice, with global dfs — every pair outside
     *    A×A is provably untouched.
-    *  - detector readings (est_ppm, n_bands, sim_hamming) are per-pair
-    *    and corpus-independent: recomputed only for added pairs (from
-    *    the endpoint docs alone); n_winnow is refreshed for kept A×A
-    *    pairs from the recomputed slice.
-    *  - components: labels can MERGE (added edges) and SPLIT (removed
-    *    winnow edges), so the touched components — those containing any
-    *    endpoint of a changed pair — are re-collapsed from their kept
-    *    edges plus the additions, and every untouched component keeps
-    *    its label (its edge set is unchanged, so its min-id label is
-    *    too). At 100 TB this is the difference between re-clustering
-    *    the corpus per append and collapsing a delta-bounded subgraph.
+    *  - readings and components: [[evidenceBaseAfter]], shared with the
+    *    delete direction.
     */
   def dupEvidenceBaseDelta(oldBase: DataFrame, oldPrints: DataFrame,
                            oldBands: DataFrame, grownDocs: DataFrame,
-                           cutoff: Long): DataFrame = {
-    val d = evidencePairDelta(oldBase, oldPrints, oldBands, grownDocs, cutoff)
+                           cutoff: Long): DataFrame =
+    evidenceBaseAfter(oldBase,
+      evidencePairDelta(oldBase, oldPrints, oldBands, grownDocs, cutoff), grownDocs)
 
-    // ---- component rebuild region: components holding any changed-pair
-    // endpoint (old endpoints map through the base's labels; delta docs
-    // enter as fresh nodes via the added pairs themselves)
-    val oldLabels = oldBase.select(col("doc_a").as("doc_id"), col("component"))
-      .union(oldBase.select(col("doc_b").as("doc_id"), col("component")))
-      .distinct()
-    val changed = d.added.union(d.removed)
-    val changedOldEnds = changed.select(col("doc_a").as("doc_id"))
-      .union(changed.select(col("doc_b").as("doc_id")))
-      .distinct().filter(col("doc_id") < cutoff)
-    // single consumer (regionKept's semi-join, itself checkpointed) — no
-    // eager barrier needed here (r17, guide §5)
-    val touchedComps = oldLabels.join(changedOldEnds, Seq("doc_id"), "left_semi")
-      .select(col("component")).distinct()
-    val keptBase = oldBase.join(d.removed, Seq("doc_a", "doc_b"), "left_anti")
-      .localCheckpoint()
-    // Union children are scrubbed through the RDD boundary: a
-    // localCheckpoint leaf PRESERVES the origin plan's constraints, and
-    // here those reference attributes pruned before the checkpoint (the
-    // semi-join's `component`, the anti-join lineage) — when an
-    // optimizer rule asks the Union above them for constraints,
-    // Catalyst's rewrite crashes with key-not-found. createDataFrame
-    // over the checkpointed RDD mints constraint-free leaves; both
-    // frames are delta-bounded, so the row round-trip is noise.
-    val regionKept = keptBase.join(touchedComps, Seq("component"), "left_semi")
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    def scrubbed(df: DataFrame): DataFrame =
-      df.sparkSession.createDataFrame(df.rdd, df.schema)
-    val regionEdges = scrubbed(regionKept)
-      .union(scrubbed(d.added.select(col("doc_a"), col("doc_b"))))
-    // a delta's touched region is normally delta-bounded, so the
-    // collapse finishes on the driver with no star rounds; a template
-    // flood contracts on the cluster first
-    val regionLabels = dupComponents(regionEdges)
-
-    // ---- fresh readings for added pairs: all three detectors read only
-    // the endpoint docs (per-pair, corpus-independent), so the probe set
-    // is the added pairs' endpoints
-    val epIds = d.added.select(col("doc_a").as("doc_id"))
-      .union(d.added.select(col("doc_b").as("doc_id"))).distinct()
-    val epDocs = grownDocs.join(epIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    val sig = minhashSignatures(epDocs)
-    val estAdded = d.added
-      .join(sig.select(col("doc_id").as("doc_a"), col("hash_idx"),
-        col("minhash").as("ma")), Seq("doc_a"))
-      .join(sig.select(col("doc_id").as("doc_b"), col("hash_idx"),
-        col("minhash").as("mb")), Seq("doc_b", "hash_idx"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(expr(
-        "cast((sum(case when ma = mb then 1 else 0 end) * 1000000 + 8) div 16 as bigint)")
-        .as("est_ppm"))
-    val allBands = oldBands.unionByName(d.newBands)
-    val nBandsAdded = d.added
-      .join(allBands.select(col("doc_id").as("doc_a"), col("band"),
-        col("band_key")), Seq("doc_a"))
-      .join(allBands.select(col("doc_id").as("doc_b"), col("band"),
-        col("band_key")), Seq("doc_b", "band", "band_key"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_bands"))
-    val simEp = simhash(epDocs)
-    val addedRows = d.added
-      .join(estAdded, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("est_ppm"))
-      .join(nBandsAdded, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("n_bands"))
-      .join(d.wANew.select(col("doc_a"), col("doc_b"), col("n_shared")),
-        Seq("doc_a", "doc_b"), "left")
-      .withColumn("n_winnow",
-        when(col("n_shared") >= 2, col("n_shared")).otherwise(lit(0L)))
-      .join(simEp.select(col("doc_id").as("doc_a"), col("simhash").as("sa")),
-        Seq("doc_a"))
-      .join(simEp.select(col("doc_id").as("doc_b"), col("simhash").as("sb")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("est_ppm"), col("n_bands"),
-        col("n_winnow"), expr("cast(bit_count(sa ^ sb) as int)").as("sim_hamming"))
-
-    // ---- kept pairs: readings carry over, except n_winnow on A×A pairs
-    // (the recomputed slice is the truth — values can shrink when a
-    // fingerprint crosses the df guard)
-    val keptRows = keptBase
-      .join(d.aDocs.select(col("doc_id").as("doc_a"), lit(1).as("fa")),
-        Seq("doc_a"), "left")
-      .join(d.aDocs.select(col("doc_id").as("doc_b"), lit(1).as("fb")),
-        Seq("doc_b"), "left")
-      .join(d.wANew.select(col("doc_a"), col("doc_b"),
-        col("n_shared").as("ns_new")), Seq("doc_a", "doc_b"), "left")
-      .withColumn("n_winnow",
-        when(col("fa").isNotNull && col("fb").isNotNull,
-          when(col("ns_new") >= 2, col("ns_new")).otherwise(lit(0L)))
-          .otherwise(col("n_winnow")))
-      .select(col("doc_a"), col("doc_b"), col("component"), col("est_ppm"),
-        col("n_bands"), col("n_winnow"), col("sim_hamming"))
-
-    // ---- final labels: a doc appears in the region relabeling iff its
-    // whole component was touched (or it is new), so one left join +
-    // coalesce assigns every pair its grown-graph label
-    keptRows
-      .unionByName(addedRows.withColumn("component",
-        lit(null).cast(keptRows.schema("component").dataType))
-        .select(col("doc_a"), col("doc_b"), col("component"), col("est_ppm"),
-          col("n_bands"), col("n_winnow"), col("sim_hamming")))
-      .join(regionLabels.select(col("doc_id").as("doc_a"),
-        col("component").as("rcomp")), Seq("doc_a"), "left")
-      .select(col("doc_a"), col("doc_b"),
-        coalesce(col("rcomp"), col("component")).as("component"),
-        col("est_ppm"), col("n_bands"), col("n_winnow"), col("sim_hamming"))
-  }
-
-  /** O(delta) DELETE maintenance for the persisted dup-evidence base —
-    * the direction [[dupEvidenceBaseDelta]] doesn't cover, and the one
-    * where the winnow df guard works AGAINST intuition: removing docs
-    * LOWERS fingerprint doc-frequencies, so a fingerprint can cross INTO
-    * the (1, 50] guard window from above and ADD pairs between surviving
-    * holders — deletions from this base are not a subset operation. The
-    * touched-fingerprint argument bounds the work symmetrically to the
-    * append side: a pair's n_winnow can change only through fingerprints
-    * whose df changed, and dfs change only for fingerprints the REMOVED
-    * docs hold. So:
-    *
-    *  - winnow tier: A = surviving holders of touched fps; the A×A slice
-    *    recomputes exactly (survivor prints, globally SHRUNK dfs), every
-    *    pair outside A×A is provably unchanged, and pairs with a removed
-    *    endpoint drop;
-    *  - minhash tier: band keys are per-doc, so removals only REMOVE
-    *    pairs (drop rows touching a removed doc) — exactly the mirror of
-    *    the append side's old-old invariance;
-    *  - readings: per-pair and corpus-independent, so kept pairs carry
-    *    their readings except n_winnow on A×A (the recomputed slice is
-    *    the truth); added (guard-entry) pairs read their detectors fresh
-    *    from the endpoint docs;
-    *  - components: both splits (removed edges/docs) and merges
-    *    (guard-entry edges) are possible — the changed-pair endpoints'
-    *    components re-collapse, everything else keeps its label.
-    *
-    * Gate: `dup_evidence_shrunk` = [[dupEvidenceFromBase]] over this
-    * frame vs the FULL-REBUILD evidence SQL on the survivor corpus.
+  /** The delete change set for [[dupEvidenceBaseShrink]] (see its
+    * scaladoc for the touched-fingerprint argument).
     */
-  def dupEvidenceBaseShrink(oldBase: DataFrame, oldPrints: DataFrame,
-                            oldBands: DataFrame, documents: DataFrame,
-                            removed: DataFrame): DataFrame = {
+  private def evidencePairShrink(oldBase: DataFrame, oldPrints: DataFrame,
+                                 oldBands: DataFrame,
+                                 removed: DataFrame): EvidencePairDelta = {
     val rem = removed.select(col("doc_id")).localCheckpoint()
     // USING-column joins move the key columns to the FRONT of the output
     // (the second anti-join below yields (doc_b, doc_a) order), so every
@@ -1258,16 +1066,6 @@ object DedupOps {
     val dfShrunk = oldDf.join(remDf, Seq("fp"), "left")
       .select(col("fp"),
         (col("df") - coalesce(col("dfr"), lit(0L))).as("df"))
-    def wsharedOf(prints: DataFrame, dfs: DataFrame): DataFrame = {
-      val guarded = prints.join(
-        dfs.filter(col("df") > 1 && col("df") <= 50).select(col("fp")),
-        Seq("fp"), "left_semi")
-      guarded.select(col("fp"), col("doc_id").as("doc_a"))
-        .join(guarded.select(col("fp"), col("doc_id").as("doc_b")), Seq("fp"))
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("n_shared"))
-    }
     val wANew = wsharedOf(printsA, dfShrunk).localCheckpoint()
     val wAOld = wsharedOf(printsA, oldDf)
     val wShrunkPairs = survPairs(
@@ -1288,57 +1086,113 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
     val removedPairs = uOld.join(uShrunk, Seq("doc_a", "doc_b"), "left_anti")
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
+    EvidencePairDelta(uOld, uShrunk, added, removedPairs, wANew, aDocs,
+      oldBands.join(rem, Seq("doc_id"), "left_anti"))
+  }
 
-    // ---- component rebuild region (same shape as the append side)
+  /** O(delta) DELETE maintenance for the persisted dup-evidence base —
+    * the direction [[dupEvidenceBaseDelta]] doesn't cover, and the one
+    * where the winnow df guard works AGAINST intuition: removing docs
+    * LOWERS fingerprint doc-frequencies, so a fingerprint can cross INTO
+    * the (1, 50] guard window from above and ADD pairs between surviving
+    * holders — deletions from this base are not a subset operation. The
+    * touched-fingerprint argument bounds the work symmetrically to the
+    * append side: a pair's n_winnow can change only through fingerprints
+    * whose df changed, and dfs change only for fingerprints the REMOVED
+    * docs hold. So:
+    *
+    *  - winnow tier: A = surviving holders of touched fps; the A×A slice
+    *    recomputes exactly (survivor prints, globally SHRUNK dfs), every
+    *    pair outside A×A is provably unchanged, and pairs with a removed
+    *    endpoint drop;
+    *  - minhash tier: band keys are per-doc, so removals only REMOVE
+    *    pairs (drop rows touching a removed doc) — exactly the mirror of
+    *    the append side's old-old invariance;
+    *  - readings and components: [[evidenceBaseAfter]], shared with the
+    *    append direction.
+    *
+    * Gate: `dup_evidence_shrunk` = [[dupEvidenceFromBase]] over this
+    * frame vs the FULL-REBUILD evidence SQL on the survivor corpus.
+    */
+  def dupEvidenceBaseShrink(oldBase: DataFrame, oldPrints: DataFrame,
+                            oldBands: DataFrame, documents: DataFrame,
+                            removed: DataFrame): DataFrame =
+    evidenceBaseAfter(oldBase,
+      evidencePairShrink(oldBase, oldPrints, oldBands, removed), documents)
+
+  /** Re-mints a frame's leaves through the RDD boundary. A
+    * localCheckpoint leaf PRESERVES the origin plan's constraints, and
+    * those can reference attributes pruned before the checkpoint (a
+    * semi-join's `component`, an anti-join's lineage) — when an optimizer
+    * rule asks a Union above such leaves for constraints, Catalyst's
+    * rewrite crashes with key-not-found. createDataFrame over the
+    * checkpointed RDD mints constraint-free leaves; callers pass
+    * delta-bounded frames, so the row round-trip is noise.
+    */
+  private def scrubbed(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.rdd, df.schema)
+
+  /** The new evidence base from the old one and a change set — the half
+    * of both maintenance directions after the pair set:
+    *  - detector readings (est_ppm, n_bands, sim_hamming) are per-pair
+    *    and corpus-independent: read only for added pairs, from their
+    *    endpoint docs in `docs` (the corpus after the change) and the
+    *    band rows after the change; kept pairs carry theirs over, except
+    *    n_winnow on A×A pairs, refreshed from the recomputed slice.
+    *  - components: labels can MERGE (added edges) and SPLIT (removed
+    *    edges), so the touched components — those containing any
+    *    endpoint of a changed pair — are re-collapsed from their kept
+    *    edges plus the additions, and every untouched component keeps
+    *    its label (its edge set is unchanged, so its min-id label is
+    *    too). At 100 TB this is the difference between re-clustering
+    *    the corpus per change and collapsing a change-bounded subgraph.
+    */
+  private def evidenceBaseAfter(oldBase: DataFrame, d: EvidencePairDelta,
+                                docs: DataFrame): DataFrame = {
+    // ---- component rebuild region: components holding any changed-pair
+    // endpoint (old endpoints map through the base's labels; docs new to
+    // the graph enter as fresh nodes via the added pairs themselves, and
+    // the semi-join drops them)
     val oldLabels = oldBase.select(col("doc_a").as("doc_id"), col("component"))
       .union(oldBase.select(col("doc_b").as("doc_id"), col("component")))
       .distinct()
-    val changedEnds = added.union(removedPairs)
-      .select(col("doc_a").as("doc_id"))
-      .union(added.union(removedPairs).select(col("doc_b").as("doc_id")))
+    val changed = d.added.union(d.removed)
+    val changedEnds = changed.select(col("doc_a").as("doc_id"))
+      .union(changed.select(col("doc_b").as("doc_id")))
       .distinct()
     // single consumer (regionKept's semi-join, itself checkpointed) — no
     // eager barrier needed here (r17, guide §5)
     val touchedComps = oldLabels.join(changedEnds, Seq("doc_id"), "left_semi")
       .select(col("component")).distinct()
-    val keptBase = oldBase.join(removedPairs, Seq("doc_a", "doc_b"), "left_anti")
+    val keptBase = oldBase.join(d.removed, Seq("doc_a", "doc_b"), "left_anti")
       .localCheckpoint()
     val regionKept = keptBase.join(touchedComps, Seq("component"), "left_semi")
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    def scrubbed(df: DataFrame): DataFrame =
-      df.sparkSession.createDataFrame(df.rdd, df.schema)
+    // a change's touched region is normally change-bounded, so the
+    // collapse finishes on the driver with no star rounds; a template
+    // flood contracts on the cluster first
     val regionLabels = dupComponents(
-      scrubbed(regionKept).union(scrubbed(added.select(col("doc_a"), col("doc_b")))))
+      scrubbed(regionKept).union(scrubbed(d.added.select(col("doc_a"), col("doc_b")))))
 
-    // ---- fresh readings for guard-entry pairs
-    val epIds = added.select(col("doc_a").as("doc_id"))
-      .union(added.select(col("doc_b").as("doc_id"))).distinct()
-    val epDocs = documents.join(epIds, Seq("doc_id"), "left_semi")
+    // ---- fresh readings for added pairs: all three detectors read only
+    // the endpoint docs, so the probe set is the added pairs' endpoints
+    val epIds = d.added.select(col("doc_a").as("doc_id"))
+      .union(d.added.select(col("doc_b").as("doc_id"))).distinct()
+    val epDocs = docs.join(epIds, Seq("doc_id"), "left_semi")
       .localCheckpoint()
-    val sig = minhashSignatures(epDocs)
-    val estAdded = added
-      .join(sig.select(col("doc_id").as("doc_a"), col("hash_idx"),
-        col("minhash").as("ma")), Seq("doc_a"))
-      .join(sig.select(col("doc_id").as("doc_b"), col("hash_idx"),
-        col("minhash").as("mb")), Seq("doc_b", "hash_idx"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(expr(
-        "cast((sum(case when ma = mb then 1 else 0 end) * 1000000 + 8) div 16 as bigint)")
-        .as("est_ppm"))
-    val survBands = oldBands.join(rem, Seq("doc_id"), "left_anti")
-    val nBandsAdded = added
-      .join(survBands.select(col("doc_id").as("doc_a"), col("band"),
+    val nBandsAdded = d.added
+      .join(d.bands.select(col("doc_id").as("doc_a"), col("band"),
         col("band_key")), Seq("doc_a"))
-      .join(survBands.select(col("doc_id").as("doc_b"), col("band"),
+      .join(d.bands.select(col("doc_id").as("doc_b"), col("band"),
         col("band_key")), Seq("doc_b", "band", "band_key"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_bands"))
     val simEp = simhash(epDocs)
-    val addedRows = added
-      .join(estAdded, Seq("doc_a", "doc_b"), "left")
+    val addedRows = d.added
+      .join(signatureAgreement(d.added, epDocs), Seq("doc_a", "doc_b"), "left")
       .na.fill(0L, Seq("est_ppm"))
       .join(nBandsAdded, Seq("doc_a", "doc_b"), "left")
       .na.fill(0L, Seq("n_bands"))
-      .join(wANew.select(col("doc_a"), col("doc_b"), col("n_shared")),
+      .join(d.wANew.select(col("doc_a"), col("doc_b"), col("n_shared")),
         Seq("doc_a", "doc_b"), "left")
       .withColumn("n_winnow",
         when(col("n_shared") >= 2, col("n_shared")).otherwise(lit(0L)))
@@ -1349,13 +1203,15 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b"), col("est_ppm"), col("n_bands"),
         col("n_winnow"), expr("cast(bit_count(sa ^ sb) as int)").as("sim_hamming"))
 
-    // ---- kept pairs: readings carry over except n_winnow on A×A
+    // ---- kept pairs: readings carry over, except n_winnow on A×A pairs
+    // (the recomputed slice is the truth — values can shrink or grow when
+    // a fingerprint crosses the df guard)
     val keptRows = keptBase
-      .join(aDocs.select(col("doc_id").as("doc_a"), lit(1).as("fa")),
+      .join(d.aDocs.select(col("doc_id").as("doc_a"), lit(1).as("fa")),
         Seq("doc_a"), "left")
-      .join(aDocs.select(col("doc_id").as("doc_b"), lit(1).as("fb")),
+      .join(d.aDocs.select(col("doc_id").as("doc_b"), lit(1).as("fb")),
         Seq("doc_b"), "left")
-      .join(wANew.select(col("doc_a"), col("doc_b"),
+      .join(d.wANew.select(col("doc_a"), col("doc_b"),
         col("n_shared").as("ns_new")), Seq("doc_a", "doc_b"), "left")
       .withColumn("n_winnow",
         when(col("fa").isNotNull && col("fb").isNotNull,
@@ -1364,6 +1220,9 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b"), col("component"), col("est_ppm"),
         col("n_bands"), col("n_winnow"), col("sim_hamming"))
 
+    // ---- final labels: a doc appears in the region relabeling iff its
+    // whole component was touched (or it is new to the graph), so one
+    // left join + coalesce assigns every pair its new label
     keptRows
       .unionByName(addedRows.withColumn("component",
         lit(null).cast(keptRows.schema("component").dataType))
@@ -1393,7 +1252,7 @@ object DedupOps {
       sum(when(col("doc_id") >= cutoff, 1L).otherwise(0L)).as("n_docs_delta"))
     docs
       .crossJoin(broadcast(d.uOld.agg(count(lit(1)).as("n_pairs_base"))))
-      .crossJoin(broadcast(d.uGrown.agg(count(lit(1)).as("n_pairs_grown"))))
+      .crossJoin(broadcast(d.uNew.agg(count(lit(1)).as("n_pairs_grown"))))
       .crossJoin(broadcast(d.added.agg(count(lit(1)).as("n_added"))))
       .crossJoin(broadcast(d.removed.agg(count(lit(1)).as("n_removed"))))
       .select(col("n_docs_base"), col("n_docs_delta"), col("n_pairs_base"),
@@ -1618,16 +1477,7 @@ object DedupOps {
                           grownDocs: DataFrame, cutoff: Long): DataFrame = {
     val newBands = lshBands(grownDocs.filter(col("doc_id") >= cutoff))
       .localCheckpoint()
-    val touchedKeys = newBands.select(col("band"), col("band_key")).distinct()
-    val mDelta = oldBands.unionByName(newBands)
-      .join(touchedKeys, Seq("band", "band_key"), "left_semi")
-      .groupBy(col("band"), col("band_key"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .select(explode(expr(bucketPairsSql)).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .filter(col("doc_b") >= cutoff)
-      .distinct().localCheckpoint()
+    val mDelta = bandDeltaPairs(oldBands, newBands, cutoff).localCheckpoint()
     val mapped = mDelta
       .join(oldLabels.select(col("doc_id").as("doc_a"), col("component").as("ca")),
         Seq("doc_a"), "left")
@@ -1685,13 +1535,8 @@ object DedupOps {
       .join(touched, Seq("component"), "left_semi")
       .join(rem, Seq("doc_id"), "left_anti")
       .select(col("doc_id"))
-    val pairs = oldBands.join(touchedSurvivors, Seq("doc_id"), "left_semi")
-      .groupBy(col("band"), col("band_key"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .select(explode(expr(bucketPairsSql)).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()
+    val pairs = bandBucketPairs(
+      oldBands.join(touchedSurvivors, Seq("doc_id"), "left_semi")).distinct()
     untouched.unionByName(
       dupComponents(pairs).select(col("doc_id"), col("component")))
   }

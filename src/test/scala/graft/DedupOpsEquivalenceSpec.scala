@@ -2,38 +2,16 @@ package graft
 
 import graft.operators.{DedupOps, TextOps}
 
-/** The dup-evidence inline-≡-stored hash gate (r14 verdict task 4): the
-  * 16.5 s inline derivation used to run in the bench registry purely as
-  * an A/B control for the persisted evidence base. The control now lives
-  * here — once per round at sf0.01 — while the registry's bench face is
-  * `dup_evidence_stored` (whose DuckDB oracle still replays the FULL
-  * inline derivation, so the cross-engine proof is unchanged; this spec
-  * adds the within-engine proof that the store ships exactly what the
-  * derivation computes, at every budget knob, not just the oracle's).
+/** Maintenance ≡ rebuild for the persisted dedup artifacts: every
+  * O(delta) path over the evidence base and the component index must
+  * return exactly what a full rebuild over the changed corpus computes
+  * (the registry's oracles replay the full derivation in DuckDB; these
+  * specs add the within-engine proof on fixtures built to hit each
+  * change class), and the local component finish must agree with the
+  * distributed one.
   */
 class DedupOpsEquivalenceSpec extends SparkSpec {
   import spark.implicits._
-
-  test("dupEvidenceFromBase(dupEvidenceBase) ≡ inline dupEvidence at " +
-       "sf0.01, at the shipping budget (24) and the binding budget (2)") {
-    val docs = graft.sources.Tables.load(spark, "/root/testdata/sf0.01", "documents")
-    val mpairs = DedupOps.minhashCandidatePairs(docs).localCheckpoint()
-    val wpairs = TextOps.winnowOverlapPairs(docs).localCheckpoint()
-    val base = DedupOps.dupEvidenceBase(docs, mpairs, wpairs).localCheckpoint()
-    for (budget <- Seq(24, 2)) {
-      val inline = DedupOps.dupEvidence(docs, mpairs, wpairs,
-          maxPairsPerComponent = budget)
-        .collect().map(_.toSeq).sortBy(_.mkString("|"))
-      val stored = DedupOps.dupEvidenceFromBase(base,
-          maxPairsPerComponent = budget)
-        .collect().map(_.toSeq).sortBy(_.mkString("|"))
-      assert(inline.length == stored.length,
-        s"budget=$budget: inline ${inline.length} rows vs stored ${stored.length}")
-      assert(inline.sameElements(stored) ||
-             inline.zip(stored).forall { case (a, b) => a == b },
-        s"budget=$budget: stored evidence diverges from the inline derivation")
-    }
-  }
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
@@ -88,6 +66,38 @@ class DedupOpsEquivalenceSpec extends SparkSpec {
     assert(st.getAs[Long]("n_removed") > 0L,
       s"expected df-guard removals, got $st")
     assert(st.getAs[Long]("n_added") > 0L, s"expected added pairs, got $st")
+  }
+
+  test("an empty change set is the identity: dupEvidenceBaseDelta with no " +
+       "doc at or above the cutoff and dupEvidenceBaseShrink with nothing " +
+       "removed each return the old base row for row") {
+    // a winnow family (shared 7-token prefix, unique suffixes) and a band
+    // family (identical up to the last token): two components, both edge
+    // kinds in the base
+    val xDocs = (0L until 5L).map { i =>
+      (i, "alpha beta gamma delta epsilon zeta eta " +
+        (0 until 20).map(k => s"x${i}q$k").mkString(" "))
+    }
+    val yDocs = (10L until 13L).map(i =>
+      (i, s"quick brown fox jumps over the lazy dog again and again forever y$i"))
+    val docs = (xDocs ++ yDocs)
+      .map { case (id, tx) => (id, tx, "en", "t", tx.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars").localCheckpoint()
+    val oldBase = DedupOps.dupEvidenceBase(docs,
+      DedupOps.minhashCandidatePairs(docs),
+      TextOps.winnowOverlapPairs(docs)).localCheckpoint()
+    val prints = DedupOps.winnowPrintIndex(docs).localCheckpoint()
+    val bands = DedupOps.lshBands(docs).localCheckpoint()
+    val before = rows(oldBase)
+    assert(before.map(_(2)).distinct.size == 2, s"two components expected: $before")
+    assert(before.exists(_(4) != 0L) && before.exists(_(5) != 0L),
+      s"band and winnow readings expected: $before")
+    val appended = DedupOps.dupEvidenceBaseDelta(oldBase, prints, bands, docs,
+      cutoff = 100L)
+    assert(rows(appended) == before, "an append of no docs must keep the base")
+    val shrunk = DedupOps.dupEvidenceBaseShrink(oldBase, prints, bands, docs,
+      Seq.empty[Long].toDF("doc_id"))
+    assert(rows(shrunk) == before, "a delete of no docs must keep the base")
   }
 
   test("dupComponentsLocal ≡ dupComponents (string and long ids: chain, " +

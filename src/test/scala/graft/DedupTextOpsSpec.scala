@@ -1527,7 +1527,8 @@ class DedupTextOpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val mp = DedupOps.minhashCandidatePairs(docs)
     val wp = TextOps.winnowOverlapPairs(docs)
-    val got = DedupOps.dupEvidence(docs, mp, wp).collect()
+    val got = DedupOps.dupEvidenceFromBase(DedupOps.dupEvidenceBase(docs, mp, wp))
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getInt(4), r.getInt(5)))).toMap
     assert(got.contains((1L, 2L)), got.toString)
@@ -1569,7 +1570,8 @@ class DedupTextOpsSpec extends SparkSpec {
     val mp = DedupOps.minhashCandidatePairs(docs)
     val wp = TextOps.winnowOverlapPairs(docs)
     def pairsOf(budget: Int): Seq[(Long, Long)] =
-      DedupOps.dupEvidence(docs, mp, wp, maxPairsPerComponent = budget)
+      DedupOps.dupEvidenceFromBase(DedupOps.dupEvidenceBase(docs, mp, wp),
+          maxPairsPerComponent = budget)
         .select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val full = pairsOf(Int.MaxValue)
@@ -1581,31 +1583,6 @@ class DedupTextOpsSpec extends SparkSpec {
     // the lexicographically-first five pairs of the cluster
     assert(kept == full.sorted.take(5), s"deterministic keep: $kept")
     assert(pairsOf(5) == kept, "re-run reproduces the same keep set")
-  }
-
-  test("dupEvidenceBase + FromBase ≡ inline dupEvidence at every budget — " +
-       "the persisted evidence path replays the derivation exactly") {
-    import spark.implicits._
-    val tmpl = "breaking news template header repeated across every crawl " +
-      "snapshot of the mirror site today"
-    val base = "the quick brown fox jumps over the lazy old dog again today"
-    val docs = ((1L to 6L).map(i => (i, tmpl)) ++ Seq(
-      (7L, base), (8L, base),
-      (9L, "completely unrelated content about warehouse tables and rows")))
-      .toDF("doc_id", "text")
-    val mp = DedupOps.minhashCandidatePairs(docs)
-    val wp = TextOps.winnowOverlapPairs(docs)
-    val evBase = DedupOps.dupEvidenceBase(docs, mp, wp)
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.select("doc_a", "doc_b", "n_bands", "n_winnow", "sim_hamming",
-        "evidence_tiers").collect().map(_.mkString("|")).toSeq.sorted
-    for (budget <- Seq(2, 5, 24, Int.MaxValue)) {
-      val inline = rows(DedupOps.dupEvidence(docs, mp, wp,
-        maxPairsPerComponent = budget))
-      val stored = rows(DedupOps.dupEvidenceFromBase(evBase,
-        maxPairsPerComponent = budget))
-      assert(stored == inline, s"budget=$budget: stored path diverged")
-    }
   }
 
   test("minhashEstimateAudit: identical docs estimate and measure J=1 with " +

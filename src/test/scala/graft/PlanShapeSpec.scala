@@ -567,17 +567,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(!st.contains("Generate"),
       s"stored evidence path must not re-shingle:\n$st")
     assert(st.contains("Window"), "budget replay is one window")
-    // the inline control DOES carry the derivation (the A/B pair
-    // DedupOpsEquivalenceSpec hash-proves equal). It left the registry in
-    // r15 (verdict task 4: 16.5 s × 2 bench passes as a pure control), so
-    // the shape pin drives the operator directly.
-    val docs = graft.sources.Tables.load(spark, sf, "documents")
-    val inline = graft.operators.DedupOps.dupEvidence(docs,
-      graft.operators.DedupOps.minhashCandidatePairs(docs),
-      graft.operators.TextOps.winnowOverlapPairs(docs))
-      .queryExecution.executedPlan.toString
-    assert(inline.contains("Generate"),
-      "inline dupEvidence keeps the full derivation as the control")
   }
 
   test("r16 task 1: binary/int8 top-k selection is a bounded aggregation — " +
