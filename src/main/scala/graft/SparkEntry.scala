@@ -1503,14 +1503,9 @@ object SparkEntry {
       val emb = t(s, d, "embeddings").persist()
       val brute = SimilarityOps.cosineTopK(emb, 10, 5)
         .select(col("q_id"), col("vec_id")).persist()
-      def recallOf(approx: DataFrame, method: String): DataFrame = {
-        val hit = approx.select(col("q_id"), col("vec_id")).withColumn("hit", lit(1))
-        brute.join(hit, Seq("q_id", "vec_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(round(sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / lit(5.0), 2)
-            .as("recall"))
+      def recallOf(approx: DataFrame, method: String): DataFrame =
+        SimilarityOps.perQueryRecall(brute, approx, 5)
           .select(lit(method).as("method"), col("q_id"), col("recall"))
-      }
       recallOf(SimilarityOps.hammingShortlist(
           SimilarityOps.packSignBits(emb), 10, 5), "binary_ham")
         .unionByName(recallOf(
@@ -1561,13 +1556,8 @@ object SparkEntry {
       val emb = t(s, d, "embeddings").persist()
       val dir = artifactDir("graph_index", d)(out =>
         SimilarityOps.writeGraphIndex(emb, out))
-      val brute = SimilarityOps.cosineTopK(emb, 10, 5).select(col("q_id"), col("vec_id"))
-      val hit = SimilarityOps.graphAnnTopKFromIndex(s, dir, 10, 5)
-        .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1))
-      brute.join(hit, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(round(sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / lit(5.0), 2)
-          .as("recall"))
+      val brute = SimilarityOps.cosineTopK(emb, 10, 5)
+      SimilarityOps.perQueryRecall(brute, SimilarityOps.graphAnnTopKFromIndex(s, dir, 10, 5), 5)
         .select(lit("graph").as("method"), col("q_id"), col("recall"))
     }),
     // two-stage graph retrieval (r13 verdict task 7): beam-search top-20
@@ -2501,14 +2491,9 @@ object SparkEntry {
       // 50-row brute reference that is the left side of every method join
       val emb = t(s, d, "embeddings").persist()
       val brute = SimilarityOps.cosineTopK(emb, 10, 5).select(col("q_id"), col("vec_id")).persist()
-      def recallOf(approx: DataFrame, method: String): DataFrame = {
-        val hit = approx.select(col("q_id"), col("vec_id")).withColumn("hit", lit(1))
-        brute.join(hit, Seq("q_id", "vec_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(round(sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / lit(5.0), 2)
-            .as("recall"))
+      def recallOf(approx: DataFrame, method: String): DataFrame =
+        SimilarityOps.perQueryRecall(brute, approx, 5)
           .select(lit(method).as("method"), col("q_id"), col("recall"))
-      }
       recallOf(SimilarityOps.lshBucketedTopK(emb, 10, 5), "lsh")
         .unionByName(recallOf(SimilarityOps.ivfTopK(emb, 16, 10, 5), "ivf"))
         .unionByName(recallOf(
@@ -2521,13 +2506,8 @@ object SparkEntry {
     // (kept separate from ann_recall so the stable gate stays untouched)
     "ann_recall_int8" -> ((s, d) => {
       val emb = t(s, d, "embeddings").persist()
-      val brute = SimilarityOps.cosineTopK(emb, 10, 5).select(col("q_id"), col("vec_id"))
-      val hit = SimilarityOps.cosineTopKInt8(emb, 10, 5)
-        .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1))
-      brute.join(hit, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(round(sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / lit(5.0), 2)
-          .as("recall"))
+      val brute = SimilarityOps.cosineTopK(emb, 10, 5)
+      SimilarityOps.perQueryRecall(brute, SimilarityOps.cosineTopKInt8(emb, 10, 5), 5)
         .select(lit("int8").as("method"), col("q_id"), col("recall"))
     }),
 
@@ -2535,13 +2515,8 @@ object SparkEntry {
     // memory cut costs in top-k ordering, as a gated value
     "ann_recall_pq" -> ((s, d) => {
       val emb = t(s, d, "embeddings").persist()
-      val brute = SimilarityOps.cosineTopK(emb, 10, 5).select(col("q_id"), col("vec_id"))
-      val hit = SimilarityOps.pqTopK(emb, 10, 5)
-        .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1))
-      brute.join(hit, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(round(sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / lit(5.0), 2)
-          .as("recall"))
+      val brute = SimilarityOps.cosineTopK(emb, 10, 5)
+      SimilarityOps.perQueryRecall(brute, SimilarityOps.pqTopK(emb, 10, 5), 5)
         .select(lit("pq").as("method"), col("q_id"), col("recall"))
     }),
 
@@ -2561,13 +2536,8 @@ object SparkEntry {
           SimilarityOps.opqRotationVectorsFrom(pcaBasisFor(s, d)))
           .write.mode("overwrite").parquet(out))
       val rot = s.read.parquet(dir).persist()
-      val brute = SimilarityOps.cosineTopK(emb, 10, 5).select(col("q_id"), col("vec_id"))
-      val hit = SimilarityOps.pqTopK(rot, 10, 5)
-        .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1))
-      brute.join(hit, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(round(sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / lit(5.0), 2)
-          .as("recall"))
+      val brute = SimilarityOps.cosineTopK(emb, 10, 5)
+      SimilarityOps.perQueryRecall(brute, SimilarityOps.pqTopK(rot, 10, 5), 5)
         .select(lit("pq_opq").as("method"), col("q_id"), col("recall"))
     }),
 
@@ -2848,15 +2818,9 @@ object SparkEntry {
       val emb = t(s, d, "embeddings").persist()
       val brute = SimilarityOps.cosineTopK(emb, 10, 5)
         .select(col("q_id"), col("vec_id")).persist()
-      def recallOf(approx: DataFrame, np: Int): DataFrame = {
-        val hit = approx.select(col("q_id"), col("vec_id")).withColumn("hit", lit(1))
-        brute.join(hit, Seq("q_id", "vec_id"), "left")
-          .groupBy(col("q_id"))
-          .agg(round(sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / lit(5.0), 2)
-            .as("recall"))
-          .select(lit(np).as("nprobe"), col("q_id"), col("recall"))
-      }
-      Seq(1, 2, 4).map(np => recallOf(SimilarityOps.ivfTopK(emb, 16, 10, 5, np), np))
+      Seq(1, 2, 4).map(np =>
+        SimilarityOps.perQueryRecall(brute, SimilarityOps.ivfTopK(emb, 16, 10, 5, np), 5)
+          .select(lit(np).as("nprobe"), col("q_id"), col("recall")))
         .reduce(_ unionByName _)
     }),
   )

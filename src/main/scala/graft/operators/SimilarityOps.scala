@@ -64,6 +64,48 @@ object SimilarityOps {
         (col("pos") + 1).cast(IntegerType).as("rank")): _*)
   }
 
+  /** The query set of every tier: vectors with vec_id < nQueries, as
+    * (q_id, q_emb).
+    */
+  private def queriesOf(vectors: DataFrame, nQueries: Int): DataFrame =
+    vectors.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** The second stage of every two-stage tier: EXACT round-4 cosine for
+    * the (q_id, vec_id) `shortlist` rows only, against `vectors`
+    * (vec_id, embedding) and the broadcast `queries` (q_id, q_emb), then
+    * the top k per query by (score desc, vec_id) — [[cosineTopK]]'s
+    * schema and contract, so a rescored tier is directly comparable with
+    * brute. The window is bounded by construction: its input is
+    * shortlist × queries rows, never the corpus.
+    */
+  private def exactRescore(shortlist: DataFrame, vectors: DataFrame,
+                           queries: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
+    shortlist.select(col("q_id"), col("vec_id"))
+      .join(vectors.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+      .join(broadcast(queries), Seq("q_id"))
+      .withColumn("score",
+        round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4))
+      .select(col("q_id"), col("vec_id"), col("score"),
+        row_number().over(w).as("rank"))
+      .filter(col("rank") <= k)
+  }
+
+  /** Per-query recall@k of an approximate top-k against the brute top-k:
+    * |brute ∩ approx| / k for each query, rounded to 2 dp, as
+    * (q_id, recall). Both frames carry (q_id, vec_id); the left join from
+    * `brute` keeps a query the approximate tier returned nothing for, at
+    * 0.0. Callers add their own label column.
+    */
+  def perQueryRecall(brute: DataFrame, approx: DataFrame, k: Int): DataFrame =
+    brute.select(col("q_id"), col("vec_id"))
+      .join(approx.select(col("q_id"), col("vec_id")).withColumn("hit", lit(1)),
+        Seq("q_id", "vec_id"), "left")
+      .groupBy(col("q_id"))
+      .agg(round(sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / lit(k.toDouble), 2)
+        .as("recall"))
+
   /** Brute-force top-k cosine neighbors for each query vector (vec_id <
     * nQueries), excluding self. Query side is broadcast; per-query top-k
     * via the bounded [[topKSelect]] aggregation (vec_id tiebreak for
@@ -71,9 +113,7 @@ object SimilarityOps {
     */
   def cosineTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val corpus = embeddings.select(col("vec_id"), col("embedding"))
-    val queries = embeddings
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val queries = queriesOf(embeddings, nQueries)
     val scored = corpus
       .join(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
@@ -100,9 +140,7 @@ object SimilarityOps {
   def hardNegatives(embeddings: DataFrame, nQueries: Int, k: Int,
                     lo: Double = 0.05, hi: Double = 0.7): DataFrame = {
     val corpus = embeddings.select(col("vec_id"), col("embedding"))
-    val queries = embeddings
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val queries = queriesOf(embeddings, nQueries)
     val banded = corpus
       .join(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
@@ -125,18 +163,8 @@ object SimilarityOps {
   def pqTopKRescored(embeddings: DataFrame, nQueries: Int, k: Int,
                      shortlist: Int = 20): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must cover k = $k")
-    val sl = pqTopK(embeddings, nQueries, shortlist)
-      .select(col("q_id"), col("vec_id"))
-    val q = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
-    sl.join(embeddings.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("score",
-        round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4))
-      .select(col("q_id"), col("vec_id"), col("score"),
-        row_number().over(w).as("rank"))
-      .filter(col("rank") <= k)
+    exactRescore(pqTopK(embeddings, nQueries, shortlist), embeddings,
+      queriesOf(embeddings, nQueries), k)
   }
 
   /** Graded ranking-quality gate for the ANN tiers: per-query nDCG@5 of
@@ -337,16 +365,24 @@ object SimilarityOps {
     * with list_cosine_similarity; an ulp difference must not flip a list
     * assignment), ties broken by centroid_id.
     */
-  def ivfAssignWith(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("c_score").desc, col("centroid_id"))
-    embeddings
+  def ivfAssignWith(embeddings: DataFrame, centroids: DataFrame): DataFrame =
+    nearestCentroids(embeddings, "vec_id", "embedding", centroids, 1)
+
+  /** The one nearest-list selection of the IVF tiers: each row's `n`
+    * nearest centroids by round-6 cosine of `vec` against c_emb,
+    * centroid_id tiebreak, as (key, vec, centroid_id). n = 1 is the list
+    * assignment of a corpus vector; n = nProbe is a query's probe set.
+    */
+  private def nearestCentroids(rows: DataFrame, key: String, vec: String,
+                               centroids: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy(key).orderBy(col("c_score").desc, col("centroid_id"))
+    rows
       .join(broadcast(centroids))
       .withColumn("c_score",
-        round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("c_emb")), 6))
+        round(graft.functions.GraftFunctions.cosineSim(col(vec), col("c_emb")), 6))
       .withColumn("c_rank", row_number().over(w))
-      .filter(col("c_rank") === 1)
-      .select(col("vec_id"), col("embedding"), col("centroid_id"))
+      .filter(col("c_rank") <= n)
+      .select(col(key), col(vec), col("centroid_id"))
   }
 
   def ivfAssign(embeddings: DataFrame, nCentroids: Int): DataFrame =
@@ -460,11 +496,8 @@ object SimilarityOps {
   /** IVF top-k against an arbitrary centroid frame (seeded or trained). */
   def ivfTopKWith(embeddings: DataFrame, centroids: DataFrame,
                   nQueries: Int, k: Int, nProbe: Int = 2): DataFrame =
-    ivfTopKOverLists(
-      ivfAssignWith(embeddings, centroids), centroids,
-      embeddings.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-      k, nProbe)
+    ivfTopKOverLists(ivfAssignWith(embeddings, centroids), centroids,
+      queriesOf(embeddings, nQueries), k, nProbe)
 
   /** The probe/score/rank pipeline over PREBUILT inverted lists — shared
     * by the inline path (`ivfTopKWith`, which assigns lists on the fly)
@@ -473,14 +506,7 @@ object SimilarityOps {
     */
   def ivfTopKOverLists(lists: DataFrame, centroids: DataFrame,
                        queries: DataFrame, k: Int, nProbe: Int = 2): DataFrame = {
-    val wq = Window.partitionBy("q_id").orderBy(col("c_score").desc, col("centroid_id"))
-    val probes = queries
-      .join(broadcast(centroids))
-      .withColumn("c_score",
-        round(graft.functions.GraftFunctions.cosineSim(col("q_emb"), col("c_emb")), 6))
-      .withColumn("c_rank", row_number().over(wq))
-      .filter(col("c_rank") <= nProbe)
-      .select(col("q_id"), col("q_emb"), col("centroid_id"))
+    val probes = nearestCentroids(queries, "q_id", "q_emb", centroids, nProbe)
     // bounded keep-best (r17, guide §2.3): the probed-list stream is
     // nProbe/nCentroids of the corpus per query — still corpus-scale —
     // and the old window paid a map-side sort of it; topKSelect keeps
@@ -620,8 +646,7 @@ object SimilarityOps {
                           nCentroids: Int, iters: Int, nQueries: Int, k: Int,
                           nProbe: Int): DataFrame = {
     val brute = cosineTopK(corpus, nQueries, k).select(col("q_id"), col("vec_id"))
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val queries = queriesOf(corpus, nQueries)
     def hits(c: DataFrame): DataFrame =
       ivfTopKOverLists(ivfAssignWith(corpus, c), c, queries, k, nProbe)
     val cFresh = ivfTrainCentroids(corpus, nCentroids, iters)
@@ -705,13 +730,17 @@ object SimilarityOps {
     * probe + score over the pruned lists.
     */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       nQueries: Int, k: Int, nProbe: Int = 2): DataFrame = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val lists = spark.read.parquet(s"$dir/lists")
-    val queries = lists.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    ivfTopKOverLists(lists, centroids, queries, k, nProbe)
-  }
+                       nQueries: Int, k: Int, nProbe: Int = 2): DataFrame =
+    ivfTopKOverIndex(dir, spark.read.parquet(s"$dir/lists"), nQueries, k, nProbe)
+
+  /** The read path of both persisted IVF indexes: `lists` is the index's
+    * (vec_id, embedding, centroid_id) rows as read, the queries are its
+    * vec_id < nQueries rows, and the centroids come from `dir`.
+    */
+  private def ivfTopKOverIndex(dir: String, lists: DataFrame, nQueries: Int, k: Int,
+                               nProbe: Int): DataFrame =
+    ivfTopKOverLists(lists, lists.sparkSession.read.parquet(s"$dir/centroids"),
+      queriesOf(lists, nQueries), k, nProbe)
 
   /** Johnson–Lindenstrauss random projection — the THIRD memory/compute
     * lever of the ANN family, orthogonal to int8 (precision) and PQ
@@ -950,14 +979,10 @@ object SimilarityOps {
     * (`ann_recall_int8`).
     */
   def ivfTopKFromIndexInt8(spark: org.apache.spark.sql.SparkSession, dir: String,
-                           nQueries: Int, k: Int, nProbe: Int = 2): DataFrame = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val lists = widenInt8(spark.read.parquet(s"$dir/lists"))
-      .withColumnRenamed("qv", "embedding")
-    val queries = lists.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    ivfTopKOverLists(lists, centroids, queries, k, nProbe)
-  }
+                           nQueries: Int, k: Int, nProbe: Int = 2): DataFrame =
+    ivfTopKOverIndex(dir,
+      widenInt8(spark.read.parquet(s"$dir/lists")).withColumnRenamed("qv", "embedding"),
+      nQueries, k, nProbe)
 
   /** Random-hyperplane LSH bucket id: sign bits of the embedding's
     * components at `(dim / nBits)`-strided positions folded into an int. A
@@ -1141,9 +1166,9 @@ object SimilarityOps {
   def graphAnnTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val n = embeddings.count()
     val (beam, rounds, graphK, seeds) = graphKnobs(n)
-    val directed = knnGraphDescent(embeddings, graphK, knownN = Some(n))
-    graphAnnSearch(embeddings, symmetrize(directed).localCheckpoint(), nQueries, k,
-      beam, rounds, seeds)
+    graphAnnTopKOver(embeddings,
+      symmetrize(knnGraphDescent(embeddings, graphK, knownN = Some(n))),
+      nQueries, k, beam, rounds, seeds)
   }
 
   /** Persist the graph-ANN index under the scale contract: the
@@ -1192,7 +1217,7 @@ object SimilarityOps {
                             dir: String, nQueries: Int, k: Int): DataFrame = {
     val vectors = spark.read.parquet(s"$dir/vectors")
     val (beam, rounds, _, seeds) = graphKnobs(vectors.count())
-    graphAnnSearch(vectors, spark.read.parquet(s"$dir/edges"),
+    graphAnnTopKOver(vectors, spark.read.parquet(s"$dir/edges"),
       nQueries, k, beam, rounds, seeds)
   }
 
@@ -1272,8 +1297,7 @@ object SimilarityOps {
       .getOrElse(symmetrize(knnGraphDescent(
         embeddings.filter(col("vec_id") < nb), graphK, knownN = Some(nb)))
         .localCheckpoint())
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val queries = queriesOf(embeddings, nQueries)
     val scoredAll = embeddings.filter(col("vec_id") < nMax)
       .select(col("vec_id"), col("embedding"))
       .join(broadcast(queries))
@@ -1381,24 +1405,15 @@ object SimilarityOps {
         // window, no map-side sort of every scored pair
         val brute = topKSelect(scoredAll.filter(col("vec_id") < n), Seq("q_id"), k)
           .select(col("q_id"), col("vec_id"))
-        val sl = graphAnnSearch(corpus, stale.localCheckpoint(), nQueries,
-          shortlist, beam, rounds, seeds).localCheckpoint()
-        val wResc = Window.partitionBy("q_id")
-          .orderBy(col("score").desc, col("vec_id"))
-        val rescHits = sl.select(col("q_id"), col("vec_id"))
-          .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-          .join(broadcast(queries), Seq("q_id"))
-          .withColumn("score",
-            round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4))
-          .select(col("q_id"), col("vec_id"),
-            row_number().over(wResc).as("rnk"))
-          .filter(col("rnk") <= k)
+        val sl = graphAnnTopKOver(corpus, stale, nQueries, shortlist, beam, rounds, seeds)
+          .localCheckpoint()
         // LAZY row (r17): sl is checkpointed and brute reads the
-        // checkpointed scoredAll; rescHits re-reads the (registry-persisted)
+        // checkpointed scoredAll; the rescore re-reads the (registry-persisted)
         // embeddings slice — so a per-factor row checkpoint would be one
         // more driver barrier per factor, and the caller's single
         // consuming action computes both factor rows in one job
-        recallCounts(brute, "h_plain" -> sl.filter(col("rank") <= k), "h_resc" -> rescHits)
+        recallCounts(brute, "h_plain" -> sl.filter(col("rank") <= k),
+          "h_resc" -> exactRescore(sl, corpus, queries, k))
           .select(lit(f.toLong).as("append_factor"),
             lit(nb).as("n_base"),
             lit(n).as("n_corpus"),
@@ -1526,8 +1541,7 @@ object SimilarityOps {
     }
     val vis = graphAnnSearchArmsVisited(embeddings, arms, nQueries, beam,
       rounds, seeds).localCheckpoint()
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val queries = queriesOf(embeddings, nQueries)
     val scoredAll = embeddings.select(col("vec_id"), col("embedding"))
       .join(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
@@ -1535,7 +1549,6 @@ object SimilarityOps {
         round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4)
           .as("score"))
       .localCheckpoint()
-    val wq = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
     val rows = delTenths.map { f =>
       val aliveV = aliveOn("vec_id", f)
       // brute ground truth via the bounded topKSelect aggregation (r17,
@@ -1546,10 +1559,8 @@ object SimilarityOps {
       val brute = topKSelect(scoredAll.filter(aliveV), Seq("q_id"), k)
         .select(col("q_id"), col("vec_id"))
       def armTop(arm: String): DataFrame =
-        vis.filter(col("arm") === arm).drop("arm")
-          .filter(aliveV)
-          .select(col("q_id"), col("vec_id"), row_number().over(wq).as("rank"))
-          .filter(col("rank") <= k)
+        topKVisited(vis.filter(col("arm") === arm).drop("arm").filter(aliveV),
+          Seq("q_id"), k)
       val nAlive = embeddings
         .agg(sum(when(aliveV, 1L).otherwise(0L)).as("n_alive"))
       // LAZY per-fraction rows (r17): everything they read (vis,
@@ -1586,18 +1597,8 @@ object SimilarityOps {
   def graphTopKRescored(embeddings: DataFrame, nQueries: Int, k: Int,
                         shortlist: Int = 20): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must cover k = $k")
-    val sl = graphAnnTopK(embeddings, nQueries, shortlist)
-      .select(col("q_id"), col("vec_id"))
-    val q = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
-    sl.join(embeddings.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("score",
-        round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4))
-      .select(col("q_id"), col("vec_id"), col("score"),
-        row_number().over(w).as("rank"))
-      .filter(col("rank") <= k)
+    exactRescore(graphAnnTopK(embeddings, nQueries, shortlist), embeddings,
+      queriesOf(embeddings, nQueries), k)
   }
 
   /** [[graphTopKRescored]] riding the persisted index: beam shortlist
@@ -1616,69 +1617,85 @@ object SimilarityOps {
                                  shortlist: Int = 20): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must cover k = $k")
     val vectors = spark.read.parquet(s"$dir/vectors")
-    val sl = graphAnnTopKFromIndex(spark, dir, nQueries, shortlist)
-      .select(col("q_id"), col("vec_id"))
-    val q = vectors.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
-    sl.join(vectors.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("score",
-        round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4))
-      .select(col("q_id"), col("vec_id"), col("score"),
-        row_number().over(w).as("rank"))
-      .filter(col("rank") <= k)
+    exactRescore(graphAnnTopKFromIndex(spark, dir, nQueries, shortlist), vectors,
+      queriesOf(vectors, nQueries), k)
   }
 
   /** Beam search over a caller-supplied symmetrized edge set — the public
-    * face of the search half, for custom graph builds.
+    * face of the search half, for custom graph builds, and the one-arm
+    * call every single-graph tier makes: (q_id, vec_id, score, rank).
+    * The chain materializes `edges` once, so callers do not checkpoint it.
     */
   def graphAnnTopKOver(embeddings: DataFrame, edges: DataFrame, nQueries: Int,
                        k: Int, beam: Int, rounds: Int, entrySeeds: Int): DataFrame =
-    graphAnnSearch(embeddings, edges, nQueries, k, beam, rounds, entrySeeds)
+    topKVisited(graphAnnSearchArmsVisited(embeddings, Seq("" -> edges), nQueries, beam,
+      rounds, entrySeeds).drop("arm"), Seq("q_id"), k)
 
-  /** [[graphAnnSearch]] over SEVERAL edge sets at once, every frame keyed
-    * by an extra `arm` column — for callers (the drift audit) whose arms
-    * share corpus, queries and knobs and differ only in the graph. One
-    * keyed chain costs one set of per-round jobs/checkpoints instead of
-    * one per arm; per-arm output is identical to a per-arm
-    * [[graphAnnSearch]] call (same scores, same (q_id, node) tie-breaks —
-    * every window partitions by (arm, q_id)).
+  /** Greedy BEAM SEARCH over one or more symmetrized kNN graphs (the
+    * HNSW/NSW recall path, DataFrame-native) instead of pointer chasing,
+    * every frame keyed by an extra `arm` column naming the graph. Per
+    * round, the current top-`beam` candidates of every (arm, query)
+    * expand through ONE equi-join on the graph's (arm, src) key, newly
+    * reached nodes score against their query (broadcast query set), and
+    * the beam re-selects from everything visited. Termination mimics
+    * HNSW's: when the beam stops producing unvisited neighbors the
+    * frontier fixes itself. Deterministic end to end (round-6 scores,
+    * node tiebreaks, the visited set keyed by (arm, q_id, node)); every
+    * round localCheckpoints (multi-reference loop rule). Per round the
+    * work is |arms|·|queries|·beam·graphK candidate rows — independent
+    * of corpus size once the graph is built.
+    *
+    * Arms share corpus, queries and knobs and differ only in the graph,
+    * so one keyed chain costs one set of per-round jobs/checkpoints
+    * instead of one per arm; every window partitions by (arm, q_id), so
+    * each arm's output is exactly what a one-arm call over its graph
+    * returns (same scores, same tie-breaks). An arm with no edges returns
+    * its scored entry seeds.
     */
-  private def graphAnnSearchArms(embeddings: DataFrame,
-                                 graphs: Seq[(String, DataFrame)],
-                                 nQueries: Int, k: Int, beam: Int, rounds: Int,
-                                 entrySeeds: Int): DataFrame = {
-    val wk = Window.partitionBy("arm", "q_id").orderBy(col("score").desc, col("vec_id"))
-    graphAnnSearchArmsVisited(embeddings, graphs, nQueries, beam, rounds, entrySeeds)
-      .select(col("arm"), col("q_id"), col("vec_id"), col("score"),
-        row_number().over(wk).as("rank"))
-      .filter(col("rank") <= k)
+  private[graft] def graphAnnSearchArms(embeddings: DataFrame,
+                                        graphs: Seq[(String, DataFrame)],
+                                        nQueries: Int, k: Int, beam: Int,
+                                        rounds: Int, entrySeeds: Int): DataFrame =
+    topKVisited(graphAnnSearchArmsVisited(embeddings, graphs, nQueries, beam, rounds,
+      entrySeeds), Seq("arm", "q_id"), k)
+
+  /** The beam chain's final cut: the top k visited nodes of each `keys`
+    * group, (q_id) for one graph and (arm, q_id) for several, with their
+    * rank. The ranking (and thus any shortlist boundary a two-stage
+    * caller like graphTopKRescored cuts at) is on the ROUND-4 score with
+    * vec_id tie-break: the visited frame's `score` is already
+    * round(score, 4), NOT the round-6 beam score. This matches the
+    * oracle's gtop CTE (round(score, 4) before its window) exactly, so a
+    * round-4 tie at the boundary admits the same candidates in both
+    * engines (pinned by GraphAnnGateSpec's round-4 boundary spec). A
+    * one-graph window partitions by q_id alone, so a shortlist keeps the
+    * partitioning its rescore window needs.
+    */
+  private def topKVisited(visited: DataFrame, keys: Seq[String], k: Int): DataFrame = {
+    val wk = Window.partitionBy(keys.map(col): _*).orderBy(col("score").desc, col("vec_id"))
+    visited.withColumn("rank", row_number().over(wk)).filter(col("rank") <= k)
   }
 
   /** The arms chain WITHOUT the final top-k cut: every visited node per
-    * (arm, query) with its round-4 score — for callers (the delete-drift
-    * audit) that apply their own exclusion before ranking. The ranked
-    * [[graphAnnSearchArms]] is exactly this frame windowed to k.
+    * (arm, query) with its round-4 score. Every ranked face is this frame
+    * cut by [[topKVisited]]; the delete-drift audit applies its own
+    * exclusion before the cut.
     */
   private def graphAnnSearchArmsVisited(embeddings: DataFrame,
                                         graphs: Seq[(String, DataFrame)],
                                         nQueries: Int, beam: Int, rounds: Int,
                                         entrySeeds: Int): DataFrame = {
-    import embeddings.sparkSession.implicits._
     // ONE materialization of every arm's edge set (r17): the union graph
     // is consumed by the expand join in EVERY round, and without its own
     // checkpoint each round's job recomputed every arm's derivation —
     // for the delete audit that meant re-running all per-fraction repair
-    // windows rounds× (guide §5: cache/checkpoint what is reused). Arm
-    // callers no longer pre-checkpoint their frames individually; this
-    // single job replaces one job per arm.
+    // windows rounds× (guide §5: cache/checkpoint what is reused), and a
+    // stored index would re-scan its edge files every round. Callers do not
+    // checkpoint their edge sets; this single job replaces one per arm.
     val graph = graphs.map { case (a, g) =>
       g.select(lit(a).as("arm"), col("src"), col("dst"))
     }.reduce(_ unionByName _).localCheckpoint()
-    val armsDf = graphs.map(_._1).toDF("arm")
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val queries = queriesOf(embeddings, nQueries)
     def scored(cand: DataFrame): DataFrame = cand
       .join(embeddings.select(col("vec_id").as("node"), col("embedding").as("n_emb")),
         Seq("node"))
@@ -1686,11 +1703,13 @@ object SimilarityOps {
       .withColumn("score",
         round(graft.functions.GraftFunctions.cosineSim(col("n_emb"), col("q_emb")), 6))
       .select(col("arm"), col("q_id"), col("node"), col("score"))
-    val entry = embeddings.filter(col("vec_id") < entrySeeds)
+    val seedPairs = embeddings.filter(col("vec_id") < entrySeeds)
       .select(col("vec_id").as("node"))
       .crossJoin(broadcast(queries.select(col("q_id"))))
       .filter(col("node") =!= col("q_id"))
-      .crossJoin(broadcast(armsDf))
+    // every arm enters at the same seeds: one row per (arm, seed pair),
+    // generated in place from the arm names (no join, no extra scan)
+    val entry = seedPairs.withColumn("arm", explode(typedLit(graphs.map(_._1))))
     var visited = scored(entry).localCheckpoint()
     val wb = Window.partitionBy("arm", "q_id").orderBy(col("score").desc, col("node"))
     // `visited` keeps its per-round checkpoint (3 consumers per round:
@@ -1716,76 +1735,10 @@ object SimilarityOps {
       visited = visited.unionByName(scored(expand)).localCheckpoint()
       if (r < rounds) frontier = beamOf(visited)
     }
-    // round-4 output scores, same binding note as graphAnnSearch below
+    // round-4 output scores (see topKVisited on the ranking)
     visited
       .select(col("arm"), col("q_id"), col("node").as("vec_id"),
         round(col("score"), 4).as("score"))
-  }
-
-  /** Greedy BEAM SEARCH over a symmetrized kNN graph (the HNSW/NSW recall
-    * path, DataFrame-native) instead of pointer chasing — per round, the
-    * current top-`beam` candidates of every query expand through ONE
-    * equi-join on the graph's src key, newly reached nodes score against
-    * their query (broadcast query set), and the beam re-selects from
-    * everything visited. Termination mimics HNSW's: when the beam stops
-    * producing unvisited neighbors the frontier fixes itself.
-    * Deterministic end to end (round-6 scores, node tiebreaks, the
-    * visited set keyed by (q_id, node)); every round localCheckpoints
-    * (multi-reference loop rule). Per round the work is
-    * |queries|·beam·graphK candidate rows — independent of corpus size
-    * once the graph is built.
-    */
-  private def graphAnnSearch(embeddings: DataFrame, graph: DataFrame,
-                             nQueries: Int, k: Int, beam: Int, rounds: Int,
-                             entrySeeds: Int): DataFrame = {
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    def scored(cand: DataFrame): DataFrame = cand
-      .join(embeddings.select(col("vec_id").as("node"), col("embedding").as("n_emb")),
-        Seq("node"))
-      .join(broadcast(queries), Seq("q_id"))
-      .withColumn("score",
-        round(graft.functions.GraftFunctions.cosineSim(col("n_emb"), col("q_emb")), 6))
-      .select(col("q_id"), col("node"), col("score"))
-    val entry = embeddings.filter(col("vec_id") < entrySeeds)
-      .select(col("vec_id").as("node"))
-      .crossJoin(broadcast(queries.select(col("q_id"))))
-      .filter(col("node") =!= col("q_id"))
-    var visited = scored(entry).localCheckpoint()
-    val wb = Window.partitionBy("q_id").orderBy(col("score").desc, col("node"))
-    // frontier = one window over the checkpointed `visited`, ONE consumer
-    // (next round's expand join): its per-round checkpoint was a pure
-    // driver-barrier tax, and the last round's frontier was dead work —
-    // same cadence cut as graphAnnSearchArmsVisited (r17, guide §5)
-    def beamOf(vis: DataFrame): DataFrame = vis
-      .withColumn("rnk", row_number().over(wb))
-      .filter(col("rnk") <= beam).select(col("q_id"), col("node"))
-    var frontier = beamOf(visited)
-    for (r <- 1 to rounds) {
-      val expand = frontier
-        .join(graph.select(col("src").as("node"), col("dst")), Seq("node"))
-        .select(col("q_id"), col("dst").as("node"))
-        .filter(col("node") =!= col("q_id"))
-        .distinct()
-        .join(visited.select(col("q_id"), col("node")), Seq("q_id", "node"), "left_anti")
-      visited = visited.unionByName(scored(expand)).localCheckpoint()
-      if (r < rounds) frontier = beamOf(visited)
-    }
-    // The output ranking (and thus any shortlist boundary a two-stage
-    // caller like graphTopKRescored cuts at) is on the ROUND-4 score
-    // with vec_id tie-break: wk's `col("score")` resolves against the
-    // projection below it, where `score` is already round(score, 4) —
-    // NOT against visited's round-6 beam score. This matches the
-    // oracle's gtop CTE (round(score, 4) before its window) exactly, so
-    // a round-4 tie at the boundary admits the same candidates in both
-    // engines (r14 ADVICE review; pinned by GraphAnnGateSpec's round-4
-    // boundary spec).
-    val wk = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
-    visited
-      .select(col("q_id"), col("node").as("vec_id"), round(col("score"), 4).as("score"))
-      .select(col("q_id"), col("vec_id"), col("score"),
-        row_number().over(wk).as("rank"))
-      .filter(col("rank") <= k)
   }
 
   /** Query-side probe set: the query's own bucket plus (with multiProbe)
@@ -2015,7 +1968,6 @@ object SimilarityOps {
     pqTopKWith(embeddings, pqCodebook(embeddings, m, kCodes, dim),
       nQueries, k, m, dim)
 
-  /** ADC top-k against an arbitrary codebook (seeded or Lloyd-trained). */
   /** IVF-PQ: the composed ANN tier every large-scale vector store ships
     * (the FAISS `IVFx,PQy` shape) — the coarse quantizer prunes the
     * candidate set to the nProbe nearest inverted lists, and ADC scores
@@ -2039,54 +1991,23 @@ object SimilarityOps {
     // embedding arrays through a window (measured: 34 s → the window's
     // wide-row sorts dominated the whole query at 200 k vectors)
     val assigned = ivfAssignIds(embeddings, centroids)
-    val wq = Window.partitionBy("q_id").orderBy(col("c_score").desc, col("centroid_id"))
-    val probes = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .join(broadcast(centroids))
-      .withColumn("c_score",
-        round(graft.functions.GraftFunctions.cosineSim(col("q_emb"), col("c_emb")), 6))
-      .withColumn("c_rank", row_number().over(wq))
-      .filter(col("c_rank") <= nProbe)
-      .select(col("q_id"), col("centroid_id"))
-    val cands = probes.join(assigned, Seq("centroid_id"))
+    val queries = queriesOf(embeddings, nQueries)
+    val cands = nearestCentroids(queries, "q_id", "q_emb", centroids, nProbe)
+      .join(assigned, Seq("centroid_id"))
       .select(col("q_id"), col("vec_id"))
     val cb = pqCodebook(embeddings, m, kCodes, dim)
     // codes feed BOTH the reconstruction norms and the candidate scoring —
     // persist or the encode pass (the corpus-scale work) runs twice
     // (cache lifecycle caller-owned, as everywhere in this engine)
     val codes = pqCodesWith(embeddings, cb, m, dim).persist()
-    val cbSq = cb.withColumn("c_sq_q",
-      expr("cast(round(aggregate(c_sub, 0D, (a, x) -> a + x * x) * 1000000) as bigint)"))
-      .select(col("sub"), col("code_id"), col("c_sq_q"))
-    val recon = codes.join(broadcast(cbSq), Seq("sub", "code_id"))
-      .groupBy(col("vec_id")).agg(sum(col("c_sq_q")).as("recon_sq_q"))
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-    val qNorm = queries.select(col("vec_id").as("q_id"),
-      expr("sqrt(aggregate(embedding, 0D, (a, x) -> a + cast(x as double) * cast(x as double)))")
-        .as("q_norm"))
-    val lut = pqSlices(queries, m, dim)
-      .select(col("vec_id").as("q_id"), col("sub"), col("v_sub").as("q_sub"))
-      .join(cb, Seq("sub"))
-      .withColumn("pd_q",
-        expr("cast(round(aggregate(zip_with(q_sub, c_sub, (x, y) -> x * y), " +
-          "0D, (a, v) -> a + v) * 1000000) as bigint)"))
-      .select(col("q_id"), col("sub"), col("code_id"), col("pd_q"))
     // candidate prune FIRST: the LUT join + ADC aggregate see only probed
-    // lists, never the corpus. Final selection via the bounded topKSelect
-    // aggregation (r17, guide §2.3) — same contract as pqTopKWith's (r16).
-    topKSelect(
-      cands.join(codes, Seq("vec_id"))
-        .join(broadcast(lut), Seq("q_id", "sub", "code_id"))
+    // lists, never the corpus
+    adcTopK(cands.join(codes, Seq("vec_id"))
+        .join(broadcast(pqLut(queries, cb, m, dim)), Seq("q_id", "sub", "code_id"))
         .groupBy(col("q_id"), col("vec_id"))
         .agg(sum(col("pd_q")).as("dot_q"))
-        .join(recon, Seq("vec_id"))
-        .join(broadcast(qNorm), Seq("q_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("score", round(
-          (col("dot_q") / lit(1000000.0d)) /
-            (col("q_norm") * sqrt(col("recon_sq_q") / lit(1000000.0d))), 6))
-        .select(col("q_id"), col("vec_id"), col("score")),
-      Seq("q_id"), k)
+        .join(pqReconSq(codes, cb), Seq("vec_id")),
+      queries, k)
   }
 
   /** Persist the composed IVF-PQ index: centroids + per-subspace codebook
@@ -2110,17 +2031,11 @@ object SimilarityOps {
     val cb = pqCodebook(embeddings, m, kCodes, dim)
     cb.write.mode("overwrite").parquet(s"$dir/codebook")
     val codes = pqCodesWith(embeddings, cb, m, dim).persist()
-    try {
-      val cbSq = cb.withColumn("c_sq_q",
-        expr("cast(round(aggregate(c_sub, 0D, (a, x) -> a + x * x) * 1000000) as bigint)"))
-        .select(col("sub"), col("code_id"), col("c_sq_q"))
-      val recon = codes.join(broadcast(cbSq), Seq("sub", "code_id"))
-        .groupBy(col("vec_id")).agg(sum(col("c_sq_q")).as("recon_sq_q"))
-      codes
+    try codes
         .join(ivfAssignIds(embeddings, centroids), Seq("vec_id"))
-        .join(recon, Seq("vec_id"))
+        .join(pqReconSq(codes, cb), Seq("vec_id"))
         .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/codes")
-    } finally codes.unpersist() // failure paths must not leak cached blocks (r7 advice)
+    finally codes.unpersist() // failure paths must not leak cached blocks (r7 advice)
   }
 
   /** Query batch against a persisted IVF-PQ index: probe + LUT + ADC
@@ -2130,78 +2045,75 @@ object SimilarityOps {
   def ivfPqTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                          queries: DataFrame, k: Int, nProbe: Int = 2,
                          m: Int = 4, dim: Int = 64): DataFrame = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
     val cb = spark.read.parquet(s"$dir/codebook")
-    val codeRows = spark.read.parquet(s"$dir/codes")
-    val wq = Window.partitionBy("q_id").orderBy(col("c_score").desc, col("centroid_id"))
-    val probes = queries
-      .join(broadcast(centroids))
-      .withColumn("c_score",
-        round(graft.functions.GraftFunctions.cosineSim(col("q_emb"), col("c_emb")), 6))
-      .withColumn("c_rank", row_number().over(wq))
-      .filter(col("c_rank") <= nProbe)
-      .select(col("q_id"), col("centroid_id"))
-    val qNorm = queries.select(col("q_id"),
-      expr("sqrt(aggregate(q_emb, 0D, (a, x) -> a + cast(x as double) * cast(x as double)))")
-        .as("q_norm"))
-    val lut = pqSlices(queries.select(col("q_id").as("vec_id"), col("q_emb").as("embedding")),
-        m, dim)
+    // the probed code-row stream is corpus-scale: the bounded ADC
+    // selection never sorts it
+    adcTopK(
+      nearestCentroids(queries, "q_id", "q_emb", spark.read.parquet(s"$dir/centroids"), nProbe)
+        .join(spark.read.parquet(s"$dir/codes"), Seq("centroid_id"))
+        .join(broadcast(pqLut(queries, cb, m, dim)), Seq("q_id", "sub", "code_id"))
+        .groupBy(col("q_id"), col("vec_id"))
+        .agg(sum(col("pd_q")).as("dot_q"), first(col("recon_sq_q")).as("recon_sq_q")),
+      queries, k)
+  }
+
+  /** ADC top-k against an arbitrary codebook (seeded or Lloyd-trained). */
+  def pqTopKWith(embeddings: DataFrame, cb: DataFrame, nQueries: Int,
+                 k: Int, m: Int = 4, dim: Int = 64): DataFrame = {
+    val codes = pqCodesWith(embeddings, cb, m, dim)
+    val queries = queriesOf(embeddings, nQueries)
+    // plain PQ scores the WHOLE corpus from codes (no coarse prune — that
+    // is ivfPqTopK's job), so its selection must be the bounded
+    // aggregation, not a per-q_id corpus-wide window (r16: same shape fix
+    // as the binary/int8 tiers)
+    adcTopK(codes.join(broadcast(pqLut(queries, cb, m, dim)), Seq("sub", "code_id"))
+        .groupBy(col("q_id"), col("vec_id"))
+        .agg(sum(col("pd_q")).as("dot_q"))
+        .join(pqReconSq(codes, cb), Seq("vec_id")),
+      queries, k)
+  }
+
+  /** Per-vector squared norm of the PQ reconstruction x̂, integer-exact:
+    * (vec_id, recon_sq_q) = Σ over the vector's codes of round(|c|²·1e6).
+    */
+  private def pqReconSq(codes: DataFrame, cb: DataFrame): DataFrame = {
+    val cbSq = cb.withColumn("c_sq_q",
+      expr("cast(round(aggregate(c_sub, 0D, (a, x) -> a + x * x) * 1000000) as bigint)"))
+      .select(col("sub"), col("code_id"), col("c_sq_q"))
+    codes.join(broadcast(cbSq), Seq("sub", "code_id"))
+      .groupBy(col("vec_id")).agg(sum(col("c_sq_q")).as("recon_sq_q"))
+  }
+
+  /** The per-query lookup table of m·kCodes quantized partial dots:
+    * (q_id, sub, code_id, pd_q) = round(q_sub · c_sub · 1e6) for every
+    * (q_id, q_emb) query slice and codeword.
+    */
+  private def pqLut(queries: DataFrame, cb: DataFrame, m: Int, dim: Int): DataFrame =
+    pqSlices(queries.select(col("q_id").as("vec_id"), col("q_emb").as("embedding")), m, dim)
       .select(col("vec_id").as("q_id"), col("sub"), col("v_sub").as("q_sub"))
       .join(cb, Seq("sub"))
       .withColumn("pd_q",
         expr("cast(round(aggregate(zip_with(q_sub, c_sub, (x, y) -> x * y), " +
           "0D, (a, v) -> a + v) * 1000000) as bigint)"))
       .select(col("q_id"), col("sub"), col("code_id"), col("pd_q"))
-    // bounded topKSelect selection (r17, guide §2.3) — same contract as
-    // the inline ivfPqTopK above; the probed code-row stream is
-    // corpus-scale, the old window sorted it map-side
+
+  /** The ADC score and selection of every PQ tier, over (q_id, vec_id,
+    * dot_q, recon_sq_q) rows: approx cosine = adc_dot / (|q|·|x̂|),
+    * round-6, self excluded, then the bounded [[topKSelect]] (score desc,
+    * vec_id) — the corpus-scale scored stream is never sorted.
+    */
+  private def adcTopK(dots: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val qNorm = queries.select(col("q_id"),
+      expr("sqrt(aggregate(q_emb, 0D, (a, x) -> a + cast(x as double) * cast(x as double)))")
+        .as("q_norm"))
     topKSelect(
-      probes.join(codeRows, Seq("centroid_id"))
-        .join(broadcast(lut), Seq("q_id", "sub", "code_id"))
-        .groupBy(col("q_id"), col("vec_id"))
-        .agg(sum(col("pd_q")).as("dot_q"), first(col("recon_sq_q")).as("recon_sq_q"))
-        .join(broadcast(qNorm), Seq("q_id"))
+      dots.join(broadcast(qNorm), Seq("q_id"))
         .filter(col("vec_id") =!= col("q_id"))
         .withColumn("score", round(
           (col("dot_q") / lit(1000000.0d)) /
             (col("q_norm") * sqrt(col("recon_sq_q") / lit(1000000.0d))), 6))
         .select(col("q_id"), col("vec_id"), col("score")),
       Seq("q_id"), k)
-  }
-
-  def pqTopKWith(embeddings: DataFrame, cb: DataFrame, nQueries: Int,
-                 k: Int, m: Int = 4, dim: Int = 64): DataFrame = {
-    val codes = pqCodesWith(embeddings, cb, m, dim)
-    val cbSq = cb.withColumn("c_sq_q",
-      expr("cast(round(aggregate(c_sub, 0D, (a, x) -> a + x * x) * 1000000) as bigint)"))
-      .select(col("sub"), col("code_id"), col("c_sq_q"))
-    val recon = codes.join(broadcast(cbSq), Seq("sub", "code_id"))
-      .groupBy(col("vec_id")).agg(sum(col("c_sq_q")).as("recon_sq_q"))
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-    val qNorm = queries.select(col("vec_id").as("q_id"),
-      expr("sqrt(aggregate(embedding, 0D, (a, x) -> a + cast(x as double) * cast(x as double)))")
-        .as("q_norm"))
-    val lut = pqSlices(queries, m, dim)
-      .select(col("vec_id").as("q_id"), col("sub"), col("v_sub").as("q_sub"))
-      .join(cb, Seq("sub"))
-      .withColumn("pd_q",
-        expr("cast(round(aggregate(zip_with(q_sub, c_sub, (x, y) -> x * y), " +
-          "0D, (a, v) -> a + v) * 1000000) as bigint)"))
-      .select(col("q_id"), col("sub"), col("code_id"), col("pd_q"))
-    // plain PQ scores the WHOLE corpus from codes (no coarse prune — that
-    // is ivfPqTopK's job), so its selection must be the bounded
-    // aggregation, not a per-q_id corpus-wide window (r16: same shape fix
-    // as the binary/int8 tiers)
-    val scored = codes.join(broadcast(lut), Seq("sub", "code_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("pd_q")).as("dot_q"))
-      .join(recon, Seq("vec_id"))
-      .join(broadcast(qNorm), Seq("q_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("score", round(
-        (col("dot_q") / lit(1000000.0d)) /
-          (col("q_norm") * sqrt(col("recon_sq_q") / lit(1000000.0d))), 6))
-    topKSelect(scored, Seq("q_id"), k)
   }
 
   /** Hybrid retrieval: reciprocal-rank fusion (RRF) of the lexical BM25
@@ -2714,19 +2626,8 @@ object SimilarityOps {
   def cosineTopKBinaryRescored(embeddings: DataFrame, nQueries: Int, k: Int,
                                shortlist: Int = 20): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must cover k = $k")
-    val sig = packSignBits(embeddings).persist()
-    val sl = hammingShortlist(sig, nQueries, shortlist)
-      .select(col("q_id"), col("vec_id"))
-    val q = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
-    sl.join(embeddings.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("score",
-        round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4))
-      .select(col("q_id"), col("vec_id"), col("score"),
-        row_number().over(w).as("rank"))
-      .filter(col("rank") <= k)
+    exactRescore(hammingShortlist(packSignBits(embeddings).persist(), nQueries, shortlist),
+      embeddings, queriesOf(embeddings, nQueries), k)
   }
 
   /** Recall-vs-shortlist-width sweep for the binary tier — the knob table
@@ -2745,12 +2646,7 @@ object SimilarityOps {
     val brute = cosineTopK(embeddings, nQueries, k)
       .select(col("q_id"), col("vec_id")).persist()
     widths.map { wd =>
-      val hit = sl.filter(col("srank") <= wd)
-        .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1))
-      brute.join(hit, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(round(sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / lit(k.toDouble), 2)
-          .as("recall"))
+      perQueryRecall(brute, sl.filter(col("srank") <= wd), k)
         .select(lit(wd).as("shortlist"), col("q_id"), col("recall"))
     }.reduce(_.unionByName(_))
   }
@@ -2775,17 +2671,16 @@ object SimilarityOps {
     val queries = embeddings.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("label").as("q_label"))
-    val wAll = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
-    val wPost = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
+    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id"))
     val post = corpus
       .join(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("score",
         round(graft.functions.GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 4))
-      .withColumn("grank", row_number().over(wAll))
+      .withColumn("grank", row_number().over(w))
       .filter(col("grank") <= shortlist)
       .filter(col("label") === col("q_label"))
-      .withColumn("prank", row_number().over(wPost))
+      .withColumn("prank", row_number().over(w))
       .filter(col("prank") <= k)
       .select(col("q_id"), col("vec_id"))
     val truth = cosineTopKFiltered(embeddings, nQueries, k)
@@ -2825,12 +2720,7 @@ object SimilarityOps {
     dims.map { m =>
       val trunc = embeddings.select(col("vec_id"),
         expr(s"slice(embedding, 1, $m)").as("embedding"))
-      val hit = cosineTopK(trunc, nQueries, k)
-        .select(col("q_id"), col("vec_id")).withColumn("hit", lit(1))
-      brute.join(hit, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(round(sum(coalesce(col("hit"), lit(0))).cast(DoubleType) / lit(k.toDouble), 2)
-          .as("recall"))
+      perQueryRecall(brute, cosineTopK(trunc, nQueries, k), k)
         .select(lit(m).as("dims"), col("q_id"), col("recall"))
     }.reduce(_.unionByName(_))
   }

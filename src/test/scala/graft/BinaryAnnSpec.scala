@@ -215,4 +215,20 @@ class BinaryAnnSpec extends SparkSpec {
     assert(rec.forall(_.getDouble(2) == 1.0),
       s"64-dim truncation of 64-dim vectors must agree with brute: ${rec.mkString(",")}")
   }
+
+  test("perQueryRecall: |brute ∩ approx| / k per query at 2 dp, and a query " +
+       "the approximate tier missed reads 0.0, not absent") {
+    // k = 3: q0's approx holds its whole brute top-3 (plus a stray), q1
+    // hits 2 of 3 (0.666… rounds to 0.67), q2 is absent from approx
+    val brute = Seq((0L, 10L), (0L, 11L), (0L, 12L), (1L, 20L), (1L, 21L), (1L, 22L),
+        (2L, 30L), (2L, 31L), (2L, 32L))
+      .toDF("q_id", "vec_id")
+    val approx = Seq((0L, 12L, 1), (0L, 10L, 2), (0L, 11L, 3), (0L, 99L, 4),
+        (1L, 22L, 1), (1L, 98L, 2), (1L, 20L, 3))
+      .toDF("q_id", "vec_id", "rank")
+    val got = SimilarityOps.perQueryRecall(brute, approx, 3)
+    assert(got.columns.toSeq == Seq("q_id", "recall"))
+    assert(got.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      Map(0L -> 1.0, 1L -> 0.67, 2L -> 0.0))
+  }
 }

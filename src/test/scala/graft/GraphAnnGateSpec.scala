@@ -73,6 +73,51 @@ class GraphAnnGateSpec extends SparkSpec {
       s"both boundary candidates surface the round-4 score: ${got.mkString(", ")}")
   }
 
+  test("multi-arm beam chain: each arm returns exactly what a one-arm call " +
+       "over its graph returns, and an arm with no edges returns its scored " +
+       "entry seeds") {
+    import spark.implicits._
+    // two direction clusters with distinguishing noise (distinct scores);
+    // the arms share corpus, queries and knobs and differ in the graph:
+    // the descent build, its intra-cluster half, and no edges at all
+    val emb = (0 until 40).map { i =>
+      val e = Array.fill(8)(0.0f)
+      e((i % 2) * 4) = 1.0f
+      e(1) = 0.01f * ((i * 7) % 11); e(3) = 0.01f * ((i * 5) % 13)
+      (i.toLong, e, i % 2)
+    }.toDF("vec_id", "embedding", "label")
+    val full = SimilarityOps.symmetrize(SimilarityOps.knnGraphDescent(emb, 8))
+      .localCheckpoint()
+    val arms = Seq("full" -> full,
+      "intra" -> full.filter(col("src") % 2 === col("dst") % 2),
+      "none" -> Seq.empty[(Long, Long)].toDF("src", "dst"))
+    val (nQueries, k, beam, rounds, seeds) = (6, 5, 4, 2, 4)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double, Int)] =
+      df.collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
+        r.getAs[Double]("score"), r.getAs[Int]("rank"))).toSet
+    val chained = SimilarityOps.graphAnnSearchArms(emb, arms, nQueries, k, beam,
+      rounds, seeds).localCheckpoint()
+    assert(chained.select("arm").distinct().as[String].collect().toSet == arms.map(_._1).toSet)
+    for ((arm, g) <- arms) {
+      val alone = rows(SimilarityOps.graphAnnTopKOver(emb, g, nQueries, k, beam,
+        rounds, seeds))
+      assert(rows(chained.filter(col("arm") === arm).drop("arm")) == alone,
+        s"arm $arm differs from its one-arm call")
+    }
+    // no edges: the beam never expands, so each query gets exactly the
+    // entry seeds other than itself (k covers them all), ranked by score
+    val seedsOnly = rows(chained.filter(col("arm") === "none").drop("arm"))
+    val expected = for (q <- 0L until nQueries; v <- 0L until seeds if v != q) yield (q, v)
+    assert(seedsOnly.map(r => (r._1, r._2)) == expected.toSet,
+      s"edgeless arm returns only its entry seeds: $seedsOnly")
+    seedsOnly.groupBy(_._1).values.foreach { q =>
+      val ranked = q.toSeq.sortBy(_._4)
+      assert(ranked.map(_._4) == (1 to ranked.size) &&
+        ranked.map(_._3) == ranked.map(_._3).sorted(Ordering[Double].reverse),
+        s"edgeless arm ranks its seeds by score: $ranked")
+    }
+  }
+
   test("graphTopKRescored: the 20-wide shortlist + exact rescore never " +
        "recalls worse than the plain 5-beam graph tier, and its scores " +
        "are exact round-4 cosines of the brute frame") {
